@@ -1237,21 +1237,11 @@ object SparkEntry {
 
   /** PageRank (10 rounds, d=0.85, integer picorank fixed point) over the
     * symmetrized customer–supplier trade graph from orders⋈lineitem.
-    *
-    * Parameter choice (r10 + r11, closing the q84-floor verdict items):
-    * `copartition = false, checkpointEvery = 1` is the measured-fastest
-    * bench shape — PageRankProbe's interleaved same-JVM sweeps put the
-    * library defaults at 6.03 s median vs 5.03 (ckpt2) / 4.90 (ckpt1)
-    * without the setup repartitions, the n-gated broadcast hint
-    * (default-on in [[graft.ops.Graph.pageRank]]) worth another ~1.3 s
-    * under that cadence, and the r11 sweep landing AQE-off-while-pinned
-    * (now pageRank's default once the hint fires) at 4.32 s (ckpt1) /
-    * 4.51 (ckpt2) vs 5.46 with AQE re-planning each round. The 16k-node
-    * trade graph sits squarely in the broadcast regime where the
-    * co-partition setup exchanges are pure overhead; a caller ranking a
-    * past-the-broadcast-gate graph keeps the library defaults, where
-    * co-partitioning saves a full edge re-shuffle per round and AQE
-    * keeps its scale duties. */
+    * Under pageRank's 2M-edge gate (sf0.01: 97k edges, sf0.1: 1.17M) the
+    * rounds run on the driver; the loop-shape arguments below shape only
+    * the distributed regime past it — an unkeyed edge checkpoint, a
+    * checkpoint every round, and, while the rank side still broadcasts,
+    * the dst-keyed loop with no exchange between round checkpoints. */
   private def q84(s: SparkSession, dir: String): DataFrame = {
     val pairs = t(s, dir, "orders")
       .join(t(s, dir, "lineitem"),
@@ -1261,22 +1251,13 @@ object SparkEntry {
       .distinct()
     // symmetrize with ONE explode, not union(pairs, pairs.reversed): the
     // union form evaluates the orders⋈lineitem+distinct subtree TWICE
-    // (the two legs' aliases differ, so no exchange reuse) — measured ~1 s
-    // of q84's setup at sf0.1
+    // (the two legs' aliases differ, so no exchange reuse)
     graft.ops.Graph.pageRank(
       pairs.select(explode(array(
           struct(col("a").as("src"), col("b").as("dst")),
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      copartition = false, checkpointEvery = 1,
-      // r17: dst-keyed broadcast-regime loop — zero exchanges between
-      // round checkpoints (GraphSpec pins the plan), AQE scoped off for
-      // the loop at any width (nothing left to coalesce). PageRankProbe
-      // same-JVM interleaved sweeps: 4.79 vs 5.82 s median at sp=32
-      // (warm tail 4.67 vs 5.82), 4.91 vs 5.08 at sp=8 — the r16
-      // shipping shape loses at both widths; copartition=true re-swept
-      // at 8.94–9.22 s (verdict item 1's re-measure, negative again).
-      dstPartitionLoop = true)
+      copartition = false, checkpointEvery = 1, dstPartitionLoop = true)
   }
 
   /** Compaction planning: documents as stand-in file metadata (size =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -2113,19 +2113,25 @@ object Dedup {
     * every node takes the min of its own, its neighbors', and its label's
     * label (shortcutting) — the jump makes convergence O(log n) rounds
     * even for a worst-case duplicate CHAIN (plain propagation needs
-    * O(diameter) rounds, which a long chain would exhaust). Each round is
-    * two joins + one aggregate, all on node keys; `localCheckpoint`
-    * truncates the lineage so the plan stays flat across iterations. The
-    * driver loop carries only a scalar per round (the change count), never
-    * data. */
+    * O(diameter) rounds, which a long chain would exhaust). Labels only
+    * fall, so an unchanged label sum marks the fixpoint; exhausting
+    * `maxIter` before it fails loudly.
+    *
+    * Two regimes, one gate (`smallGraphMaxRows`, 2M by default):
+    *   - at most that many symmetrized edge rows: the rounds run on the
+    *     driver over primitive arrays and the labels re-enter the plan as
+    *     a LocalRelation;
+    *   - past it: each round is two joins + one aggregate on node keys,
+    *     `localCheckpoint` keeping the plan flat, and the driver loop
+    *     carries only the label sum. The same bound, applied to the node
+    *     count, decides the BROADCAST hint on the label lookups.
+    * A null id keeps the input on the distributed path. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-                  broadcastLabelsMaxNodes: Long = 2000000L): DataFrame = {
+                  smallGraphMaxRows: Long = 2000000L): DataFrame = {
     // symmetrize with ONE explode, not union(pairs, pairs.reversed): the
     // union form evaluates the whole upstream pair pipeline TWICE (the
-    // two legs' aliases differ, so no exchange reuse — the same finding
-    // as q84's edge symmetrization; for q39 the upstream is the full
-    // LSH band+verify pipeline, so the duplicate evaluation dominated
-    // the setup). r17: measured on q39 — see OPTIMIZATION_r17.md.
+    // two legs' aliases differ, so no exchange reuse). The lazy
+    // checkpoint is materialized by the size probe's job.
     val edges = pairs
       .select(explode(array(
         struct(col("id_a").cast("long").as("src"),
@@ -2133,33 +2139,77 @@ object Dedup {
         struct(col("id_b").cast("long").as("src"),
           col("id_a").cast("long").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
+    DriverLocal.longColumns(edges, smallGraphMaxRows) match {
+      case Some(Array(src, dst)) =>
+        Graph.dropCheckpoint(edges)
+        localClusters(pairs.sparkSession, src, dst, maxIter)
+      case _ => distributedClusters(edges, maxIter, smallGraphMaxRows)
+    }
+  }
+
+  /** The driver regime: the distributed rounds over dense node indices.
+    * Indices follow ascending ids, so the min index is the min id. */
+  private def localClusters(sess: SparkSession, src: Array[Long],
+                            dst: Array[Long], maxIter: Int): DataFrame = {
+    val nodes = DriverLocal.sortedDistinct(src.clone())
+    val n = nodes.length
+    val s = src.map(java.util.Arrays.binarySearch(nodes, _))
+    val t = dst.map(java.util.Arrays.binarySearch(nodes, _))
+    var label = Array.range(0, n)
+    var labelSum: Option[Long] = None
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      // neighbor min against the previous round's labels
+      val propagated = label.clone()
+      var e = 0
+      while (e < s.length) {
+        if (label(t(e)) < propagated(s(e))) propagated(s(e)) = label(t(e))
+        e += 1
+      }
+      // pointer jump: follow my label to ITS label
+      val updated = propagated.map(l => math.min(l, propagated(l)))
+      val sum = updated.foldLeft(0L)((acc, l) => Math.addExact(acc, nodes(l)))
+      converged = labelSum.contains(sum)
+      labelSum = Some(sum)
+      label = updated
+      i += 1
+    }
+    requireFixpoint(converged, maxIter)
+    DriverLocal.longFrame(sess, Seq("id", "cluster"), nodes, label.map(nodes(_)))
+  }
+
+  /** The distributed regime over the materialized edge checkpoint. */
+  private def distributedClusters(edges: DataFrame, maxIter: Int,
+                                  broadcastMaxNodes: Long): DataFrame = {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint()
-    // the pageRank recipe (r10) transferred to the sibling iterative op:
-    // the node count is MEASURED off the eager setup checkpoint (cheap —
-    // and only docs WITH near-dup pairs are nodes here, a small set even
-    // on corpora where most docs are unique), so in the broadcast regime
-    // every per-round lookup side gets the explicit hint instead of
-    // waiting on AQE's per-stage runtime stats; past the gate the hint is
-    // withheld and the exchange path serves (a corpus-sized label frame
-    // must never collect to the driver).
-    val hintLabels = labels.count() <= broadcastLabelsMaxNodes
-    // past the broadcast gate, every round's neighbor-min join would
+    // the node count, measured off the eager label checkpoint, decides
+    // the hint: in the broadcast regime every per-round lookup side gets
+    // it explicitly instead of waiting on AQE's per-stage runtime stats;
+    // past the gate it is withheld and the exchange path serves (a
+    // corpus-sized label frame must never collect to the driver).
+    val hintLabels = labels.count() <= broadcastMaxNodes
+    // past the node gate, every round's neighbor-min join would
     // re-shuffle the EDGE table — the corpus-mass side — by dst while
-    // only the n-row label side actually changes per round. Pin edges
-    // to hashpartitioning(dst) ONCE (r17 — the pageRank copartition
-    // recipe, including its AQE-scoped checkpoint: a plain
-    // localCheckpoint under AQE captures UnknownPartitioning and the
-    // pin silently dies); each round then shuffles labels only.
-    // In-gate (the bench regime) the broadcast join needs no edge
-    // distribution, so the extra setup exchange is skipped entirely.
+    // only the n-row label side changes per round. Pin edges to
+    // hashpartitioning(dst) ONCE (through checkpointKeepingPartitioning:
+    // a plain localCheckpoint under AQE captures UnknownPartitioning and
+    // the pin silently dies), then free the unkeyed copy so the loop
+    // holds one edge table; each round then shuffles labels only.
+    // In the broadcast regime the join needs no edge distribution, so
+    // the extra setup exchange is skipped entirely.
     val eJoin =
       if (hintLabels) edges
-      else graft.ops.Graph.checkpointKeepingPartitioning(
-        edges.repartition(
-          edges.sparkSession.sessionState.conf.numShufflePartitions,
-          col("dst")))
+      else {
+        val keyed = Graph.checkpointKeepingPartitioning(
+          edges.repartition(
+            edges.sparkSession.sessionState.conf.numShufflePartitions,
+            col("dst")))
+        Graph.dropCheckpoint(edges)
+        keyed
+      }
     def lookup(df: DataFrame): DataFrame =
       if (hintLabels) df.hint("BROADCAST") else df
     var labelSum: Option[Long] = None
@@ -2170,7 +2220,7 @@ object Dedup {
         .join(lookup(labels.select(col("id").as("dst"),
           col("label").as("nlabel"))), "dst")
         .groupBy(col("src").as("id")).agg(min("nlabel").as("nmin"))
-      // LAZY checkpoint (r17): the pointer-jump join below consumes
+      // LAZY checkpoint: the pointer-jump join below consumes
       // `propagated` on BOTH sides, and Spark plans the two references
       // as independent subtrees — without a cut, the neighbor-min join +
       // aggregate ran TWICE per round. The lazy checkpoint materializes
@@ -2203,13 +2253,16 @@ object Dedup {
       labels = updated
       i += 1
     }
-    // partially-propagated labels would make keep-one-per-cluster dedup
-    // silently drop the wrong docs — fail loudly instead
+    requireFixpoint(converged, maxIter)
+    labels.select(col("id"), col("label").as("cluster"))
+  }
+
+  /** Partially-propagated labels would make keep-one-per-cluster dedup
+    * silently drop the wrong docs — fail loudly instead. */
+  private def requireFixpoint(converged: Boolean, maxIter: Int): Unit =
     require(converged,
       s"dupClusters did not reach the label fixpoint in $maxIter rounds; " +
         "raise maxIter (pointer jumping needs ~log2(cluster diameter) + 2)")
-    labels.select(col("id"), col("label").as("cluster"))
-  }
 
   /** Hex char → 0..15 (portable: ascii arithmetic, no conv()). */
   private def hexVal(c: Column): Column =

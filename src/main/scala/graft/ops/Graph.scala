@@ -1,37 +1,40 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Distributed PageRank over an edge list — the iterative-join workload
-  * class (label propagation's spectral sibling; dupClusters covers the
-  * other one). North-star extension in the SURVEY §8 sense.
+/** PageRank over an edge list — the iterative-join workload class (label
+  * propagation's spectral sibling; [[Dedup.dupClusters]] covers the
+  * other one).
   *
-  * Scale shape: each iteration is ONE join of the rank frame against the
-  * edge list on the source key plus ONE aggregate on the destination key
-  * (the per-node degree rides through the same aggregate as a max over a
-  * union'd zero-contribution row per node, so no second join reattaches
-  * it) — both hash-partitioned, no windows, no driver data. `localCheckpoint`
-  * truncates lineage per round so the plan never grows with the iteration
-  * count (same discipline as [[Dedup.dupClusters]]). The driver loop
-  * carries nothing but the iteration counter. Degrees are carried INSIDE
-  * the rank frame (node, deg, rank), so the static degree table is not
-  * re-joined every round.
+  * Two regimes, one gate (`smallGraphMaxRows`, 2M by default):
+  *   - at most that many edge rows and nodes: the rounds run on the
+  *     driver over primitive arrays and the ranks re-enter the plan as a
+  *     LocalRelation — no per-round job, no session conf touched;
+  *   - past it: the distributed loop, one join of the rank frame against
+  *     the edge list plus one aggregate on the destination key per round,
+  *     `localCheckpoint` truncating the lineage so the plan never grows
+  *     with the iteration count. The same bound, applied to the node
+  *     count, decides whether the rank side carries a BROADCAST hint.
+  * Either regime reads the edge pipeline once: a lazy checkpoint that the
+  * size probe's job materializes.
   *
   * Fixed-point arithmetic (the oracle contract): ranks live as integer
   * "picorank" units (initial mass = 10¹² DIV n per node) and every
-  * division is a floor DIV — identical in Spark and DuckDB, so after any
-  * number of iterations the values match bit-for-bit. A float PageRank
-  * accumulates summation-order error that a 10-round iteration amplifies
-  * past any fixed rounding; deterministic mass leak is the price of an
-  * exact cross-engine gate. Two leak sources, both deterministic: floor
-  * division drops ≤ deg units per node per round, and — this is the
-  * PageRank-WITHOUT-dangling-redistribution variant — a sink node
-  * (deg = 0) simply drops its whole rank mass each round rather than
-  * redistributing it uniformly. The oracle twin implements the identical
-  * semantics, so results stay exact either way; callers needing the
-  * mass-conserving textbook variant should add the dangling term on both
-  * sides (or symmetrize the graph, as q84 does, so sinks cannot exist).
+  * division is a floor DIV — identical in Spark, on the driver and in
+  * DuckDB, so after any number of iterations the values match
+  * bit-for-bit. A float PageRank accumulates summation-order error that a
+  * 10-round iteration amplifies past any fixed rounding; deterministic
+  * mass leak is the price of an exact cross-engine gate. Two leak sources,
+  * both deterministic: floor division drops ≤ deg units per node per
+  * round, and — this is the PageRank-WITHOUT-dangling-redistribution
+  * variant — a sink node (deg = 0) simply drops its whole rank mass each
+  * round rather than redistributing it uniformly. The oracle twin
+  * implements the identical semantics, so results stay exact either way;
+  * callers needing the mass-conserving textbook variant should add the
+  * dangling term on both sides (or symmetrize the graph, as q84 does, so
+  * sinks cannot exist).
   *
   * Update rule per round, damping d = `dampingPct`/100:
   *   contrib(v) = Σ_{u→v} rank(u) DIV deg(u)
@@ -41,76 +44,111 @@ object Graph {
 
   val Unit: Long = 1000000000000L // 10^12 picorank = total initial mass
 
-  /** Session shuffle-partition bound under which the in-gate (broadcast-
-    * pinned) loop runs with AQE scoped off — above it, AQE's coalescing
-    * of the per-round aggregate exchange outweighs its re-planning cost
-    * (both sides measured by PageRankProbe; see the scope note in
-    * [[pageRank]]). */
+  /** Session shuffle-partition bound under which the broadcast-pinned
+    * distributed loop runs with AQE scoped off — above it, AQE's
+    * coalescing of the per-round aggregate exchange outweighs its
+    * re-planning cost (see the scope note in [[pageRank]]). */
   val AqeOffMaxLoopPartitions: Int = 16
 
   /** PageRank over directed `edges` (src, dst). Nodes = every endpoint.
-    * Returns (node, rank) with rank in picorank units, sorted by node. */
+    * Returns (node, rank) with rank in picorank units, in node order.
+    * Every parameter after `dampingPct` shapes the distributed regime
+    * only. The driver regime needs the node count under the gate too
+    * (nodes can reach twice the edge rows); an edge with a null endpoint
+    * keeps the input on the distributed path. */
   def pageRank(edges: DataFrame, iterations: Int = 10,
                dampingPct: Int = 85, checkpoint: Boolean = true,
                checkpointEvery: Int = 5, copartition: Boolean = true,
-               eagerCheckpoint: Boolean = true,
-               broadcastRanksMaxNodes: Long = 2000000L,
+               smallGraphMaxRows: Long = 2000000L,
                adaptiveWhilePinned: Boolean = false,
                dstPartitionLoop: Boolean = false): DataFrame = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .localCheckpoint(eager = false)
+    val small = DriverLocal.longColumns(e0, smallGraphMaxRows).flatMap {
+      case Array(src, dst) =>
+        val nodes = DriverLocal.sortedDistinct(Array.concat(src, dst))
+        if (nodes.length <= smallGraphMaxRows) Some((nodes, src, dst))
+        else None
+    }
+    small match {
+      case Some((nodes, src, dst)) =>
+        dropCheckpoint(e0)
+        localPageRank(edges.sparkSession, nodes, src, dst, iterations,
+          dampingPct)
+      case None =>
+        distributedPageRank(e0, iterations, dampingPct, checkpoint,
+          checkpointEvery, copartition, smallGraphMaxRows,
+          adaptiveWhilePinned, dstPartitionLoop)
+    }
+  }
+
+  /** The driver regime: the distributed update rule over dense indices
+    * into the ascending `nodes`, with the overflow checks ANSI Spark
+    * applies to the same Long expressions. */
+  private def localPageRank(sess: SparkSession, nodes: Array[Long],
+                            src: Array[Long], dst: Array[Long],
+                            iterations: Int, dampingPct: Int): DataFrame = {
+    val n = nodes.length
+    require(n > 0, "pageRank needs a non-empty graph")
+    val s = src.map(java.util.Arrays.binarySearch(nodes, _))
+    val t = dst.map(java.util.Arrays.binarySearch(nodes, _))
+    val deg = new Array[Long](n)
+    s.foreach(u => deg(u) += 1)
+    val init = Unit / n
+    val base = ((100L - dampingPct) * init) / 100L
+    val rank = Array.fill(n)(init)
+    val c = new Array[Long](n)
+    val contrib = new Array[Long](n)
+    for (_ <- 1 to iterations) {
+      var u = 0
+      while (u < n) { c(u) = if (deg(u) > 0) rank(u) / deg(u) else 0L; u += 1 }
+      java.util.Arrays.fill(contrib, 0L)
+      var i = 0
+      while (i < s.length) {
+        contrib(t(i)) = Math.addExact(contrib(t(i)), c(s(i)))
+        i += 1
+      }
+      var v = 0
+      while (v < n) {
+        rank(v) = Math.addExact(base,
+          Math.multiplyExact(dampingPct.toLong, contrib(v)) / 100L)
+        v += 1
+      }
+    }
+    DriverLocal.longFrame(sess, Seq("node", "rank"), nodes, rank)
+  }
+
+  /** The distributed regime over the materialized edge checkpoint `e0`. */
+  private def distributedPageRank(e0: DataFrame, iterations: Int,
+                                  dampingPct: Int, checkpoint: Boolean,
+                                  checkpointEvery: Int, copartition: Boolean,
+                                  broadcastMaxNodes: Long,
+                                  adaptiveWhilePinned: Boolean,
+                                  dstPartitionLoop: Boolean): DataFrame = {
+    val sess = e0.sparkSession
+    val parts = sess.sessionState.conf.numShufflePartitions
     // pin BOTH static frames to one hash partitioning up front — edges on
     // src, nodes on node — and every later checkpoint preserves it
     // (LogicalRDD carries outputPartitioning). Each iteration's rank⋈edges
-    // join (node = src) is then co-partitioned, so at scale (where AQE
-    // can't just broadcast the rank frame) EnsureRequirements re-shuffles
-    // NEITHER side per round — the only per-round exchange is the contrib
+    // join (node = src) is then co-partitioned, so where AQE can't just
+    // broadcast the rank frame EnsureRequirements re-shuffles NEITHER
+    // side per round — the only per-round exchange is the contrib
     // aggregate's, genuinely required (contributions regroup by
-    // destination). INSIDE the broadcast regime, though, the setup
-    // repartitions + their checkpoints are pure overhead: the r10
-    // PageRankProbe sweep (interleaved same-JVM legs at the bench shape)
-    // measured copartition = false consistently faster at sf0.1 (5.93 vs
-    // 6.76 s median, every rep), superseding the r6 "equal ±1 s" note.
-    // The default stays TRUE — the scale regime this parameter exists for
-    // is exactly the one where it saves a full edge re-shuffle per round —
-    // and small-graph callers (q84) pass false with the measurement cited.
-    // r17 CORRECTION to the r6 claim above: under AQE the checkpoint
-    // does NOT carry the hash partitioning — localCheckpoint captures
-    // `executedPlan.outputPartitioning`, and with AQE enabled that plan
-    // is an AdaptiveSparkPlanExec, which never overrides
-    // outputPartitioning (UnknownPartitioning) — so every "pinned"
-    // checkpoint silently degraded to unknown and the loop re-shuffled
-    // anyway (the r10/r11 probes that validated the pin all ran inside
-    // the AQE-off scope, where the capture works). Partitioned setup
-    // checkpoints therefore materialize under a SCOPED AQE-off
-    // ([[checkpointKeepingPartitioning]]) — the one-time setup jobs are
-    // plain shuffles AQE had nothing to improve, and the captured
-    // hashpartitioning is what every round's EnsureRequirements needs.
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    // dstPartitionLoop callers key the ONE edge checkpoint by dst up
-    // front (r17) instead of re-checkpointing a second copy after the
-    // broadcast gate resolves — one materialization job saved per call.
-    // If the gate then FAILS (rare for callers that request the flag),
-    // the legacy loop treats a dst-keyed e exactly like the
-    // copartition=false unpartitioned e it would have had: neither
-    // satisfies the join's src-keyed requirement, so behavior and cost
-    // are unchanged in that fallback.
-    // dst keying takes PRECEDENCE over copartition's src keying when
-    // both are requested: dstPartitionLoop declares broadcast-regime
-    // intent, and a caller at past-the-gate scale should not pass it
-    // (the scaladoc says so) — if the gate still fails, the legacy loop
-    // runs with a dst-keyed e, which costs the same per-round join
-    // shuffle as the copartition=false shape.
+    // destination). Under AQE a plain localCheckpoint captures
+    // UnknownPartitioning, so the keyed copies materialize through
+    // [[checkpointKeepingPartitioning]]. dstPartitionLoop callers key the
+    // edges by dst instead (the zero-exchange loop below); if the
+    // broadcast gate then fails, a dst-keyed e costs the loop exactly
+    // what the unkeyed copartition = false e does.
     val e =
       if (dstPartitionLoop)
         checkpointKeepingPartitioning(e0.repartition(parts, col("dst")))
       else if (copartition)
         checkpointKeepingPartitioning(e0.repartition(parts, col("src")))
-      else e0.localCheckpoint()
+      else e0
+    if (e ne e0) dropCheckpoint(e0)
     // nodes + out-degrees in ONE shuffle: explode each edge into its two
-    // endpoints with a source marker and sum the markers per node — the
-    // former distinct ∪ degree-agg ∪ left-join formulation paid three
-    // shuffles and a join for the same frame (measured ~1 s of setup at
-    // sf0.1; at scale it is two full edge shuffles saved)
+    // endpoints with a source marker and sum the markers per node
     val nd0 = e.select(explode(array(
         struct(col("src").as("node"), lit(1L).as("d")),
         struct(col("dst").as("node"), lit(0L).as("d")))).as("x"))
@@ -123,106 +161,70 @@ object Graph {
     val n = nodesDeg.count()
     require(n > 0, "pageRank needs a non-empty graph")
     // n is MEASURED before the loop, so the broadcast decision is
-    // scale-true: a rank frame of ≤ `broadcastRanksMaxNodes` rows (24 B
-    // packed each — ≤ ~48 MB at the 2M default) gets an explicit
-    // BROADCAST hint on the join's rank side, pinning the plan AQE would
-    // discover per round anyway without waiting on per-stage runtime
-    // stats; past the bound the hint is withheld and the co-partitioned
-    // exchange path serves (a billion-node graph must never collect its
-    // rank frame to the driver).
-    val hintBroadcastRanks = n <= broadcastRanksMaxNodes
-    // r17 (verdict item 1 — "no per-iteration exchange survives"): with
-    // the rank side BROADCAST, the per-round contrib aggregate is the
-    // loop's ONLY exchange, and it exists because the broadcast join's
-    // output inherits the STREAMED side's partitioning — edges. Keying
-    // the edge checkpoint by dst (the aggregate's key, alias-tracked
-    // through `dst AS node`) makes the aggregate exchange-free, and the
-    // rank' reattach becomes a co-partitioned SHUFFLE_HASH left join
-    // against the by-node nodesDeg checkpoint (same coalesce(contrib,0)
-    // arithmetic as the oracle's LEFT JOIN — the pre-r6 formulation,
-    // now without its exchanges): ZERO exchanges between checkpoints.
-    // One extra setup shuffle of the edge list pays for `iterations`
-    // removed aggregate exchanges + their AQE re-plans. Broadcast regime
-    // ONLY: past the gate the join needs e keyed by src (or both sides
-    // shuffled per round), so the flag is ignored there — the
-    // copartition-by-src path serves, where the contrib exchange is
-    // genuinely required (contributions regroup by destination).
-    // the setup above already keyed e by dst and nodesDeg by node when
-    // dstPartitionLoop was requested — the loop reads them directly
+    // scale-true: a rank frame of ≤ `broadcastMaxNodes` rows (24 B packed
+    // each — ≤ ~48 MB at the 2M default) gets an explicit BROADCAST hint
+    // on the join's rank side, pinning the plan AQE would discover per
+    // round anyway; past the bound the hint is withheld and the
+    // co-partitioned exchange path serves.
+    val hintBroadcastRanks = n <= broadcastMaxNodes
+    // with the rank side BROADCAST, the per-round contrib aggregate is
+    // the loop's only exchange, and it exists because the broadcast
+    // join's output inherits the STREAMED side's partitioning — edges.
+    // Keying the edge checkpoint by dst (the aggregate's key, alias-
+    // tracked through `dst AS node`) makes the aggregate exchange-free,
+    // and the rank' reattach becomes a co-partitioned SHUFFLE_HASH left
+    // join against the by-node nodesDeg checkpoint: zero exchanges
+    // between checkpoints. Broadcast regime only: past the node gate the
+    // join needs e keyed by src, so the flag is ignored there.
     val dstLoop = dstPartitionLoop && hintBroadcastRanks
-    val eLoop = e
-    val ndLoop = nodesDeg
     // With the broadcast hint pinned AND a small shuffle-partition count,
     // AQE has nothing left to do per round — the join is pre-decided and
     // there are no partitions worth coalescing — so its per-stage re-plan
-    // loop is pure driver overhead on exactly the floor the r10 jstack
-    // profile attributed (driver re-planning + janino, not tasks). The
-    // r11 PageRankProbe sweeps (interleaved same-JVM legs, 5 reps)
-    // measured BOTH gate sides: at the bench shape (sp=4) AQE off wins
-    // 4.51 vs 5.46 s (ckpt2) / 4.32 vs ~4.9 (ckpt1), while at sp=32 AQE
-    // ON wins 4.67 vs 4.89 / 4.86 vs 5.22 — there its aggregate-exchange
-    // coalescing pays for the re-planning. So the loop's materializations
-    // run with AQE DISABLED only when the plan is pinned and the session
-    // parallelism is at or under [[AqeOffMaxLoopPartitions]], scoped to
-    // this call and RESTORED after (the returned frame and the caller's
-    // session see the original setting; GraphSpec pins both — and the
-    // loop's `i == iterations` checkpoint clause guarantees EVERY round
-    // materializes inside the scope at any checkpointEvery, so no round's
-    // plan escapes to post-restore execution; the conf is session-global
-    // while the loop runs, the documented price of the scope). Past either
+    // loop is pure driver overhead. The loop's materializations then run
+    // with AQE DISABLED, scoped to this call and RESTORED after (the
+    // returned frame and the caller's session see the original setting;
+    // the loop's `i == iterations` checkpoint clause makes EVERY round
+    // materialize inside the scope at any checkpointEvery). Past either
     // gate AQE keeps its duties (skew splits, coalescing) — never touched.
+    // dstLoop widens the scope past the partition gate: its loop has no
+    // exchange between checkpoints, so there is nothing to coalesce.
     val aqeKey = "spark.sql.adaptive.enabled"
-    val sess = edges.sparkSession
-    // dstLoop widens the scope past the partition gate: its loop has NO
-    // exchange at all between checkpoints, so AQE's per-stage re-plan
-    // has literally nothing to coalesce at any width (the sp=32 gate
-    // existed because the union+agg shape's exchange benefits from
-    // coalescing there).
     val scopeAqeOff = hintBroadcastRanks && !adaptiveWhilePinned &&
-      (parts <= AqeOffMaxLoopPartitions || dstLoop) &&
-      checkpoint && eagerCheckpoint
+      (parts <= AqeOffMaxLoopPartitions || dstLoop) && checkpoint
     // The scope mutates a SESSION-GLOBAL conf: concurrent queries on the
-    // same session lose AQE while the loop runs (documented, accepted for
-    // the single-driver bench context this gate targets), and WITHOUT
+    // same session lose AQE while the loop runs, and without
     // serialization two concurrent pageRank calls could interleave their
-    // save/restore and leave AQE off permanently (r11 advice). The lock
-    // closes the race half; it serializes only scoped (small-graph)
-    // calls — past the gate nothing is touched and nothing locks.
+    // save/restore and leave AQE off permanently — the lock closes that
+    // race. Past the gates nothing is touched and nothing locks.
     def runLoop(): DataFrame = {
     val init = Unit / n
     val base = ((100L - dampingPct) * init) / 100L
     var ranks = nodesDeg.withColumn("rank", lit(init))
     for (i <- 1 to iterations) {
-      // ONE join + ONE aggregate per round: the per-edge contributions
-      // union a zero row per node carrying that node's degree, and a
-      // single groupBy(node) yields (Σ contrib, deg) together — folding
-      // the former "left-join contrib back onto nodesDeg" stage into the
-      // aggregate that already shuffles on node (one fewer join per
-      // round; same floor-DIV arithmetic, so the oracle is unchanged)
-      // per-node contribution rank DIV deg hoisted ABOVE the edge join
-      // (r17, guide §2.3): it is constant across a node's out-edges, so
-      // computing it on the ≤n-row rank side instead of per joined edge
-      // row saves |E|−n divisions per round and narrows the join input
+      // per-node contribution rank DIV deg computed on the ≤n-row rank
+      // side, not per joined edge row
       val rankSide = {
         val live = ranks.filter(col("deg") > 0)
           .select(col("node"), expr("rank div deg").as("c"))
         if (hintBroadcastRanks) live.hint("BROADCAST") else live
       }
       if (dstLoop) {
-        // zero-exchange round (see the dstLoop note above): the contrib
-        // aggregate rides eLoop's dst partitioning through the broadcast
-        // join, and the reattach is a co-partitioned hash join against
-        // the by-node degree checkpoint — LEFT join + coalesce is the
-        // oracle's own formulation, so the arithmetic is unchanged
+        // zero-exchange round: the contrib aggregate rides e's dst
+        // partitioning through the broadcast join, and the reattach is a
+        // co-partitioned hash join against the by-node degree checkpoint
+        // — LEFT join + coalesce is the oracle's own formulation
         val contrib = rankSide
-          .join(eLoop, rankSide("node") === eLoop("src"))
+          .join(e, rankSide("node") === e("src"))
           .select(col("dst").as("node"), col("c"))
           .groupBy("node").agg(sum("c").as("contrib"))
-        ranks = ndLoop.join(contrib.hint("SHUFFLE_HASH"), Seq("node"), "left")
+        ranks = nodesDeg.join(contrib.hint("SHUFFLE_HASH"), Seq("node"), "left")
           .select(col("node"), col("deg"),
             expr(s"${base}L + (${dampingPct}L * coalesce(contrib, 0L)) div 100")
               .as("rank"))
       } else {
+      // ONE join + ONE aggregate per round: the per-edge contributions
+      // union a zero row per node carrying that node's degree, and a
+      // single groupBy(node) yields (Σ contrib, deg) together
       val edgeContrib = rankSide
         .join(e, rankSide("node") === e("src"))
         .select(col("dst").as("node"), col("c"),
@@ -235,37 +237,12 @@ object Graph {
         .select(col("node"), col("deg"),
           expr(s"${base}L + (${dampingPct}L * contrib) div 100").as("rank"))
       }
-      // truncate lineage every few rounds — each eager localCheckpoint is
-      // a full materialization job, so per-round checkpointing pays ~1
-      // job of fixed overhead per iteration while a 5-round linear plan
-      // is still cheap to optimize. r6 sweep at sf0.1 / 10 rounds (2 runs
-      // × 8 variants, one warm JVM): every-5 eager was the consistent
-      // best (5.8–6.9 s); every-1, every-3, every-10, and lazy
-      // checkpoints all landed 6.6–7.8 s; disabling AQE tripled the time
-      // (no broadcast conversion → 32-partition SMJ per round). The
-      // union+agg round shape above cut ~1 s vs the former join-back
-      // formulation. `checkpoint = false` keeps the whole lineage for
-      // plan-audit specs.
-      // r7 DECISION — floor accepted: the verdict's remaining idea
-      // ("compose two iterations per materialization") is already
-      // subsumed by every-5 checkpointing, which composes FIVE rounds
-      // per materialization and measured fastest; the 5.8–6.9 s warm
-      // band is therefore fixed per-job scheduler overhead at sf0.1
-      // scale (≥20 jobs: 2 setup + 10 round-pairs + checkpoints), which
-      // shrinks in RELATIVE terms as data grows — the per-round plan
-      // (one co-partitioned join + one aggregate) is already minimal.
-      // r10 REVISION: the floor moved. With the n-gated broadcast hint
-      // landed (jstack showed the warm reps spending time in janino
-      // re-compiles and driver-side re-planning of the growing 5-round
-      // lineage, not in tasks), SHORTER cadences win in the broadcast
-      // regime: PageRankProbe measured nocopart+ckpt2 at 5.03 s and
-      // ckpt1 at 4.90 vs 6.03 default (interleaved medians, 5 reps) —
-      // short lineage keeps each re-plan/codegen unit small. The default
-      // stays 5 (at scale each eager checkpoint is a full rank-frame
-      // materialization, and the broadcast-regime numbers don't transfer
-      // past the gate); q84 passes checkpointEvery = 2 with the citation.
+      // truncate lineage every `checkpointEvery` rounds — each eager
+      // localCheckpoint is a full materialization job, while a few-round
+      // linear plan is still cheap to optimize. `checkpoint = false`
+      // keeps the whole lineage for plan-audit specs.
       if (checkpoint && (i % checkpointEvery == 0 || i == iterations))
-        ranks = ranks.localCheckpoint(eagerCheckpoint)
+        ranks = ranks.localCheckpoint()
     }
     ranks.select("node", "rank").orderBy("node")
     }
@@ -286,8 +263,8 @@ object Graph {
     * `executedPlan.outputPartitioning`, but under AQE the executed plan
     * is an AdaptiveSparkPlanExec — a leaf wrapper that never overrides
     * outputPartitioning, so the capture reads UnknownPartitioning and
-    * every downstream co-partitioning claim silently dies (r17 finding;
-    * Spark 4.1). Scoping AQE OFF around just this materialization makes
+    * every downstream co-partitioning claim silently dies (Spark 4.1).
+    * Scoping AQE OFF around just this materialization makes
     * the capture see the real exchange. Same session-global-conf trade
     * as the loop scope — serialized on the same lock. */
   private[ops] def checkpointKeepingPartitioning(df: DataFrame): DataFrame = {
@@ -299,6 +276,16 @@ object Graph {
       try df.localCheckpoint() finally sess.conf.set(key, before)
     }
   }
+
+  /** Frees the executor blocks behind the checkpoint frame `df` once
+    * nothing reads it any more (the driver holds its rows, or a later
+    * checkpoint copied it), instead of waiting for the RDD to be
+    * garbage-collected. */
+  private[ops] def dropCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** The DuckDB twin: same fixed-point update, iterations unrolled as
     * chained CTEs (recursive CTEs restrict aggregation over the recursive

@@ -78,13 +78,6 @@ object LangModel {
 
   private val charNgramTfsUdf = udf(charNgramTfs _)
 
-  /** Tiny driver-side frame → LocalRelation (plan-local data, exact
-    * stats, broadcastable with zero executor jobs). Caller guarantees
-    * the frame is bounded (charset/labels, never corpus). */
-  private def localFrame(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
   /** Trained model: `gramWeights` (lang, gram, w_micro) and `langStats`
     * (lang, prior_micro, default_micro) — both bounded by the charset,
     * not the corpus. */
@@ -117,7 +110,7 @@ object LangModel {
     // by the charset (≤ langs·|charset|ⁿ rows, KB-sized at any corpus
     // scale), so driver memory is never corpus-proportional.
     trainFromCounts(
-      localFrame(grams.groupBy("lang", "gram").agg(count(lit(1)).as("c"))),
+      DriverLocal.localFrame(grams.groupBy("lang", "gram").agg(count(lit(1)).as("c"))),
       docsPerLang, nDocs)
   }
 
@@ -270,7 +263,7 @@ object LangModel {
         org.apache.spark.sql.types.StructField("n_all",
           org.apache.spark.sql.types.LongType, nullable = false))))
     val model = trainFromCounts(
-      localFrame(docTfs.groupBy("lang", "gram").agg(sum("tf").as("c"))),
+      DriverLocal.localFrame(docTfs.groupBy("lang", "gram").agg(sum("tf").as("c"))),
       docsPerLang, nDocsAgg)
     classifyFromGrams(model,
       docTfs.select("id", "gram", "tf"),

@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.pipeline.DefaultSits
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Curation: redaction inverse-property, split determinism, quality gate. */
@@ -74,9 +76,11 @@ class CurationSpec extends SparkSpec {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (4L, 1L))
       .toDF("id_a", "id_b")
-    val hinted = Dedup.dupClusters(pairs)
+    // gate 6: the 8 symmetrized edges run the distributed rounds, the 6
+    // nodes keep the broadcast hint
+    val hinted = Dedup.dupClusters(pairs, smallGraphMaxRows = 6L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val unhinted = Dedup.dupClusters(pairs, broadcastLabelsMaxNodes = 0L)
+    val unhinted = Dedup.dupClusters(pairs, smallGraphMaxRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hinted === unhinted)
     assert(hinted === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
@@ -97,10 +101,41 @@ class CurationSpec extends SparkSpec {
   test("dup clusters: exhausting maxIter without the fixpoint fails loudly") {
     // partially-propagated labels would silently dedup the WRONG docs
     val chain = (1L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.dupClusters(chain, maxIter = 1).count()
+    // both regimes: driver-local (default gate) and distributed (gate 0)
+    Seq(2000000L, 0L).foreach { gate =>
+      val e = intercept[IllegalArgumentException] {
+        Dedup.dupClusters(chain, maxIter = 1, smallGraphMaxRows = gate).count()
+      }
+      assert(e.getMessage.contains("fixpoint"), s"gate $gate")
     }
-    assert(e.getMessage.contains("fixpoint"))
+  }
+
+  test("dup clusters: the driver-local regime equals the distributed " +
+    "regime; null ids stay distributed") {
+    def isLocal(df: DataFrame) =
+      df.queryExecution.logical.isInstanceOf[LocalRelation]
+    def rows(df: DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+        .sortBy(_.toString)
+    val rnd = new scala.util.Random(39)
+    val inputs = Seq[(String, Seq[(java.lang.Long, java.lang.Long)])](
+      "chain" -> (1L until 40L).map(i => (Long.box(i), Long.box(i + 1))),
+      "islands" -> Seq((1L, 2L), (10L, 11L), (12L, 11L), (20L, 20L))
+        .map { case (a, b) => (Long.box(a), Long.box(b)) },
+      // duplicate and reversed pairs, self-pairs
+      "random pairs" -> (Seq.fill(200)(
+          (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong)) ++
+        Seq((3L, 4L), (3L, 4L), (4L, 3L), (7L, 7L)))
+        .map { case (a, b) => (Long.box(a), Long.box(b)) },
+      "empty" -> Seq.empty,
+      "null id" -> Seq((1L, 2L), (2L, null), (null, 3L)))
+    inputs.foreach { case (name, ps) =>
+      val pairs = ps.toDF("id_a", "id_b")
+      val default = Dedup.dupClusters(pairs)
+      assert(isLocal(default) === (name != "null id"), name)
+      assert(rows(default) ===
+        rows(Dedup.dupClusters(pairs, smallGraphMaxRows = 0L)), name)
+    }
   }
 
   test("qualityFilter drops low-score docs and listed near-dups") {

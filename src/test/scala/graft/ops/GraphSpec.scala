@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -45,13 +46,20 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank plan: iteration is join + hash aggregate, no window, " +
     "no cartesian") {
-    val edges = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
-    val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"))
-    assert(!plan.contains("Window"))
-    assert(plan.contains("HashAggregate"),
-      s"contrib rollup should be a hash aggregate:\n$plan")
+    // both distributed rounds: unhinted (2 edges, 2 nodes at gate 0) and
+    // hinted (the symmetrized triangle at gate 3: 6 edges > 3 ≥ 3 nodes)
+    val pair = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val triangle = Seq((0L, 1L), (1L, 2L), (2L, 0L))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    Seq(pair -> 0L, triangle -> 3L).foreach { case (edges, gate) =>
+      val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false,
+          smallGraphMaxRows = gate)
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct"))
+      assert(!plan.contains("Window"))
+      assert(plan.contains("HashAggregate"),
+        s"contrib rollup should be a hash aggregate:\n$plan")
+    }
   }
 
   test("pageRank: n-gated broadcast hint — in-gate graphs pin the " +
@@ -59,18 +67,19 @@ class GraphSpec extends SparkSpec {
     "identical") {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    def initialPlan(bcastMax: Long): String =
+    def initialPlan(gate: Long): String =
       Graph.pageRank(edges, iterations = 1, checkpoint = false,
-          broadcastRanksMaxNodes = bcastMax)
+          smallGraphMaxRows = gate)
         .queryExecution.executedPlan.toString
-    // 3 nodes ≤ any positive gate → the INITIAL plan (pre-AQE) already
+    // gate 3: the 6 edges pass it (distributed loop), the 3 nodes don't
+    // (hint fires), so the INITIAL plan (pre-AQE) already
     // carries the broadcast join with the RANK side as the build
     // (BuildLeft — rankSide is the join's left). The negative side can't
     // assert "no broadcast" on spec-sized frames: the planner
     // auto-broadcasts ANY side under autoBroadcastJoinThreshold — but
     // unhinted it picks by size estimate (the edges LocalRelation,
     // BuildRight here), so the build side is the observable hint effect.
-    val hintedPlan = initialPlan(2000000L)
+    val hintedPlan = initialPlan(3L)
     assert(hintedPlan.contains("BroadcastHashJoin") &&
       hintedPlan.contains("BuildLeft"), s"rank side not pinned:\n$hintedPlan")
     // scope the negative gate to the rank-side join NODE (the hash-join
@@ -81,10 +90,10 @@ class GraphSpec extends SparkSpec {
     assert(unhintedJoins.nonEmpty &&
       unhintedJoins.forall(!_.contains("BuildLeft")),
       s"past-the-gate rank join should not build left:\n$unhintedJoins")
-    val hinted = Graph.pageRank(edges, iterations = 5)
+    val hinted = Graph.pageRank(edges, iterations = 5, smallGraphMaxRows = 3L)
       .as[(Long, Long)].collect().toSeq.sorted
     val unhinted = Graph.pageRank(edges, iterations = 5,
-        broadcastRanksMaxNodes = 0L)
+        smallGraphMaxRows = 0L)
       .as[(Long, Long)].collect().toSeq.sorted
     assert(hinted === unhinted)
   }
@@ -93,10 +102,14 @@ class GraphSpec extends SparkSpec {
     "shape, and the round body plans no shuffle above its checkpoints") {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (0L, 3L),
       (1L, 3L)).toDF("src", "dst")
-    val default = Graph.pageRank(edges, iterations = 6)
+    // gate 4: the 6 edges run the distributed loop, the 4 nodes keep the
+    // broadcast hint the dst-keyed loop needs
+    val gate = 4L
+    val default = Graph.pageRank(edges, iterations = 6,
+        smallGraphMaxRows = gate)
       .as[(Long, Long)].collect().toSeq.sorted
     val dstLoop = Graph.pageRank(edges, iterations = 6,
-        dstPartitionLoop = true)
+        dstPartitionLoop = true, smallGraphMaxRows = gate)
       .as[(Long, Long)].collect().toSeq.sorted
     assert(default === dstLoop)
     // one un-checkpointed round (minus the final orderBy, which owns the
@@ -105,7 +118,7 @@ class GraphSpec extends SparkSpec {
     // the round body. checkpoint=false keeps the round's lineage visible;
     // the setup repartitions hide below their own localCheckpoints.
     val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false,
-        dstPartitionLoop = true)
+        dstPartitionLoop = true, smallGraphMaxRows = gate)
       .queryExecution.executedPlan.toString
     val body = plan.linesIterator
       .filterNot(_.contains("rangepartitioning")).mkString("\n")
@@ -120,15 +133,83 @@ class GraphSpec extends SparkSpec {
     val key = "spark.sql.adaptive.enabled"
     val before = spark.conf.get(key)
     assert(before === "true", "spec assumes the session default")
-    val scoped = Graph.pageRank(edges, iterations = 4)
+    // gate 4: the 8 edges run the distributed loop, the 4 nodes pin the
+    // broadcast hint the scope is gated on
+    val scoped = Graph.pageRank(edges, iterations = 4, smallGraphMaxRows = 4L)
       .as[(Long, Long)].collect().toSeq.sorted
-    // the loop ran with AQE scoped off (in-gate, eager checkpoints) and
+    // the loop ran with AQE scoped off (hinted, eager checkpoints) and
     // the session came back untouched
     assert(spark.conf.get(key) === before)
     val unscoped = Graph.pageRank(edges, iterations = 4,
-        adaptiveWhilePinned = true)
+        adaptiveWhilePinned = true, smallGraphMaxRows = 4L)
       .as[(Long, Long)].collect().toSeq.sorted
     assert(scoped === unscoped)
     assert(spark.conf.get(key) === before)
   }
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  test("pageRank: the driver-local regime equals the distributed regime " +
+    "bit for bit") {
+    def sym(es: Seq[(Long, Long)]) =
+      es.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val rnd = new scala.util.Random(84)
+    // duplicate edges, self-loops, sink nodes, negative and wide ids
+    val multigraph = Seq.fill(300)(
+        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
+      Seq((5L, 5L), (5L, 5L), (7L, 9L), (7L, 9L), (-3L, 1L << 40))
+    val graphs = Seq(
+      "star" -> sym((1L to 4L).map(i => (0L, i))),
+      "4-cycle" -> sym(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L))),
+      "mass-leak" -> Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 2L), (3L, 0L),
+        (0L, 3L)),
+      "random multigraph" -> multigraph)
+    val shapes = graphs.map { case (g, es) => (g, es, 10, 85) } ++
+      Seq(("random multigraph", multigraph, 3, 50),
+        ("random multigraph", multigraph, 0, 85))
+    shapes.foreach { case (g, es, iterations, damping) =>
+      val edges = es.toDF("src", "dst")
+      val local = Graph.pageRank(edges, iterations, damping)
+      val distributed = Graph.pageRank(edges, iterations, damping,
+        smallGraphMaxRows = 0L)
+      assert(isLocal(local) && !isLocal(distributed), g)
+      // both regimes return the rows in node order
+      assert(local.as[(Long, Long)].collect().toSeq ===
+        distributed.as[(Long, Long)].collect().toSeq,
+        s"$g, $iterations rounds, d=$damping")
+    }
+  }
+
+  test("pageRank: more nodes than the gate keeps the distributed path " +
+    "even when the edges fit") {
+    // 2 edges, 4 nodes: gate 3 admits the edges but not the nodes
+    val edges = Seq((0L, 1L), (2L, 3L)).toDF("src", "dst")
+    val gated = Graph.pageRank(edges, iterations = 3, smallGraphMaxRows = 3L)
+    val local = Graph.pageRank(edges, iterations = 3)
+    assert(!isLocal(gated) && isLocal(local))
+    assert(gated.as[(Long, Long)].collect().toSeq ===
+      local.as[(Long, Long)].collect().toSeq)
+  }
+
+  test("pageRank: an edge with a null endpoint keeps the distributed " +
+    "answer") {
+    val edges = Seq[(java.lang.Long, java.lang.Long)]((0L, 1L), (1L, 0L),
+      (1L, 2L), (2L, 1L), (2L, null), (null, 0L)).toDF("src", "dst")
+    val ranks = Graph.pageRank(edges, iterations = 4)
+    assert(!isLocal(ranks))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), r.getLong(1))).toSeq
+    assert(rows(ranks) === rows(
+      Graph.pageRank(edges, iterations = 4, smallGraphMaxRows = 0L)))
+    assert(rows(ranks) === NullEndpointRanks)
+  }
+
+  /** The distributed answer for the null-endpoint spec's graph, as the
+    * default loop shape gives it: the null endpoint is a node, edges into
+    * it carry rank, edges out of it none. */
+  private val NullEndpointRanks = Seq[(Option[Any], Long)](
+    (None, 93316113281L), (Some(0L), 155801074218L),
+    (Some(1L), 204948339843L), (Some(2L), 155801074218L))
 }
+
