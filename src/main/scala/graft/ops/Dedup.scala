@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1775,142 +1776,327 @@ object Dedup {
     *     .unionByName(sweep)   // == repeatedSpans(base ∪ increments) ∩ base ids
     * }}}
     * (every affected id has ≥ 1 span — its crossing occurrence is itself
-    * covered — so the anti-join subtracts exactly the affected set).
+    * covered — so the anti-join subtracts exactly the affected set);
+    * [[composeSweep]] is that composition, ordered, under the same gate.
     * RetroactiveSweepSpec pins sweep ∪ kept-prior ∪ incremental ==
     * full batch recompute; q101 gates the base half against the batch
     * oracle at the driver.
     *
-    * Scale shape (per SWEEP, on a cadence — never per batch): the two
-    * states aggregate ONCE each (their inherent 8-byte-key exchange) and
-    * anti-join into the crossed-key set, which is bounded by the
-    * increments' distinct shingles since the last sweep — batch-mass, not
-    * corpus-mass. The positions index streams past hash semi-joins
-    * (crossed → affected ids; then the affected restriction) — scans,
-    * never sorts; the id restriction broadcasts under the decontamination
-    * gate ([[Curation.MaxFlaggedIdBroadcast]]'s policy) so the
-    * corpus-sized index never re-exchanges on id. The affected docs'
-    * coverage test does NOT re-aggregate the state: curOcc is slimmed to
-    * the affected key set first (map-side under the same gate — finding
-    * 20's shape), and the threshold aggregate runs on affected-doc mass.
-    * Only affected docs' positions reach the gaps-and-islands merge. */
+    * Two regimes, one gate ([[DriverLocal.MaxRows]] rows per input):
+    *   - every input under it: the sweep runs on the driver
+    *     ([[sweepLocal]]: one probe job, one collect job) and the spans
+    *     re-enter the plan as a LocalRelation;
+    *   - past it, or with a null cell: [[sweepDistributed]]. The two
+    *     states aggregate ONCE each (their inherent 8-byte-key exchange)
+    *     and anti-join into the crossed-key set, which is bounded by the
+    *     increments' distinct shingles since the last sweep. The positions
+    *     index streams past hash semi-joins (crossed → affected ids; then
+    *     the affected restriction) — scans, never sorts; the id
+    *     restriction broadcasts under the decontamination gate
+    *     ([[Curation.MaxFlaggedIdBroadcast]]'s policy) so the corpus-sized
+    *     index never re-exchanges on id. The affected docs' coverage test
+    *     slims curOcc to the affected key set first (finding 20's shape),
+    *     so the threshold aggregate runs on affected-doc mass, and only
+    *     affected docs' positions reach the gaps-and-islands merge.
+    * `sliceAffected` shapes the distributed regime only. */
   def retroactiveSpanSweep(positions: DataFrame, prevOcc: DataFrame,
                            curOcc: DataFrame, n: Int = 10,
-                           minOcc: Int = 2, occParts: Int = 0,
+                           minOcc: Int = 2,
                            sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
-    require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
-    val missing = Seq("id", "pos", "shingle")
-      .filterNot(positions.columns.contains)
-    require(missing.isEmpty,
-      s"positions must be shinglePositionsTable output (missing: " +
-        s"${missing.mkString(", ")}) built with the same n=$n")
-    def coveredKeys(occ: DataFrame) =
-      aggregateOccurrences(occ, occParts)
-        .filter(col("occ") >= minOcc).select("shingle")
-    // newly covered keys: counts are monotone, so prev-covered ⊆
-    // cur-covered and the anti-join is exactly the crossing set
-    val crossed = coveredKeys(curOcc)
-      .join(coveredKeys(prevOcc).hint("SHUFFLE_HASH"),
-        Seq("shingle"), "left_anti")
-      .localCheckpoint()
-    sweepTail(positions, positions, crossed, curOcc, n, minOcc, occParts,
-      sliceAffected)
+    requireSweepInputs(positions, n, minOcc, prevOcc, curOcc)
+    sweepLocal(positions, prevOcc, curOcc, deltaForm = false, n, minOcc)
+      .getOrElse(sweepDistributed(positions, prevOcc, curOcc, n, minOcc,
+        sliceAffected))
   }
 
   /** Delta form of [[retroactiveSpanSweep]] — the state-store-native
     * signature: instead of two full state snapshots the caller passes the
     * PREVIOUS state and the DELTAS accumulated since (contract:
     * cur ≡ prev ⊎ delta as per-shingle sums — exactly what
-    * [[graft.streaming.OccStateStore.readDeltasBetween]] returns). This
-    * cuts the sweep's dominant cost: the pair form aggregates BOTH full
-    * states (two corpus-mass exchanges — 21.5 GB of the 504k run's
-    * inc-sweep row); here the crossed set comes from
-    * [[crossedKeysDelta]], regime-gated between the bulk tagged-union
-    * kernel and the small-delta slim-first shape (crossed ⊆ delta keys —
-    * see that scaladoc for the r14 A/B). Output is row-identical to the
-    * pair form (RetroactiveSweepSpec pins it). */
+    * [[graft.streaming.OccStateStore.readDeltasBetween]] returns). Same
+    * two regimes and gate as the pair form; past the gate the crossed
+    * set comes from [[crossedKeysDelta]] instead of aggregating BOTH full
+    * states. Output is row-identical to the pair form
+    * (RetroactiveSweepSpec pins it). */
   def retroactiveSpanSweepDelta(positions: DataFrame, prevOcc: DataFrame,
                                 deltaOcc: DataFrame, n: Int = 10,
-                                minOcc: Int = 2, occParts: Int = 0,
+                                minOcc: Int = 2,
                                 sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
+    requireSweepInputs(positions, n, minOcc, prevOcc, deltaOcc)
+    sweepLocal(positions, prevOcc, deltaOcc, deltaForm = true, n, minOcc)
+      .getOrElse(sweepDeltaDistributed(positions, prevOcc, deltaOcc, n,
+        minOcc, sliceAffected))
+  }
+
+  private def requireSweepInputs(positions: DataFrame, n: Int, minOcc: Int,
+                                 occ: DataFrame*): Unit = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
     val missing = Seq("id", "pos", "shingle")
       .filterNot(positions.columns.contains)
     require(missing.isEmpty,
       s"positions must be shinglePositionsTable output (missing: " +
         s"${missing.mkString(", ")}) built with the same n=$n")
-    Seq(prevOcc, deltaOcc).foreach { t =>
+    occ.foreach { t =>
       require(t.columns.contains("shingle") && t.columns.contains("occ"),
         s"occurrence frames need (shingle, occ); got ${t.columns.mkString(", ")}")
     }
-    sweepTail(positions, positions,
-      crossedKeysDelta(prevOcc, deltaOcc, minOcc, occParts),
+  }
+
+  /** The distributed regime of [[retroactiveSpanSweep]] at any input
+    * size (package-visible so specs pin it on small inputs). Newly
+    * covered keys: counts are monotone, so prev-covered ⊆ cur-covered and
+    * the anti-join is exactly the crossing set. */
+  private[graft] def sweepDistributed(positions: DataFrame,
+                                      prevOcc: DataFrame, curOcc: DataFrame,
+                                      n: Int = 10, minOcc: Int = 2,
+                                      sliceAffected: Int = SweepSliceMaxAffected)
+      : DataFrame = {
+    requireSweepInputs(positions, n, minOcc, prevOcc, curOcc)
+    def coveredKeys(occ: DataFrame) =
+      aggregateOccurrences(occ).filter(col("occ") >= minOcc).select("shingle")
+    val crossed = coveredKeys(curOcc)
+      .join(coveredKeys(prevOcc).hint("SHUFFLE_HASH"),
+        Seq("shingle"), "left_anti")
+      .localCheckpoint()
+    sweepTail(positions, positions, crossed, curOcc, n, minOcc, sliceAffected)
+  }
+
+  /** The distributed regime of [[retroactiveSpanSweepDelta]] at any input
+    * size (package-visible so specs pin it on small inputs). */
+  private[graft] def sweepDeltaDistributed(positions: DataFrame,
+                                           prevOcc: DataFrame,
+                                           deltaOcc: DataFrame, n: Int = 10,
+                                           minOcc: Int = 2,
+                                           sliceAffected: Int = SweepSliceMaxAffected)
+      : DataFrame = {
+    requireSweepInputs(positions, n, minOcc, prevOcc, deltaOcc)
+    sweepTail(positions, positions, crossedKeysDelta(prevOcc, deltaOcc, minOcc),
       prevOcc.select("shingle", "occ")
         .unionByName(deltaOcc.select("shingle", "occ")),
-      n, minOcc, occParts, sliceAffected)
+      n, minOcc, sliceAffected)
+  }
+
+  /** The driver regime of both sweep forms (`occ` is `curOcc` in the pair
+    * form, `deltaOcc` in the delta form): None — before any job — when an
+    * input is off the [[shinglePositionsTable]] / occurrence-table column
+    * types, and after the one probe job when an input has more than
+    * `maxRows` rows or a null cell. Otherwise the inputs ship to the
+    * driver as primitive arrays in one more job and the spans come back
+    * as a LocalRelation with the distributed regime's schema. */
+  private[graft] def sweepLocal(positions: DataFrame, prevOcc: DataFrame,
+                                occ: DataFrame, deltaForm: Boolean, n: Int,
+                                minOcc: Int,
+                                maxRows: Long = DriverLocal.MaxRows)
+      : Option[DataFrame] = {
+    def typed(df: DataFrame, cols: (String, DataType)*) =
+      cols.forall { case (c, t) => df.schema(c).dataType == t }
+    val canonical =
+      typed(positions, "id" -> LongType, "pos" -> IntegerType,
+        "shingle" -> LongType) &&
+        Seq(prevOcc, occ).forall(typed(_, "shingle" -> LongType,
+          "occ" -> LongType))
+    if (!canonical) None
+    else DriverLocal.longColumns(Seq(
+        positions.select(col("id"), col("pos").cast("long"), col("shingle")),
+        prevOcc.select("shingle", "occ"), occ.select("shingle", "occ")),
+        maxRows).map { case Seq(Array(ids, poss, shs), prev, other) =>
+      val schema = StructType(Seq(
+        StructField("id", LongType, positions.schema("id").nullable),
+        StructField("span_id", LongType),
+        StructField("span_start", IntegerType),
+        StructField("span_end", IntegerType),
+        StructField("n_shingles", LongType, nullable = false)))
+      DriverLocal.localFrame(positions.sparkSession, schema,
+        localSweepSpans(ids, poss, shs, prev, other, deltaForm, n, minOcc))
+    }
+  }
+
+  /** [[sweepLocal]]'s arithmetic over primitive arrays; `prev` and
+    * `other` are (shingle, occ) column pairs, summed per key. */
+  private def localSweepSpans(ids: Array[Long], poss: Array[Long],
+                              shs: Array[Long], prev: Array[Array[Long]],
+                              other: Array[Array[Long]], deltaForm: Boolean,
+                              n: Int, minOcc: Int): Seq[Row] = {
+    import java.util.Arrays.binarySearch
+    // occ sums for the ascending distinct `keys`; rows off the set skip
+    def sums(keys: Array[Long], tables: Array[Array[Long]]*): Array[Long] = {
+      val out = new Array[Long](keys.length)
+      tables.foreach { case Array(k, o) =>
+        var i = 0
+        while (i < k.length) {
+          val j = binarySearch(keys, k(i))
+          if (j >= 0) out(j) += o(i)
+          i += 1
+        }
+      }
+      out
+    }
+    // crossed: p < minOcc ≤ c, with c = p + d in the delta form — so
+    // d ≥ 1 there, and crossed ⊆ delta keys (⊆ cur keys in the pair form)
+    val cand = DriverLocal.sortedDistinct(other(0).clone())
+    val o = sums(cand, other)
+    val p = sums(cand, prev)
+    val crossed = Array.range(0, cand.length).filter { j =>
+      p(j) < minOcc && (if (deltaForm) p(j) + o(j) else o(j)) >= minOcc
+    }.map(cand)
+    val rows = Array.range(0, ids.length)
+    val affected = DriverLocal.sortedDistinct(
+      rows.filter(i => binarySearch(crossed, shs(i)) >= 0).map(ids))
+    val affRows = rows.filter(i => binarySearch(affected, ids(i)) >= 0)
+    // the affected docs' coverage under the CURRENT state
+    val keys = DriverLocal.sortedDistinct(affRows.map(shs))
+    val cur = if (deltaForm) sums(keys, prev, other) else sums(keys, other)
+    // covered rows in (id, pos) order: the dense affected-id index in the
+    // high word, pos with its sign bit flipped (unsigned order) in the low
+    val packed = affRows.filter(i => cur(binarySearch(keys, shs(i))) >= minOcc)
+      .map(i => (binarySearch(affected, ids(i)).toLong << 32) |
+        ((poss(i).toInt ^ Int.MinValue) & 0xffffffffL))
+    java.util.Arrays.sort(packed)
+    def docOf(x: Long): Long = x >>> 32
+    def posOf(x: Long): Int = x.toInt ^ Int.MinValue
+    // [[islandsToSpans]]' rule: a span breaks where pos passes every
+    // previous window's end; touching windows merge, duplicate rows count
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var k = 0
+    while (k < packed.length) {
+      val doc = docOf(packed(k))
+      var spanId = 0L
+      while (k < packed.length && docOf(packed(k)) == doc) {
+        val start = posOf(packed(k))
+        var end = start
+        var nSh = 0L
+        while (k < packed.length && docOf(packed(k)) == doc &&
+          posOf(packed(k)) <= end) {
+          end = math.max(end, Math.addExact(posOf(packed(k)), n))
+          nSh += 1
+          k += 1
+        }
+        spanId += 1
+        out += Row(affected(doc.toInt), spanId, start, end, nSh)
+      }
+    }
+    out.toSeq
+  }
+
+  /** The sweep's composition: `priorSpans` (the spans a previous batch
+    * run or sweep produced) for every id the sweep left alone, plus the
+    * sweep's own spans, ordered by (id, span_start). Every affected id has
+    * ≥ 1 sweep span, so the sweep's ids are exactly the ids it replaces.
+    * Same gate as the sweep: when both frames have at most
+    * [[DriverLocal.MaxRows]] rows, no null cell and the span column types,
+    * they ship to the driver (one probe job, one collect job, neither in
+    * the caller's SQL execution) and the result is a LocalRelation, so
+    * collecting it runs no job; otherwise [[composeSweepDistributed]]. */
+  def composeSweep(priorSpans: DataFrame, sweep: DataFrame): DataFrame = {
+    val distributed = composeSweepDistributed(priorSpans, sweep)
+    composeLocal(priorSpans, sweep, distributed.schema)
+      .getOrElse(distributed)
+  }
+
+  /** The Spark form of [[composeSweep]] at any input size
+    * (package-visible so specs pin it on small inputs). */
+  private[graft] def composeSweepDistributed(priorSpans: DataFrame,
+                                             sweep: DataFrame): DataFrame =
+    priorSpans.join(sweep.select("id").distinct(), Seq("id"), "left_anti")
+      .unionByName(sweep)
+      .orderBy("id", "span_start")
+
+  /** The span frames' columns: [[repeatedSpans]]' and the sweep's. */
+  private val SpanCols = Seq("id" -> LongType, "span_id" -> LongType,
+    "span_start" -> IntegerType, "span_end" -> IntegerType,
+    "n_shingles" -> LongType)
+
+  /** [[composeSweep]]'s driver regime (`schema` is the Spark form's): None
+    * before any job when an input is off the span columns, after the
+    * probe when one is past `maxRows` rows or has a null cell, and after
+    * the collect when two spans share (id, span_start). */
+  private[graft] def composeLocal(priorSpans: DataFrame, sweep: DataFrame,
+                                  schema: StructType,
+                                  maxRows: Long = DriverLocal.MaxRows)
+      : Option[DataFrame] = {
+    import java.util.Arrays.binarySearch
+    val names = SpanCols.map(_._1)
+    val canonical = schema.fieldNames.toSeq == names &&
+      Seq(priorSpans, sweep).forall(df => df.columns.toSet == names.toSet &&
+        SpanCols.forall { case (c, t) => df.schema(c).dataType == t })
+    if (!canonical) None
+    else DriverLocal.longColumns(Seq(priorSpans, sweep).map(df =>
+        df.select(names.map(col(_).cast("long")): _*)), maxRows).flatMap {
+      case Seq(prior, swept) =>
+        val replaced = DriverLocal.sortedDistinct(swept(0).clone())
+        val kept = Array.range(0, prior(0).length)
+          .filter(i => binarySearch(replaced, prior(0)(i)) < 0)
+        val Array(id, spanId, start, end, nSh) = Array.tabulate(names.length)(
+          j => kept.map(i => prior(j)(i)) ++ swept(j))
+        // (id, span_start) order: the dense id rank in the high word, the
+        // start with its sign bit flipped (unsigned order) in the low one
+        val ranks = DriverLocal.sortedDistinct(id.clone())
+        val key = Array.tabulate(id.length)(i =>
+          (binarySearch(ranks, id(i)).toLong << 32) |
+            ((start(i).toInt ^ Int.MinValue) & 0xffffffffL))
+        val sorted = key.clone()
+        java.util.Arrays.sort(sorted)
+        if ((1 until sorted.length).exists(i => sorted(i) == sorted(i - 1)))
+          None
+        else {
+          val rows = new Array[Row](id.length)
+          key.indices.foreach { i =>
+            rows(binarySearch(sorted, key(i))) = Row(id(i), spanId(i),
+              start(i).toInt, end(i).toInt, nSh(i))
+          }
+          Some(DriverLocal.localFrame(priorSpans.sparkSession, schema,
+            rows.toSeq))
+        }
+    }
   }
 
   /** The delta decomposition's crossed-key set — prev < minOcc ≤
     * prev + delta (checkpointed: the sweep reads it several times).
-    * Public piece of [[retroactiveSpanSweepDelta]] so a pruning layout
-    * can compute the crossed keys FIRST, file-prune its positions read
-    * against them ([[graft.ops.ZoneIndex]]'s pattern — the streaming
-    * driver's per-batch positions partitions do), and hand both to
-    * [[sweepFromCrossed]].
+    * Public piece of [[retroactiveSpanSweepDelta]]'s distributed regime
+    * so a pruning layout can compute the crossed keys FIRST, file-prune
+    * its positions read against them ([[graft.ops.ZoneIndex]]'s pattern —
+    * the streaming driver's per-batch positions partitions do), and hand
+    * both to [[sweepFromCrossed]].
     *
-    * Shape (r14, verdict item 5), REGIME-GATED on the delta's size:
-    * every crossed key satisfies p < minOcc ≤ p + d, hence d ≥ 1 —
-    * '''crossed ⊆ delta keys''' — so for a SMALL delta (distinct keys
-    * under the broadcast gate) the state never needs an exchange at
-    * all: the delta aggregates first (increment-sized), prev is SLIMMED
-    * to the delta's key set MAP-SIDE, and the threshold test runs on
-    * delta-keyed mass only — the serving-cadence shape, which also
-    * lets the caller PRUNE its prev READ by the delta's keys
-    * ([[crossedFromDeltaAgg]]). For a BULK delta the r13 tagged-union
-    * [[KeyedSum2]] shape stays — the r14 same-window A/B on the
-    * 504k-doc 69M-key window measured slim-first WORSE there (138.4 vs
-    * 123.3 s, input 38.1 vs 17.4 GB: a corpus-mass semi-join + re-agg
-    * reads the state twice for keys the tagged union handles in one
-    * pass). Row-identical either way (RetroactiveSweepSpec pins both
-    * branches against the pair form). */
+    * Every crossed key has d ≥ 1, so crossed ⊆ delta keys. Two shapes,
+    * gated on the delta's plan-stats row estimate against
+    * [[Curation.MaxFlaggedIdBroadcast]]:
+    *   - a small delta aggregates first, prev is SLIMMED to its key set
+    *     map-side, and the threshold test runs on delta-keyed mass
+    *     ([[crossedFromDeltaAgg]], which also lets the caller prune its
+    *     prev READ by the delta's keys);
+    *   - a bulk delta takes the tagged union ([[taggedCrossed]]), which
+    *     reads the state once where slim-first would semi-join and
+    *     re-aggregate corpus mass.
+    * An unmaterialized delta estimates huge and takes the bulk shape.
+    * Row-identical either way (RetroactiveSweepSpec pins both shapes). */
   def crossedKeysDelta(prevOcc: DataFrame, deltaOcc: DataFrame,
-                       minOcc: Int = 2, occParts: Int = 0): DataFrame = {
+                       minOcc: Int = 2): DataFrame = {
     require(minOcc >= 2, s"need minOcc >= 2, got $minOcc")
     Seq(prevOcc, deltaOcc).foreach { t =>
       require(t.columns.contains("shingle") && t.columns.contains("occ"),
         s"occurrence frames need (shingle, occ); got ${t.columns.mkString(", ")}")
     }
-    // plan-stats row estimate (file bytes / ~8 B per zstd occ row — the
-    // occ-store figure); an unmaterialized delta estimates huge and
-    // takes the bulk branch, the safe side (it is exactly r13's shape)
+    // file bytes / ~8 B per zstd occ row (the occ-store figure)
     val estRows =
       (deltaOcc.queryExecution.optimizedPlan.stats.sizeInBytes /
         BigInt(graft.streaming.OccStateStore.EstBytesPerOccRow))
         .min(BigInt(Long.MaxValue)).toLong
     if (estRows > Curation.MaxFlaggedIdBroadcast)
-      taggedCrossed(prevOcc, deltaOcc, minOcc, occParts)
+      taggedCrossed(prevOcc, deltaOcc, minOcc)
     else
       crossedFromDeltaAgg(prevOcc,
-        aggregateOccurrences(deltaOcc, occParts)
+        aggregateOccurrences(deltaOcc)
           .select(col("shingle"), col("occ").as("d_occ"))
           .localCheckpoint(),
-        minOcc, occParts)
+        minOcc)
   }
 
-  /** The BULK branch of [[crossedKeysDelta]] — r13's shape, kept by
-    * measurement (see that scaladoc): prev and delta union into ONE
-    * tagged exchange and [[KeyedSum2]] answers (prev-sum, delta-sum)
-    * per key in a single pass. The r14-verdict item-6 WIDTH-CUT
-    * candidate — shipping `(shingle, min(occ, minOcc)*2 + tag)` through
-    * a saturating crossed-key kernel instead of the tagged triple — was
-    * built and A/B'd same-window over 14 interleaved legs on the
-    * 504k/69M-key window (r15): deterministic columns were IDENTICAL
-    * (shuffle 12,148 vs 12,149 MB — zstd already collapses the
-    * mostly-zero tagged columns) and the wall medians indistinguishable
-    * (100.0 vs 102.6 s inside a 79–316 s window swing), so the variant
-    * was REMOVED and the fixed-heap sweep residual is declared
-    * closed-by-measurement (SCALE.md round 15). */
+  /** The bulk shape of [[crossedKeysDelta]]: prev and delta union into
+    * ONE tagged exchange and [[KeyedSum2]] answers (prev-sum, delta-sum)
+    * per key in a single pass. */
   private[graft] def taggedCrossed(prevOcc: DataFrame, deltaOcc: DataFrame,
-                                   minOcc: Int, occParts: Int): DataFrame = {
+                                   minOcc: Int): DataFrame = {
     val spark = prevOcc.sparkSession
     import spark.implicits._
     val tagged = prevOcc
@@ -1918,7 +2104,7 @@ object Dedup {
       .unionByName(deltaOcc
         .select(col("shingle"), lit(0L).as("a"), col("occ").as("b")))
     tagged
-      .repartition(occExchangeParts(tagged, occParts), col("shingle"))
+      .repartition(occExchangeParts(tagged, 0), col("shingle"))
       .as[(Long, Long, Long)]
       .mapPartitions(it => new KeyedSum2()(it))
       .toDF("shingle", "p_occ", "d_occ")
@@ -1939,21 +2125,20 @@ object Dedup {
     * prev rows whose shingle is in `dAgg` — extra rows are slimmed
     * exactly here. */
   def crossedFromDeltaAgg(prevOcc: DataFrame, dAgg: DataFrame,
-                          minOcc: Int = 2, occParts: Int = 0): DataFrame = {
+                          minOcc: Int = 2): DataFrame = {
     require(minOcc >= 2, s"need minOcc >= 2, got $minOcc")
     val nDelta = dAgg.count()
     if (nDelta > Curation.MaxFlaggedIdBroadcast)
       // bulk window: the slim-first shape would semi-join + re-aggregate
-      // corpus mass (the r14 A/B's losing side) — dAgg is itself a valid
-      // per-shingle-sum delta frame, so the tagged union applies as-is
+      // corpus mass — dAgg is itself a valid per-shingle-sum delta frame,
+      // so the tagged union applies as-is
       taggedCrossed(prevOcc,
-        dAgg.select(col("shingle"), col("d_occ").as("occ")),
-        minOcc, occParts)
+        dAgg.select(col("shingle"), col("d_occ").as("occ")), minOcc)
     else {
       val dKeys = dAgg.select("shingle")
       val prevSlim =
         prevOcc.join(broadcast(dKeys), Seq("shingle"), "left_semi")
-      val pAgg = aggregateOccurrences(prevSlim, occParts)
+      val pAgg = aggregateOccurrences(prevSlim)
         .select(col("shingle"), col("occ").as("p_occ"))
       dAgg.join(pAgg, Seq("shingle"), "left_outer")
         .select(col("shingle"),
@@ -1965,8 +2150,8 @@ object Dedup {
     }
   }
 
-  /** [[retroactiveSpanSweepDelta]]'s tail from a PRECOMPUTED crossed set,
-    * with the positions input split in two:
+  /** [[retroactiveSpanSweepDelta]]'s distributed tail from a PRECOMPUTED
+    * crossed set, with the positions input split in two:
     *  - `positionsForCrossed` feeds ONLY the affected-id discovery
     *    (positions ⋉ crossed). Contract: it must contain every positions
     *    row whose shingle ∈ crossed — a FILE-PRUNED read qualifies
@@ -1980,57 +2165,41 @@ object Dedup {
   def sweepFromCrossed(positionsForCrossed: DataFrame,
                        positions: DataFrame, crossed: DataFrame,
                        curOcc: DataFrame, n: Int = 10, minOcc: Int = 2,
-                       occParts: Int = 0,
                        sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
-    require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
-    Seq(positionsForCrossed, positions).foreach { t =>
-      val missing = Seq("id", "pos", "shingle").filterNot(t.columns.contains)
-      require(missing.isEmpty,
-        s"positions must be shinglePositionsTable output (missing: " +
-          s"${missing.mkString(", ")})")
-    }
+    Seq(positionsForCrossed, positions)
+      .foreach(requireSweepInputs(_, n, minOcc))
     sweepTail(positionsForCrossed, positions, crossed, curOcc, n, minOcc,
-      occParts, sliceAffected)
+      sliceAffected)
   }
 
-  /** Affected-doc cap per sweep SLICE (r12 verdict item 6 — the 2×
-    * headroom leg's sweep walled 4.43× at a 61.7 GB pool peak on a fixed
-    * 48 GB heap: the per-doc coverage join + gaps-and-islands window
-    * sort's execution state grows with the accumulated increment while
-    * the heap does not): affected docs' spans are mutually independent
-    * (coverage is per doc), so the per-DOC tail is embarrassingly
-    * sliceable by doc-id hash. Past the cap, the tail runs one bounded
-    * slice at a time, each materializing its spans before the next
-    * allocates. What is NOT sliced, deliberately: the state's
-    * affected-key slim and threshold aggregate — the sweep's heaviest
-    * exchange — runs ONCE for the whole affected set and feeds every
-    * slice from a checkpoint (the first r13 cut re-ran it per slice and
-    * the 2× sweep got WORSE: shuffle 24.1 → 32.9 GB, wall 375 → 429 s —
-    * that A/B is the measured reason for this shape). 32768 ≈ the 504k
-    * run's whole sweep in one slice (comparability) with the 2× leg at
-    * two. */
+  /** Affected-doc cap per slice of the distributed sweep's per-doc tail.
+    * Affected docs' spans are mutually independent (coverage is per doc),
+    * so past the cap the coverage join + gaps-and-islands window — whose
+    * execution memory grows with the accumulated increment while the
+    * heap does not — runs one bounded doc-id slice at a time, each
+    * materializing its spans before the next allocates. The state's
+    * affected-key slim and threshold aggregate, the sweep's heaviest
+    * exchange, runs ONCE for the whole affected set and feeds every slice
+    * from a checkpoint; re-running it per slice costs more than slicing
+    * saves. 32768 keeps the 504k-doc run's sweep in one slice. */
   final val SweepSliceMaxAffected: Int = 32768
 
-  /** Shared tail of the sweep forms: crossed keys → affected base
-    * ids → their covered positions under the CURRENT state → spans.
+  /** Shared distributed tail of the sweep forms: crossed keys → affected
+    * base ids → their covered positions under the CURRENT state → spans.
     * `curOcc` is consumed only SLIMMED to the affected docs' key set
     * (map-side under the broadcast gate — finding 20's shape), never
-    * re-aggregated corpus-wide. Affected sets past
-    * [[SweepSliceMaxAffected]] recompute in bounded doc-id slices (see
-    * the constant's doc; sliced output is row-identical —
-    * RetroactiveSweepSpec pins it). `positionsForCrossed` vs
-    * `positions`: see [[sweepFromCrossed]] (the one-frame forms pass the
-    * same frame twice). */
+    * re-aggregated corpus-wide. Affected sets past `sliceAffected`
+    * recompute in bounded doc-id slices (see [[SweepSliceMaxAffected]];
+    * sliced output is row-identical — RetroactiveSweepSpec pins it).
+    * `positionsForCrossed` vs `positions`: see [[sweepFromCrossed]] (the
+    * one-frame forms pass the same frame twice). */
   private def sweepTail(positionsForCrossed: DataFrame,
                         positions: DataFrame, crossed: DataFrame,
                         curOcc: DataFrame, n: Int, minOcc: Int,
-                        occParts: Int,
-                        sliceAffected: Int = SweepSliceMaxAffected): DataFrame = {
-    // the crossed-key set is increment-bounded and usually tiny (30,886
-    // affected docs from ~79k crossed keys at the 504k run) — under the
-    // gate it broadcasts, so the corpus-sized positions index is FILTERED
-    // map-side and never exchanges here (the SHUFFLE_HASH fallback
-    // shuffles it once, the pre-r11 shape: 7+ GB of the sweep's cost)
+                        sliceAffected: Int): DataFrame = {
+    // under the broadcast gate the crossed set broadcasts, so the
+    // corpus-sized positions index is FILTERED map-side and never
+    // exchanges here
     val nCrossed = crossed.count()
     val affected = (
       if (nCrossed <= Curation.MaxFlaggedIdBroadcast)
@@ -2045,8 +2214,8 @@ object Dedup {
       if (sliceAffected <= 0) 1
       else ((nAffected + sliceAffected - 1) / sliceAffected).toInt
     // past-the-gate fallbacks stay SHUFFLE_HASH-hinted like their
-    // siblings — an unhinted semi here went SortMergeJoin and SORTED the
-    // corpus-sized positions index (the finding-20 class; r11 review)
+    // siblings — an unhinted semi here goes SortMergeJoin and SORTS the
+    // corpus-sized positions index
     val posAffected = (
       if (nAffected <= Curation.MaxFlaggedIdBroadcast)
         positions.join(broadcast(affected), Seq("id"), "left_semi")
@@ -2054,16 +2223,10 @@ object Dedup {
         Seq("id"), "left_semi"))
       .localCheckpoint()
     // coverage for the affected docs under the CURRENT state, without a
-    // second corpus-wide aggregate (the crossed computation above already
-    // paid the states' one inherent exchange): slim the state to the
-    // affected docs' key set FIRST — map-side under the broadcast gate,
-    // hash semi past it — then the aggregate + threshold runs on
-    // affected-doc mass only. This runs ONCE for the whole affected set
-    // regardless of slicing: the state semi-join is the sweep's heaviest
-    // exchange, and the first r13 slicing cut re-ran it per slice — the
-    // 2× leg's sweep shuffle jumped 24.1 → 32.9 GB and the wall went UP
-    // (429.2 vs 375.1 s); only the per-DOC tail below is sliceable for
-    // free
+    // second corpus-wide aggregate: slim the state to the affected docs'
+    // key set FIRST — map-side under the broadcast gate, hash semi past
+    // it — then the aggregate + threshold runs on affected-doc mass only,
+    // ONCE for the whole affected set regardless of slicing
     val affKeys = posAffected.select("shingle").distinct()
       .localCheckpoint()
     val nAffKeys = affKeys.count()
@@ -2072,7 +2235,7 @@ object Dedup {
         curOcc.join(broadcast(affKeys), Seq("shingle"), "left_semi")
       else curOcc.join(affKeys.hint("SHUFFLE_HASH"),
         Seq("shingle"), "left_semi")
-    val coveredAff0 = aggregateOccurrences(curSlim, occParts)
+    val coveredAff0 = aggregateOccurrences(curSlim)
       .filter(col("occ") >= minOcc).select("shingle")
     // the sliced path reads coveredAff once per slice — checkpoint it
     // (affected-keys-bounded, 8-byte rows) so the state slim runs once
@@ -2084,16 +2247,13 @@ object Dedup {
         .select("id", "pos"), n)
     if (nSlices <= 1) spansOf(posAffected)
     else {
-      // slice ONLY the per-doc coverage + gaps-and-islands tail (its
-      // window sort is the execution-memory hot spot that walled at 2×
-      // on a fixed heap): disjoint doc slices by id HASH
-      // (xxhash64+pmod — total over any id type, where a bare pmod(id)
-      // would NULL out a non-castable id and silently drop its docs
-      // from every slice; r13 review). Each slice's spans materialize
-      // via localCheckpoint — NOT the SQL cache, whose registry entries
-      // would accumulate per sweep for a streaming driver's lifetime —
-      // and are ContextCleaner-released once the consumer drops the
-      // union.
+      // disjoint doc slices by id HASH (xxhash64+pmod — total over any id
+      // type, where a bare pmod(id) would NULL out a non-castable id and
+      // silently drop its docs from every slice). Each slice's spans
+      // materialize via localCheckpoint — NOT the SQL cache, whose
+      // registry entries would accumulate per sweep for a streaming
+      // driver's lifetime — and are ContextCleaner-released once the
+      // consumer drops the union.
       (0 until nSlices).map { s =>
         spansOf(posAffected
           .filter(pmod(xxhash64(col("id")), lit(nSlices.toLong)) ===
@@ -2117,7 +2277,8 @@ object Dedup {
     * fall, so an unchanged label sum marks the fixpoint; exhausting
     * `maxIter` before it fails loudly.
     *
-    * Two regimes, one gate (`smallGraphMaxRows`, 2M by default):
+    * Two regimes, one gate (`smallGraphMaxRows`, [[DriverLocal.MaxRows]]
+    * by default):
     *   - at most that many symmetrized edge rows: the rounds run on the
     *     driver over primitive arrays and the labels re-enter the plan as
     *     a LocalRelation;
@@ -2127,7 +2288,7 @@ object Dedup {
     *     count, decides the BROADCAST hint on the label lookups.
     * A null id keeps the input on the distributed path. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-                  smallGraphMaxRows: Long = 2000000L): DataFrame = {
+                  smallGraphMaxRows: Long = DriverLocal.MaxRows): DataFrame = {
     // symmetrize with ONE explode, not union(pairs, pairs.reversed): the
     // union form evaluates the whole upstream pair pipeline TWICE (the
     // two legs' aliases differ, so no exchange reuse). The lazy
@@ -2140,8 +2301,8 @@ object Dedup {
           col("id_a").cast("long").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(eager = false)
-    DriverLocal.longColumns(edges, smallGraphMaxRows) match {
-      case Some(Array(src, dst)) =>
+    DriverLocal.longColumns(Seq(edges), smallGraphMaxRows) match {
+      case Some(Seq(Array(src, dst))) =>
         Graph.dropCheckpoint(edges)
         localClusters(pairs.sparkSession, src, dst, maxIter)
       case _ => distributedClusters(edges, maxIter, smallGraphMaxRows)

@@ -9,48 +9,65 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * downstream operators read with no executor job. */
 private[graft] object DriverLocal {
 
-  /** The BIGINT columns of `df`, column by column, when it has at most
-    * `bound` rows and no null cell; None when it has more rows or a null
-    * (the caller keeps its distributed path for both).
+  /** The shared row bound of the driver regime: pageRank's and
+    * dupClusters' edge rows and each input of the retroactive sweep. */
+  final val MaxRows: Long = 2000000L
+
+  /** The BIGINT columns of each of `frames`, column by column, when every
+    * frame has at most `bound` rows and no null cell; None when one has
+    * more rows or a null (the caller keeps its distributed path for both).
     *
-    * One job counts rows and nulls per partition — on a lazily
-    * checkpointed frame that job is also the checkpoint's
-    * materialization, so the probe costs no job of its own. Only under
-    * the bound does a second job ship the values, packed into primitive
-    * arrays per partition; no `Row` object is built. */
-  def longColumns(df: DataFrame, bound: Long): Option[Array[Array[Long]]] = {
-    require(df.schema.forall(_.dataType == LongType),
-      s"longColumns needs BIGINT columns, got ${df.schema.simpleString}")
-    val k = df.schema.length
-    val rows = df.queryExecution.toRdd
-    val counts = rows.mapPartitions { it =>
-      var n = 0L
-      var nulls = false
-      it.foreach { r =>
-        n += 1
-        var j = 0
-        while (j < k) { nulls ||= r.isNullAt(j); j += 1 }
-      }
-      Iterator((n, nulls))
-    }.collect()
-    val total = counts.map(_._1).sum
-    if (counts.exists(_._2) || total > bound || total >= Int.MaxValue) None
-    else {
-      val parts = rows.mapPartitions { it =>
-        val cols = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    * One job counts rows and nulls per partition over the union of the
+    * frames' RDDs — on a lazily checkpointed frame that job is also the
+    * checkpoint's materialization, so the probe costs no job of its own.
+    * Only when every frame is under the bound does a second job ship the
+    * values, packed into primitive arrays per partition; no `Row` object
+    * is built. */
+  def longColumns(frames: Seq[DataFrame],
+                  bound: Long): Option[Seq[Array[Array[Long]]]] = {
+    frames.foreach(df => require(df.schema.forall(_.dataType == LongType),
+      s"longColumns needs BIGINT columns, got ${df.schema.simpleString}"))
+    val sc = frames.head.sparkSession.sparkContext
+    val widths = frames.map(_.schema.length)
+    val rdds = frames.map(_.queryExecution.toRdd).zipWithIndex
+    val counts = sc.union(rdds.map { case (rows, f) =>
+      val k = widths(f)
+      rows.mapPartitions { it =>
+        var n = 0L
+        var nulls = false
         it.foreach { r =>
+          n += 1
           var j = 0
-          while (j < k) { cols(j) += r.getLong(j); j += 1 }
+          while (j < k) { nulls ||= r.isNullAt(j); j += 1 }
         }
-        Iterator(cols.map(_.result()))
-      }.collect()
-      Some(Array.tabulate(k)(j => Array.concat(parts.map(_(j)).toSeq: _*)))
+        Iterator((f, n, nulls))
+      }
+    }).collect()
+    val totals = frames.indices.map(f => counts.filter(_._1 == f).map(_._2).sum)
+    if (counts.exists(_._3) ||
+      totals.exists(t => t > bound || t >= Int.MaxValue)) None
+    else {
+      val parts = sc.union(rdds.map { case (rows, f) =>
+        val k = widths(f)
+        rows.mapPartitions { it =>
+          val cols = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofLong)
+          it.foreach { r =>
+            var j = 0
+            while (j < k) { cols(j) += r.getLong(j); j += 1 }
+          }
+          Iterator((f, cols.map(_.result())))
+        }
+      }).collect()
+      Some(frames.indices.map { f =>
+        val mine = parts.filter(_._1 == f).map(_._2)
+        Array.tabulate(widths(f))(j => Array.concat(mine.map(_(j)).toSeq: _*))
+      })
     }
   }
 
   /** `rows` with `schema` as a LocalRelation frame. */
-  private def localFrame(sess: SparkSession, schema: StructType,
-                         rows: Seq[Row]): DataFrame =
+  def localFrame(sess: SparkSession, schema: StructType,
+                 rows: Seq[Row]): DataFrame =
     sess.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** A bounded frame collected into a LocalRelation. Caller guarantees
@@ -67,7 +84,7 @@ private[graft] object DriverLocal {
   }
 
   /** Ascending distinct values of `xs` (sorts `xs` in place) — the dense
-    * node index of a driver-local graph. */
+    * index of a driver-local key set. */
   def sortedDistinct(xs: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(xs)
     var m = 0

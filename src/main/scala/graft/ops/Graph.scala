@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * propagation's spectral sibling; [[Dedup.dupClusters]] covers the
   * other one).
   *
-  * Two regimes, one gate (`smallGraphMaxRows`, 2M by default):
+  * Two regimes, one gate (`smallGraphMaxRows`, [[DriverLocal.MaxRows]] by
+  * default):
   *   - at most that many edge rows and nodes: the rounds run on the
   *     driver over primitive arrays and the ranks re-enter the plan as a
   *     LocalRelation — no per-round job, no session conf touched;
@@ -59,13 +60,13 @@ object Graph {
   def pageRank(edges: DataFrame, iterations: Int = 10,
                dampingPct: Int = 85, checkpoint: Boolean = true,
                checkpointEvery: Int = 5, copartition: Boolean = true,
-               smallGraphMaxRows: Long = 2000000L,
+               smallGraphMaxRows: Long = DriverLocal.MaxRows,
                adaptiveWhilePinned: Boolean = false,
                dstPartitionLoop: Boolean = false): DataFrame = {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .localCheckpoint(eager = false)
-    val small = DriverLocal.longColumns(e0, smallGraphMaxRows).flatMap {
-      case Array(src, dst) =>
+    val small = DriverLocal.longColumns(Seq(e0), smallGraphMaxRows).flatMap {
+      case Seq(Array(src, dst)) =>
         val nodes = DriverLocal.sortedDistinct(Array.concat(src, dst))
         if (nodes.length <= smallGraphMaxRows) Some((nodes, src, dst))
         else None
