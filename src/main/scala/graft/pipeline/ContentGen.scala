@@ -150,9 +150,10 @@ object ContentGen {
             onlyI.map(c => col(s"i.$c").as(c))): _*)
   }
 
-  /** Post-render mapping rows (§1.3 cols 1–11), `;`-joined at the boundary. */
+  /** Post-render mapping rows (§1.3 cols 1–11), `;`-joined at the boundary:
+    * one narrow projection of a [[corpus]] (one row per `doc_id`), the
+    * [[MetaGen.mappingFromDocs]] columns plus the render actuals. */
   def mappingFromCorpus(corpus: DataFrame): DataFrame =
-    MetaGen.mappingFromDocs(corpus)
-      .join(corpus.select("doc_id", "actual_file_path", "actual_word_count"),
-        Seq("doc_id"))
+    corpus.select(MetaGen.mappingCols ++
+      Seq(col("actual_file_path"), col("actual_word_count")): _*)
 }

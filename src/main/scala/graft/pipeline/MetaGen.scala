@@ -169,13 +169,16 @@ object MetaGen {
     * the boundary (`modules/meta_generator.py:157-166`). `tcs` is the doc's
     * deduped TC set — reference order is nondeterministic (Python set); we
     * canonicalize with array_sort (SURVEY.md §7.5). */
-  def mappingFromDocs(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"), col("filename"), col("format"), col("word_count_target"),
-      array_join(col("sits.sit_id"), ";").as("sit_ids"),
-      array_join(col("sits.label"), ";").as("labels"),
-      array_join(col("sits.instances"), ";").as("instances"),
-      array_join(col("sits.confidence"), ";").as("confidences"),
-      array_join(array_sort(array_distinct(flatten(col("sits.tcs")))), ";")
-        .as("tcs"))
+  def mappingFromDocs(docs: DataFrame): DataFrame = docs.select(mappingCols: _*)
+
+  /** The columns of [[mappingFromDocs]], over any frame carrying the plan's
+    * `doc_id, filename, format, word_count_target, sits`. */
+  def mappingCols: Seq[Column] = Seq(
+    col("doc_id"), col("filename"), col("format"), col("word_count_target"),
+    array_join(col("sits.sit_id"), ";").as("sit_ids"),
+    array_join(col("sits.label"), ";").as("labels"),
+    array_join(col("sits.instances"), ";").as("instances"),
+    array_join(col("sits.confidence"), ";").as("confidences"),
+    array_join(array_sort(array_distinct(flatten(col("sits.tcs")))), ";")
+      .as("tcs"))
 }

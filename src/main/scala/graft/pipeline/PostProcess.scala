@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
@@ -12,8 +13,10 @@ import graft.sink.{DocSink, Eml, MiniFormats}
   * BASELINE.md). Here the per-format encoders run as one distributed
   * projection producing binary columns (the same plumbing the multimodal
   * operators use), and files — when a file-per-doc export is actually wanted
-  * — go through the `foreachPartition` sink. Header extraction (P9) and path
-  * derivation stay declarative.
+  * — go through one `foreachPartition` pass of the sink. Header extraction
+  * (P9) and path derivation stay declarative. The mapping's new columns
+  * depend only on each row's filename and format, so [[updateMapping]] is a
+  * projection of the mapping, not a join with the derived frame.
   */
 object PostProcess {
 
@@ -57,61 +60,75 @@ object PostProcess {
       }
   }
 
+  /** The injected clocks: `postprocessed_at` (the mapping's audit column)
+    * and the eml `Date:` header. */
+  private val ProcessedAt = "1970-01-01T00:00:00Z"
+  private val Rfc2822Date = "Thu, 01 Jan 1970 00:00:00 +0000"
+
+  private def stemCol: Column = regexp_replace(col("filename"), "\\.txt$", "")
+  private def isEmailCol: Column = col("format").isin("email", "email_with_attachment")
+
+  /** The mapping's post-processing columns, a function of each row's
+    * `filename` and `format` only (`modules/postprocessor.py:217-223`):
+    * docx/pdf paths always, the eml path for email formats, the xlsx
+    * attachment path for `email_with_attachment`, the audit clock. */
+  private def postColumns: ListMap[String, Column] = {
+    def path(suffix: String) = concat(lit("output/files/"), stemCol, lit(suffix))
+    ListMap(
+      "docx_path" -> path(".docx"),
+      "pdf_path" -> path(".pdf"),
+      "eml_path" -> when(isEmailCol, path(".eml")).otherwise(lit("")),
+      "attachments" -> when(col("format") === "email_with_attachment",
+        path("_attachment.xlsx")).otherwise(lit("")),
+      "postprocessed_at" -> lit(ProcessedAt))
+  }
+
   /** Derive all post-processed artifacts as columns over the corpus
     * (`doc_id, filename, format, text, sits`):
     * docx_bytes / pdf_bytes always; eml_text for email formats (with xlsx
-    * attachment for `email_with_attachment` — S6); path + audit columns
-    * matching `modules/postprocessor.py:139-192`. `processedAt` is an
-    * injected clock. */
-  def derive(corpus: DataFrame,
-             processedAt: String = "1970-01-01T00:00:00Z",
-             rfc2822Date: String = "Thu, 01 Jan 1970 00:00:00 +0000"): DataFrame = {
-    val stem = regexp_replace(col("filename"), "\\.txt$", "")
-    val isEmail = col("format").isin("email", "email_with_attachment")
+    * attachment for `email_with_attachment` — S6); the file names [[export]]
+    * writes; the mapping's path + audit columns
+    * (`modules/postprocessor.py:139-192`). Two projections, not one per
+    * column: every `withColumn` analyzes the plan again. */
+  def derive(corpus: DataFrame): DataFrame = {
+    val (stem, isEmail, text) = (stemCol, isEmailCol, col("text"))
     corpus
-      .withColumn("stem", stem)
-      .withColumn("docx_name", concat(col("stem"), lit(".docx")))
-      .withColumn("pdf_name", concat(col("stem"), lit(".pdf")))
-      .withColumn("eml_name",
-        when(isEmail, concat(col("stem"), lit(".eml"))).otherwise(lit("")))
-      .withColumn("docx_bytes", docxUdf(col("text")))
-      .withColumn("pdf_bytes", pdfUdf(col("text")))
-      .withColumn("subject",
-        lastHeaderCol(col("text"), "subject", concat(lit("Automated message "), col("stem"))))
-      .withColumn("from_addr", lastHeaderCol(col("text"), "from", lit("no-reply@example.com")))
-      .withColumn("to_addr", lastHeaderCol(col("text"), "to", lit("recipient@example.com")))
-      .withColumn("eml_text",
-        when(isEmail,
+      .withColumns(ListMap(
+        "stem" -> stem,
+        "docx_name" -> concat(stem, lit(".docx")),
+        "pdf_name" -> concat(stem, lit(".pdf")),
+        "eml_name" -> when(isEmail, concat(stem, lit(".eml"))).otherwise(lit("")),
+        "docx_bytes" -> docxUdf(text),
+        "pdf_bytes" -> pdfUdf(text),
+        "subject" ->
+          lastHeaderCol(text, "subject", concat(lit("Automated message "), stem)),
+        "from_addr" -> lastHeaderCol(text, "from", lit("no-reply@example.com")),
+        "to_addr" -> lastHeaderCol(text, "to", lit("recipient@example.com"))))
+      .withColumns(ListMap(
+        "eml_text" -> when(isEmail,
           emlUdf(col("subject"), col("from_addr"), col("to_addr"),
-            lit(rfc2822Date), col("text"),
+            lit(Rfc2822Date), text,
             col("format") === "email_with_attachment", col("sits")))
-          .otherwise(lit(null).cast("string")))
-      .withColumn("docx_path", concat(lit("output/files/"), col("docx_name")))
-      .withColumn("pdf_path", concat(lit("output/files/"), col("pdf_name")))
-      .withColumn("eml_path",
-        when(isEmail, concat(lit("output/files/"), col("eml_name"))).otherwise(lit("")))
-      .withColumn("attachments",
-        when(col("format") === "email_with_attachment",
-          concat(lit("output/files/"), col("stem"), lit("_attachment.xlsx")))
-          .otherwise(lit("")))
-      .withColumn("postprocessed_at", lit(processedAt))
+          .otherwise(lit(null).cast("string"))) ++ postColumns)
   }
 
   /** Export the derived artifacts as real files under `dir` (S8/S10/S12/S14
-    * sinks). */
-  def export(derived: DataFrame, dir: String): Unit = {
-    DocSink.writeBinaryFiles(derived, dir, "docx_name", "docx_bytes")
-    DocSink.writeBinaryFiles(derived, dir, "pdf_name", "pdf_bytes")
-    DocSink.writeTextFiles(
-      derived.filter(col("eml_name") =!= "").select("eml_name", "eml_text"),
-      dir, "eml_name", "eml_text")
-  }
+    * sinks): docx, pdf and, for email formats, eml, all in one
+    * `foreachPartition` pass. */
+  def export(derived: DataFrame, dir: String): Unit =
+    DocSink.writeFiles(derived, dir, Seq("docx_name" -> "docx_bytes",
+      "pdf_name" -> "pdf_bytes", "eml_name" -> "eml_text"))
 
-  /** J4 — fold the derived path/audit columns back into the mapping table
-    * (set-based rewrite of the `df.at[idx, k] = v` loop,
-    * `modules/postprocessor.py:217-223`). */
+  /** J4 — the final mapping: `mapping` with the derived path/audit columns
+    * appended (set-based rewrite of the `df.at[idx, k] = v` loop,
+    * `modules/postprocessor.py:217-223`).
+    *
+    * Contract: `derived` is [[derive]] of the same corpus `mapping` was
+    * projected from. Every derived column the mapping keeps is a function of
+    * the row's `filename` and `format`, so it is computed on the mapping's
+    * own rows and `derived` is not joined: the result is a narrow projection
+    * of `mapping`, in its row order. (The general keyed upsert is
+    * [[ContentGen.upsertMapping]].) */
   def updateMapping(mapping: DataFrame, derived: DataFrame): DataFrame =
-    ContentGen.upsertMapping(mapping,
-      derived.select("doc_id", "docx_path", "pdf_path", "eml_path",
-        "attachments", "postprocessed_at"))
+    mapping.withColumns(postColumns)
 }

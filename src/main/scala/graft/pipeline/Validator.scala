@@ -12,7 +12,11 @@ import graft.expr.{Placeholder, RegexMatches}
   * `;`-joined parallel arrays (P8), broadcast-join the 50-row SIT dim (J1),
   * run the position-aware regex scan (P2) in a single projection, gate with
   * the codegen'd placeholder heuristic (P5), then two small `sit_id`
-  * aggregates — the only shuffles in the plan.
+  * aggregates — the only shuffles in the plan. The mapping it reads is
+  * itself a narrow projection of the cached corpus
+  * ([[ContentGen.mappingFromCorpus]], [[PostProcess.updateMapping]]), so
+  * each of its consumers (verdicts, means, the CSV/XLSX sinks) rescans that
+  * cache instead of re-running a join.
   *
   * At 100 TB: everything upstream of the final groupBys is narrow (no
   * exchange); the regex projection is the CPU hotspot and scales linearly
@@ -21,9 +25,12 @@ import graft.expr.{Placeholder, RegexMatches}
   */
 object Validator {
 
-  /** S9 — wholetext corpus scan: one row per file. */
+  /** S9 — wholetext corpus scan: one row per `.txt` file. Every mapping
+    * `filename` is a `.txt` name, so the derived docx/pdf/eml files beside
+    * them are never read. */
   def corpusFromFiles(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("wholetext", "true").text(dir)
+    spark.read.option("wholetext", "true").option("pathGlobFilter", "*.txt")
+      .text(dir)
       .select(
         regexp_extract(input_file_name(), "([^/]+)$", 1).as("filename"),
         col("value").as("text"))
@@ -83,7 +90,8 @@ object Validator {
       count_if(col("tp_ok")).as("tp_docs"),
       count_if(col("fp_flagged")).as("fp_flagged"),
       sum("instances").as("total_instances"))
-      .orderBy("sit_id")
+      // one row per SIT: a single sorted partition, no range sampling
+      .coalesce(1).sortWithinPartitions("sit_id")
 
   /** A5: corpus means (`modules/validator.py:344-348`). */
   def means(mapping: DataFrame): DataFrame = {

@@ -24,11 +24,19 @@ import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 object MiniFormats {
 
   // ---------- shared zip helpers ----------
+  /** The modification time of every zip entry written (the MS-DOS date-time
+    * epoch, stored as is, independent of the time zone), so encoding the
+    * same content twice gives the same bytes. */
+  val ZipEntryTime: java.time.LocalDateTime =
+    java.time.LocalDateTime.of(1980, 1, 1, 0, 0)
+
   private def zip(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val zos = new ZipOutputStream(bos)
     entries.foreach { case (name, bytes) =>
-      zos.putNextEntry(new ZipEntry(name))
+      val entry = new ZipEntry(name)
+      entry.setTimeLocal(ZipEntryTime)
+      zos.putNextEntry(entry)
       zos.write(bytes)
       zos.closeEntry()
     }

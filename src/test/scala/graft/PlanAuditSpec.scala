@@ -287,6 +287,17 @@ class PlanAuditSpec extends SparkSpec {
       s"sit dim not broadcast in:\n$plan")
   }
 
+  test("final DLP mapping: one narrow projection of the corpus, no join, " +
+    "no exchange") {
+    import graft.pipeline._
+    val cfg = PipelineConfig.scaled(perSit = 2)
+    val corpus = ContentGen.corpus(MetaGen.docs(spark, cfg))
+    val finalMapping = PostProcess.updateMapping(
+      ContentGen.mappingFromCorpus(corpus), PostProcess.derive(corpus))
+    val plan = physical(finalMapping)
+    assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+  }
+
   test("decontamination: broadcast semi gate, no Expand, shingle text never shuffles") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val bench = docs.filter(col("doc_id") % 20 === 0)

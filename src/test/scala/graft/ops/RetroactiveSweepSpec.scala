@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -416,22 +415,6 @@ class RetroactiveSweepSpec extends SparkSpec {
       Dedup.sweepLocal(p, a, d, deltaForm = true, n, 2, maxRows = 3L))
     assert(past.isEmpty)
     assert(pastJobs === 1)
-  }
-
-  /** `body`'s value and the number of jobs it submitted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq

@@ -1,10 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage-2 rendering: templates, instance emission, word-target filler,
-  * upsert join. */
+  * upsert join, the mapping projection. */
 class ContentGenSpec extends SparkSpec {
   import spark.implicits._
 
@@ -74,9 +75,44 @@ class ContentGenSpec extends SparkSpec {
     assert(out.map(_.getAs[String]("only_i")).toSeq == Seq(null, "n2", "n3"))
   }
 
+  test("mappingFromCorpus == the self-join reference: rows, column names, " +
+    "types and order") {
+    ContentGenSpec.configs.foreach { case (name, c) =>
+      val corpus = ContentGen.corpus(MetaGen.docs(spark, c)).cache()
+      val got = ContentGen.mappingFromCorpus(corpus)
+      val want = ContentGenSpec.referenceMapping(corpus)
+      assert(got.columns.toSeq === want.columns.toSeq, name)
+      assert(got.schema.map(_.dataType) === want.schema.map(_.dataType), name)
+      assert(ContentGenSpec.rowsById(got) === ContentGenSpec.rowsById(want), name)
+      corpus.unpersist()
+    }
+  }
+
   test("corpus render is deterministic") {
     val again = ContentGen.corpus(MetaGen.docs(spark, cfg))
       .select("doc_id", "text")
     assert(again.exceptAll(corpus.select("doc_id", "text")).count() == 0)
   }
+}
+
+object ContentGenSpec {
+  /** The reference config, and the same with shuffled SIT and format
+    * lists. */
+  lazy val configs: Seq[(String, PipelineConfig)] = {
+    val base = PipelineConfig.scaled(perSit = 1)
+    val rnd = new scala.util.Random(99)
+    Seq("scaled(1)" -> base,
+      "shuffled SITs and formats" -> base.copy(
+        sits = rnd.shuffle(base.sits), formats = rnd.shuffle(base.formats)))
+  }
+
+  /** The mapping as a self-join of the corpus on doc_id: the plan's mapping
+    * columns joined with the render actuals. */
+  def referenceMapping(corpus: DataFrame): DataFrame =
+    MetaGen.mappingFromDocs(corpus)
+      .join(corpus.select("doc_id", "actual_file_path", "actual_word_count"),
+        Seq("doc_id"))
+
+  def rowsById(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("doc_id").collect().map(_.toSeq).toSeq
 }

@@ -191,4 +191,52 @@ class PostProcessSpec extends SparkSpec {
     val extracted = MiniFormats.docxText(bytes)
     assert(extracted.nonEmpty && txt.startsWith(extracted.take(10).replace("\n", "")))
   }
+
+  test("updateMapping == the keyed upsert of derive's columns: rows, column " +
+    "names, types and order") {
+    ContentGenSpec.configs.foreach { case (name, c) =>
+      val corpus = ContentGen.corpus(MetaGen.docs(spark, c)).cache()
+      val derived = PostProcess.derive(corpus)
+      val got = PostProcess.updateMapping(
+        ContentGen.mappingFromCorpus(corpus), derived)
+      val want = ContentGen.upsertMapping(ContentGenSpec.referenceMapping(corpus),
+        derived.select("doc_id", "docx_path", "pdf_path", "eml_path",
+          "attachments", "postprocessed_at"))
+      assert(got.columns.toSeq === want.columns.toSeq, name)
+      assert(got.schema.map(_.dataType) === want.schema.map(_.dataType), name)
+      val rows = ContentGenSpec.rowsById(got)
+      assert(rows === ContentGenSpec.rowsById(want), name)
+      // the paths follow the reference's rule (postprocessor.py:217-223)
+      val byFormat = got.orderBy("doc_id").collect()
+        .map(r => r.getAs[String]("format") -> r).toMap
+      val att = byFormat("email_with_attachment")
+      val stem = "output/files/" + att.getAs[String]("filename").stripSuffix(".txt")
+      assert(att.getAs[String]("docx_path") === stem + ".docx", name)
+      assert(att.getAs[String]("pdf_path") === stem + ".pdf", name)
+      assert(att.getAs[String]("eml_path") === stem + ".eml", name)
+      assert(att.getAs[String]("attachments") === stem + "_attachment.xlsx", name)
+      val chat = byFormat("chat")
+      assert(chat.getAs[String]("eml_path") === "" &&
+        chat.getAs[String]("attachments") === "", name)
+      corpus.unpersist()
+    }
+  }
+
+  test("zip output is deterministic: the same content encodes to the same " +
+    "bytes, every entry stamped with the fixed time") {
+    val text = "Para one\nline two\n\nPara two"
+    val rows = Seq(Seq("h1", "h2"), Seq("1", "x & y"))
+    val docx = MiniFormats.docxBytes(text)
+    val xlsx = MiniFormats.xlsxBytes(rows)
+    assert(MiniFormats.docxBytes(text).sameElements(docx))
+    assert(MiniFormats.xlsxBytes(rows).sameElements(xlsx))
+    Seq(docx, xlsx).foreach { bytes =>
+      val zis = new java.util.zip.ZipInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      val times = Iterator.continually(zis.getNextEntry)
+        .takeWhile(_ != null).map(_.getTimeLocal).toSeq
+      zis.close()
+      assert(times.nonEmpty && times.forall(_ == MiniFormats.ZipEntryTime), times)
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft.sink
 
 import graft.SparkSpec
-import graft.pipeline.{ContentGen, MetaGen, PipelineConfig, Validator}
+import graft.pipeline.{ContentGen, MetaGen, PipelineConfig, PostProcess, Validator}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -17,6 +17,38 @@ class SinkSpec extends SparkSpec {
     val orig = corpus.select(col("filename"), col("text"))
     assert(back.count() == corpus.count())
     assert(back.exceptAll(orig).count() == 0, "scan-back differs from written")
+  }
+
+  test("export writes every docx, pdf and eml file in one job") {
+    val dir = Files.createTempDirectory("graft_export").toString
+    val cfg = PipelineConfig.scaled(perSit = 1)
+    val corpus = ContentGen.corpus(MetaGen.docs(spark, cfg)).cache()
+    val n = corpus.count()
+    val emails = corpus.filter(
+      col("format").isin("email", "email_with_attachment")).count()
+    val (_, jobs) = jobsOf(PostProcess.export(PostProcess.derive(corpus), dir))
+    assert(jobs === 1)
+    val names = Files.list(java.nio.file.Paths.get(dir)).toArray.toSeq
+      .map(_.toString)
+    assert(names.count(_.endsWith(".docx")) === n)
+    assert(names.count(_.endsWith(".pdf")) === n)
+    assert(names.count(_.endsWith(".eml")) === emails)
+    assert(names.size === 2 * n + emails)
+    corpus.unpersist()
+  }
+
+  test("S9 corpusFromFiles reads only the .txt files of an export directory") {
+    val dir = Files.createTempDirectory("graft_mixed").toString
+    val cfg = PipelineConfig.scaled(perSit = 1)
+    val corpus = ContentGen.corpus(MetaGen.docs(spark, cfg)).cache()
+    DocSink.writeTextFiles(corpus, dir)
+    PostProcess.export(PostProcess.derive(corpus), dir)
+    val back = Validator.corpusFromFiles(spark, dir).cache()
+    assert(back.filter(!col("filename").endsWith(".txt")).count() === 0)
+    assert(back.count() === corpus.count())
+    assert(back.exceptAll(corpus.select("filename", "text")).count() === 0)
+    back.unpersist()
+    corpus.unpersist()
   }
 
   test("S5/S4 mapping CSV sink + all-string scan round-trip") {
