@@ -609,7 +609,6 @@ object SparkEntry {
       Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
         n = 3, bands = 4, rows = 2)
         .select("id_a", "id_b"))
-      .orderBy("id")
 
   /** Benchmark decontamination: corpus docs sharing ≥5 distinct word
     * 3-grams with the "benchmark" slice (every 20th doc). */
@@ -1248,10 +1247,7 @@ object SparkEntry {
   /** PageRank (10 rounds, d=0.85, integer picorank fixed point) over the
     * symmetrized customer–supplier trade graph from orders⋈lineitem.
     * Under pageRank's 2M-edge gate (sf0.01: 97k edges, sf0.1: 1.17M) the
-    * rounds run on the driver; the loop-shape arguments below shape only
-    * the distributed regime past it — an unkeyed edge checkpoint, a
-    * checkpoint every round, and, while the rank side still broadcasts,
-    * the dst-keyed loop with no exchange between round checkpoints. */
+    * rounds run on the driver. */
   private def q84(s: SparkSession, dir: String): DataFrame = {
     val pairs = t(s, dir, "orders")
       .join(t(s, dir, "lineitem"),
@@ -1266,8 +1262,7 @@ object SparkEntry {
       pairs.select(explode(array(
           struct(col("a").as("src"), col("b").as("dst")),
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      copartition = false, checkpointEvery = 1, dstPartitionLoop = true)
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
   }
 
   /** Compaction planning: documents as stand-in file metadata (size =

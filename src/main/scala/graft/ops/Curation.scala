@@ -228,7 +228,7 @@ object Curation {
     * SHUFFLE_HASH join of the full (id, shingle) stream (a 4.6 GB
     * exchange + 4.7 GB read + one BytesToBytesMap probe per occurrence +
     * a corpus-wide groupBy(id)): same-host isolated A/B at 503,876 docs
-    * (`BoilerProbe`), bit-identical output, **70.6 → 26.6 s** with
+    * (SCALE.md finding 19), bit-identical output, **70.6 → 26.6 s** with
     * shuffle r/w 9.3 GB → 270 MB. Past the broadcast bound the old join
     * shape runs unchanged as the fallback — correct at any scale, just
     * not exchange-free. That join shape itself deliberately replaced the

@@ -368,7 +368,7 @@ object Dedup {
     * serial-map artifact — every sf-dir table is ONE split). One narrow
     * round-robin shuffle of the doc rows (bytes = the doc text, small
     * exactly when the gate fires) parallelizes the kernel stage.
-    * Same-JVM interleaved probe (PairFamilyWidthProbe, 32 cores, sf0.1):
+    * Same-JVM interleaved A/B (OPTIMIZATION_r17.md §7, 32 cores, sf0.1):
     * q19 2.51 → 1.98, q96 2.81 → 2.55 medians; warm in-sweep pairs
     * confirm for the jaccard pipeline (q19 −0.53, q89 −0.54, q96 −0.26).
     * APPLIED ONLY to jaccardPairCounts: everywhere the input feeds more
@@ -379,10 +379,10 @@ object Dedup {
     * the serialized kernel (booked negatives in OPTIMIZATION_r17.md).
     * At scale the scan's own splits provide the parallelism and the
     * gate stays OFF — unknown stats estimate huge and also stay off
-    * (the safe side; the r10 SubstringAbProbe measured a corpus-mass
-    * doc shuffle losing). Round-robin placement is semantically
-    * invisible here: every consumer below is a groupBy/join, never
-    * order-sensitive. */
+    * (the safe side; the round-10 q90/q91 A/B in SURVEY.md measured a
+    * corpus-mass doc shuffle losing). Round-robin placement is
+    * semantically invisible here: every consumer below is a groupBy/join,
+    * never order-sensitive. */
   private[ops] def widenNarrowScan(df: DataFrame): DataFrame = {
     val conf = df.sparkSession.sessionState.conf
     val parts = conf.numShufflePartitions
@@ -934,9 +934,9 @@ object Dedup {
     // ADAPTIVE by default (r10, closing the r9 verdict's q90/q91 item):
     // on a SMALL corpus the exchange is pure overhead — the whole
     // post-explode stream fits scan-split write buffers with room to
-    // spare. SubstringAbProbe (interleaved same-JVM legs at the bench
-    // shape, median-of-5) measured the exchange costing q90 1.29→1.53 s
-    // (+19%) and q91 2.02→2.09 s at sf0.1 — the mechanism behind the
+    // spare. An interleaved same-JVM A/B at the bench shape (SURVEY.md,
+    // round 10 item 1; median-of-5) measured the exchange costing q90
+    // 1.29→1.53 s (+19%) and q91 2.02→2.09 s at sf0.1 — the mechanism behind the
     // r8→r9 bench medians the r9 verdict flagged (local q90 2.15→3.64,
     // q91 3.01→3.96; full-sweep context amplifies the isolated delta).
     // The passthrough leg RETAINS the r9 kernel/pack work and still beats
@@ -2275,7 +2275,7 @@ object Dedup {
     * even for a worst-case duplicate CHAIN (plain propagation needs
     * O(diameter) rounds, which a long chain would exhaust). Labels only
     * fall, so an unchanged label sum marks the fixpoint; exhausting
-    * `maxIter` before it fails loudly.
+    * `maxIter` before it fails loudly. Returns (id, cluster) in id order.
     *
     * Two regimes, one gate (`smallGraphMaxRows`, [[DriverLocal.MaxRows]]
     * by default):
@@ -2347,47 +2347,24 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint()
     // the node count, measured off the eager label checkpoint, decides
-    // the hint: in the broadcast regime every per-round lookup side gets
-    // it explicitly instead of waiting on AQE's per-stage runtime stats;
-    // past the gate it is withheld and the exchange path serves (a
-    // corpus-sized label frame must never collect to the driver).
+    // the BROADCAST hint on every per-round lookup side; past the gate it
+    // is withheld (a corpus-sized label frame must never collect to the
+    // driver) and each round's join shuffles the edges by dst
     val hintLabels = labels.count() <= broadcastMaxNodes
-    // past the node gate, every round's neighbor-min join would
-    // re-shuffle the EDGE table — the corpus-mass side — by dst while
-    // only the n-row label side changes per round. Pin edges to
-    // hashpartitioning(dst) ONCE (through checkpointKeepingPartitioning:
-    // a plain localCheckpoint under AQE captures UnknownPartitioning and
-    // the pin silently dies), then free the unkeyed copy so the loop
-    // holds one edge table; each round then shuffles labels only.
-    // In the broadcast regime the join needs no edge distribution, so
-    // the extra setup exchange is skipped entirely.
-    val eJoin =
-      if (hintLabels) edges
-      else {
-        val keyed = Graph.checkpointKeepingPartitioning(
-          edges.repartition(
-            edges.sparkSession.sessionState.conf.numShufflePartitions,
-            col("dst")))
-        Graph.dropCheckpoint(edges)
-        keyed
-      }
     def lookup(df: DataFrame): DataFrame =
       if (hintLabels) df.hint("BROADCAST") else df
     var labelSum: Option[Long] = None
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val neighborMin = eJoin
+      val neighborMin = edges
         .join(lookup(labels.select(col("id").as("dst"),
           col("label").as("nlabel"))), "dst")
         .groupBy(col("src").as("id")).agg(min("nlabel").as("nmin"))
-      // LAZY checkpoint: the pointer-jump join below consumes
-      // `propagated` on BOTH sides, and Spark plans the two references
-      // as independent subtrees — without a cut, the neighbor-min join +
-      // aggregate ran TWICE per round. The lazy checkpoint materializes
-      // on first use (the jump's lookup side — under the broadcast hint
-      // that build job runs first, then the streamed side reads the
-      // cached RDD) and adds NO extra job.
+      // LAZY checkpoint: the pointer-jump join below reads `propagated`
+      // on both sides, which Spark plans as independent subtrees; the cut
+      // runs the neighbor-min join + aggregate once per round, and
+      // materializing on first use adds no job
       val propagated = labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
@@ -2399,13 +2376,11 @@ object Dedup {
           col("label").as("plabel"))).alias("p"), Seq("label"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("plabel"), col("label"))).as("label"))
-        // LAZY checkpoint: the convergence aggregate right below is the
-        // round's one action and materializes it — an eager checkpoint
-        // would run a second, redundant job per round
+        // LAZY checkpoint: the convergence aggregate below is the round's
+        // one action and materializes it
         .localCheckpoint(false)
-      // labels are monotonically non-increasing, so the label sum strictly
-      // decreases until the fixpoint — equal sums ⟺ converged. One cheap
-      // aggregate instead of a per-round full join against the old labels.
+      // labels never rise, so the label sum strictly decreases until the
+      // fixpoint: equal sums ⟺ converged
       val sum = updated.agg(coalesce(
         org.apache.spark.sql.functions.sum("label"), lit(0L)))
         .collect()(0).getLong(0)
@@ -2415,7 +2390,7 @@ object Dedup {
       i += 1
     }
     requireFixpoint(converged, maxIter)
-    labels.select(col("id"), col("label").as("cluster"))
+    labels.select(col("id"), col("label").as("cluster")).orderBy("id")
   }
 
   /** Partially-propagated labels would make keep-one-per-cluster dedup

@@ -49,12 +49,20 @@ object EventTime {
 
   /** Read `$dir/events.parquet` with `ts` as epoch-nanos long, whatever the
     * file's physical encoding. `nanosAsLong` is flipped only around the read
-    * (it is a no-op for MICROS files but required for NANOS ones). */
+    * (it is a no-op for MICROS files but required for NANOS ones); the
+    * caller's value, or its absence, is restored after. */
   def readNanos(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // getAll holds only the keys set on the session; getOption would
+    // report the default of an unset key
+    val before = spark.conf.getAll.get(key)
+    spark.conf.set(key, "true")
     val raw =
       try spark.read.parquet(s"$dir/events.parquet")
-      finally spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      finally before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     tsToNanos(raw)
   }
 }

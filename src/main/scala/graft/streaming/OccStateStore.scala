@@ -752,8 +752,8 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
   private val ConcurrentWriters = 8
 
   /** Scope [[ConcurrentWriters]] concurrent output file writers around a
-    * bucket-partitioned write (restored after, same discipline as
-    * pageRank's AQE scope): with concurrent writers, FileFormatWriter
+    * bucket-partitioned write (the caller's value is restored after):
+    * with concurrent writers, FileFormatWriter
     * skips the dynamic-partition SORT for tasks within the cap — at the
     * 623M-key base build that sort externally spilled 20.5 GB for rows
     * the repartition had already bucket-routed. [[bucketedWriteParts]]

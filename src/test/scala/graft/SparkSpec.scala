@@ -25,17 +25,22 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** `body`'s value and the number of jobs it submitted. */
   protected def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val (out, starts) = jobStartsOf(body)
+    (out, starts.size)
+  }
+
+  /** `body`'s value and the start events of the jobs it submitted. */
+  protected def jobStartsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
     }
     org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-      (out, jobs.get)
+      (out, starts.toArray(Array.empty[SparkListenerJobStart]).toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -118,6 +118,22 @@ class EventTimeSpec extends SparkSpec {
     }
   }
 
+  test("readNanos restores the caller's nanosAsLong setting") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "true")
+    try {
+      writeRead(TimestampNTZType)
+      assert(spark.conf.getOption(key) === Some("true"))
+    } finally spark.conf.unset(key)
+  }
+
+  test("readNanos leaves an unset nanosAsLong unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    writeRead(TimestampNTZType)
+    assert(!spark.conf.getAll.contains(key))
+  }
+
   test("real testdata events read as longs in nanos range") {
     val ev = EventTime.readNanos(spark, "/root/testdata/sf0.001")
     assert(ev.schema("ts").dataType == LongType)

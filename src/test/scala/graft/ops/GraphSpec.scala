@@ -46,14 +46,14 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank plan: iteration is join + hash aggregate, no window, " +
     "no cartesian") {
-    // both distributed rounds: unhinted (2 edges, 2 nodes at gate 0) and
-    // hinted (the symmetrized triangle at gate 3: 6 edges > 3 ≥ 3 nodes)
+    // the distributed round, whole lineage kept: unhinted (2 nodes past
+    // gate 0) and hinted (the symmetrized triangle's 3 nodes at gate 3)
     val pair = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     val triangle = Seq((0L, 1L), (1L, 2L), (2L, 0L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
     Seq(pair -> 0L, triangle -> 3L).foreach { case (edges, gate) =>
-      val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false,
-          smallGraphMaxRows = gate)
+      val plan = Graph.distributedPageRank(edges, iterations = 1,
+          dampingPct = 85, broadcastMaxNodes = gate, checkpoint = false)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"))
       assert(!plan.contains("Window"))
@@ -68,11 +68,11 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
     def initialPlan(gate: Long): String =
-      Graph.pageRank(edges, iterations = 1, checkpoint = false,
-          smallGraphMaxRows = gate)
+      Graph.distributedPageRank(edges, iterations = 1, dampingPct = 85,
+          broadcastMaxNodes = gate, checkpoint = false)
         .queryExecution.executedPlan.toString
-    // gate 3: the 6 edges pass it (distributed loop), the 3 nodes don't
-    // (hint fires), so the INITIAL plan (pre-AQE) already
+    // gate 3: the 3 nodes are within it (hint fires), so the INITIAL plan
+    // (pre-AQE) of the distributed round already
     // carries the broadcast join with the RANK side as the build
     // (BuildLeft — rankSide is the join's left). The negative side can't
     // assert "no broadcast" on spec-sized frames: the planner
@@ -90,6 +90,7 @@ class GraphSpec extends SparkSpec {
     assert(unhintedJoins.nonEmpty &&
       unhintedJoins.forall(!_.contains("BuildLeft")),
       s"past-the-gate rank join should not build left:\n$unhintedJoins")
+    // public entry: the 6 edges pass gate 3, so both calls run distributed
     val hinted = Graph.pageRank(edges, iterations = 5, smallGraphMaxRows = 3L)
       .as[(Long, Long)].collect().toSeq.sorted
     val unhinted = Graph.pageRank(edges, iterations = 5,
@@ -98,57 +99,43 @@ class GraphSpec extends SparkSpec {
     assert(hinted === unhinted)
   }
 
-  test("pageRank: dstPartitionLoop — ranks identical to the default " +
-    "shape, and the round body plans no shuffle above its checkpoints") {
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (0L, 3L),
-      (1L, 3L)).toDF("src", "dst")
-    // gate 4: the 6 edges run the distributed loop, the 4 nodes keep the
-    // broadcast hint the dst-keyed loop needs
-    val gate = 4L
-    val default = Graph.pageRank(edges, iterations = 6,
-        smallGraphMaxRows = gate)
-      .as[(Long, Long)].collect().toSeq.sorted
-    val dstLoop = Graph.pageRank(edges, iterations = 6,
-        dstPartitionLoop = true, smallGraphMaxRows = gate)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(default === dstLoop)
-    // one un-checkpointed round (minus the final orderBy, which owns the
-    // only legitimate exchange): the contrib aggregate and the reattach
-    // join must both ride the setup partitioning — no ShuffleExchange in
-    // the round body. checkpoint=false keeps the round's lineage visible;
-    // the setup repartitions hide below their own localCheckpoints.
-    val plan = Graph.pageRank(edges, iterations = 1, checkpoint = false,
-        dstPartitionLoop = true, smallGraphMaxRows = gate)
-      .queryExecution.executedPlan.toString
-    val body = plan.linesIterator
-      .filterNot(_.contains("rangepartitioning")).mkString("\n")
-    assert(!body.contains("Exchange hashpartitioning"),
-      s"dstPartitionLoop round body should be exchange-free:\n$plan")
-  }
-
-  test("pageRank: AQE-off-while-pinned scope — ranks identical either " +
-    "way, session setting restored after the call") {
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L))
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key)
-    assert(before === "true", "spec assumes the session default")
-    // gate 4: the 8 edges run the distributed loop, the 4 nodes pin the
-    // broadcast hint the scope is gated on
-    val scoped = Graph.pageRank(edges, iterations = 4, smallGraphMaxRows = 4L)
-      .as[(Long, Long)].collect().toSeq.sorted
-    // the loop ran with AQE scoped off (hinted, eager checkpoints) and
-    // the session came back untouched
-    assert(spark.conf.get(key) === before)
-    val unscoped = Graph.pageRank(edges, iterations = 4,
-        adaptiveWhilePinned = true, smallGraphMaxRows = 4L)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(scoped === unscoped)
-    assert(spark.conf.get(key) === before)
-  }
-
   private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  test("distributed pageRank and dupClusters leave the session conf " +
+    "alone: no conf change, no job run with AQE switched off") {
+    val triangle = Seq((0L, 1L), (1L, 2L), (2L, 0L))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (4L, 1L))
+      .toDF("id_a", "id_b")
+    // pageRank: 6 edges past gates 3 and 0, the 3 nodes hinted at gate 3
+    // only; dupClusters: 8 symmetrized edges past gates 6 and 0, the 6
+    // nodes hinted at gate 6 only
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank, hinted" -> (() =>
+        Graph.pageRank(triangle, iterations = 4, smallGraphMaxRows = 3L)),
+      "pageRank, unhinted" -> (() =>
+        Graph.pageRank(triangle, iterations = 4, smallGraphMaxRows = 0L)),
+      "dupClusters, hinted" -> (() =>
+        Dedup.dupClusters(pairs, smallGraphMaxRows = 6L)),
+      "dupClusters, unhinted" -> (() =>
+        Dedup.dupClusters(pairs, smallGraphMaxRows = 0L)))
+    calls.foreach { case (name, call) =>
+      val before = spark.conf.getAll
+      val (df, starts) = jobStartsOf {
+        val df = call()
+        df.collect()
+        df
+      }
+      assert(!isLocal(df), name)
+      assert(spark.conf.getAll === before, name)
+      val aqeOff = starts.count(s => Option(s.properties)
+        .exists(_.getProperty("spark.sql.adaptive.enabled") == "false"))
+      assert(starts.nonEmpty, name)
+      assert(aqeOff === 0,
+        s"$name: $aqeOff of ${starts.size} jobs ran with AQE off")
+    }
+  }
 
   test("pageRank: the driver-local regime equals the distributed regime " +
     "bit for bit") {
