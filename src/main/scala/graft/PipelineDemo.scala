@@ -46,8 +46,9 @@ object PipelineDemo {
     val reportText = Validator.formatReport(report, means, issues, cfg.perSitCount)
 
     outDir.foreach { dir =>
-      graft.sink.DocSink.writeTextFiles(corpus, s"$dir/files")
-      PostProcess.export(derived, s"$dir/files")
+      graft.sink.DocSink.writeFiles(derived, s"$dir/files", Seq(
+        "filename" -> "text", "docx_name" -> "docx_bytes",
+        "pdf_name" -> "pdf_bytes", "eml_name" -> "eml_text"))
       finalMapping.coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(s"$dir/mapping_csv")
       // XLSX is a single zip stream by format, so it is built in ONE task —

@@ -1,7 +1,9 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Deterministic replacement for the reference's Faker usage (SURVEY.md §2.3
   * V16): names, emails, sentences, times, lorem filler. Every draw is keyed on
@@ -69,8 +71,17 @@ object TextGen {
   }
 
   // ---- Column mirrors ----
+
+  /** `xs` as one `array<string>` literal with non-null elements: the type
+    * of `array(xs.map(lit): _*)`, which the optimizer folds to this same
+    * literal, but one Column instead of one per element, each of which
+    * records its origin and is analyzed again in every frame built on it. */
+  def constArray(xs: Seq[String]): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      Literal.create(xs, ArrayType(StringType, containsNull = false)))
+
   private def pick(arr: IndexedSeq[String], key: Column, slot: Column): Column =
-    element_at(array(arr.map(lit): _*), DetHash.nextIntCol(key, slot, arr.size) + 1)
+    element_at(constArray(arr), DetHash.nextIntCol(key, slot, arr.size) + 1)
 
   def firstNameCol(key: Column, slot: Column): Column = pick(FirstNames, key, slot)
   def lastNameCol(key: Column, slot: Column): Column = pick(LastNames, key, slot)
@@ -134,7 +145,7 @@ object TextGen {
     * whole-stage codegen instead of running one interpreted lambda per word
     * (which dominated render time: ~40 ms/doc at a 4000-word target). */
   def loremFillCol(key: Column, slot: Column, n: Column): Column = {
-    val cycle = array(LoremCycle.map(lit): _*)
+    val cycle = constArray(LoremCycle)
     val off = DetHash.nextIntCol(key, slot, Rotations)
     when(n <= 0, lit(""))
       .otherwise(array_join(

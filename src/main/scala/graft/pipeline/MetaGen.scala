@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expr.DetHash._
+import graft.expr.TextGen.constArray
 
 /** Stage 1 — document plan generation (SURVEY.md §2.2 G1–G9, §3.1).
   *
@@ -74,7 +75,7 @@ object MetaGen {
 
   /** G7: uniform format choice (`modules/meta_generator.py:95`). */
   def formatCol(id: Column, formats: Seq[String]): Column =
-    element_at(array(formats.map(lit): _*),
+    element_at(constArray(formats),
       nextIntCol(id, lit(1L), formats.size) + 1)
 
   /** Nested `sits` array for doc `id` — G8 rewritten: `n` consecutive SITs
@@ -82,8 +83,9 @@ object MetaGen {
     * coverage uniform; n ≤ 10 < 50 keeps SITs distinct within a doc). */
   def sitsCol(id: Column, cfg: PipelineConfig): Column = {
     val sits = cfg.sits.toIndexedSeq
-    val names = array(sits.map(s => lit(s.name)): _*)
-    val ids = array(sits.map(s => lit(s.id)): _*)
+    val names = constArray(sits.map(_.name))
+    val ids = constArray(sits.map(_.id))
+    // nested `array`s: with every tc list empty they type as array<void>
     val tcs = array(sits.map(s => array(s.tc.map(lit): _*)): _*)
     val base = pmod(id * 17, lit(sits.size.toLong))
     transform(sequence(lit(0L), nSitsCol(id).cast("long") - 1), k => {

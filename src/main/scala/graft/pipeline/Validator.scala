@@ -1,27 +1,39 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import graft.expr.{Placeholder, RegexMatches}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expr.Placeholder
+import graft.ops.DriverLocal
 
 /** Stage 4 — the flagship analytical query (SURVEY.md §3.4).
   *
   * The reference validator re-reads and re-regexes each document once per
   * (row, sit) pair in interpreted Python (`modules/validator.py:252-330`).
-  * Here it is one declarative DAG: scan the corpus once, explode the
-  * `;`-joined parallel arrays (P8), broadcast-join the 50-row SIT dim (J1),
-  * run the position-aware regex scan (P2) in a single projection, gate with
-  * the codegen'd placeholder heuristic (P5), then two small `sit_id`
-  * aggregates — the only shuffles in the plan. The mapping it reads is
-  * itself a narrow projection of the cached corpus
-  * ([[ContentGen.mappingFromCorpus]], [[PostProcess.updateMapping]]), so
-  * each of its consumers (verdicts, means, the CSV/XLSX sinks) rescans that
-  * cache instead of re-running a join.
+  * Here it is one declarative verdict frame: scan the corpus once, explode
+  * the `;`-joined parallel arrays (P8), broadcast-join the 50-row SIT dim
+  * (J1), run the position-aware regex scan (P2) in a single projection, gate
+  * with the codegen'd placeholder heuristic (P5) and format the issue line
+  * on issue rows only. [[run]] folds that frame, together with the
+  * mapping's per-doc means inputs, in one Spark action: each partition
+  * reduces its rows to a bounded partial (one counter row per SIT, four
+  * means sums, its first 500 issues) and the merged partials come back as
+  * the report, the means and the issues, three LocalRelations that
+  * [[formatReport]] reads with no job. The mapping it reads is itself a
+  * narrow projection of the cached corpus ([[ContentGen.mappingFromCorpus]],
+  * [[PostProcess.updateMapping]]), so each of its consumers (the fold, the
+  * CSV/XLSX sinks) rescans that cache instead of re-running a join.
   *
-  * At 100 TB: everything upstream of the final groupBys is narrow (no
-  * exchange); the regex projection is the CPU hotspot and scales linearly
-  * with executors. The `sit_id` aggregate is 50 groups — partial aggregation
-  * collapses it map-side.
+  * At 100 TB: everything but the corpus join on `filename` is narrow; the
+  * regex projection is the CPU hotspot and scales linearly with executors.
+  * A partial is bounded by the SIT count and the issue cap, not by the rows,
+  * so the fold ships at most one counter row per SIT and 500 issue lines per
+  * partition, and `treeAggregate` merges partials on executors before the
+  * driver sees them.
   */
 object Validator {
 
@@ -35,75 +47,31 @@ object Validator {
         regexp_extract(input_file_name(), "([^/]+)$", 1).as("filename"),
         col("value").as("text"))
 
+  /** A mapping row's SIT ids, split on `;`, empty ids dropped. */
+  private def sitArr: Column =
+    filter(split(coalesce(col("sit_ids"), lit("")), ";"), s => s =!= "")
+
+  /** A mapping row's instance counts, split on `;`; an unparsable count
+    * defaults 1 (`modules/validator.py:253-273`). */
+  private def instArr: Column =
+    transform(split(coalesce(col("instances"), lit("")), ";"),
+      x => coalesce(x.try_cast("int"), lit(1)))
+
   /** P8 — split the `;`-joined parallel arrays and posexplode to one row per
     * (doc, sit) assignment. Missing labels default "TP", unparsable instance
     * counts default 1 (`modules/validator.py:253-273`). */
   def explodeAssignments(mapping: DataFrame,
                          carry: Seq[String] = Seq("filename")): DataFrame = {
-    val sitArr = filter(split(coalesce(col("sit_ids"), lit("")), ";"), s => s =!= "")
     val labArr = filter(split(coalesce(col("labels"), lit("")), ";"), s => s =!= "")
-    val instArr = transform(split(coalesce(col("instances"), lit("")), ";"),
-      x => coalesce(x.try_cast("int"), lit(1)))
     mapping
-      .withColumn("sit_arr", sitArr)
-      .withColumn("lab_arr", labArr)
-      .withColumn("inst_arr", instArr)
       .select(col("doc_id").cast("long").as("doc_id") +: carry.map(col) ++:
-        Seq(col("sit_arr"), col("lab_arr"), col("inst_arr"),
-          posexplode(col("sit_arr")).as(Seq("pos", "sit_id_raw"))): _*)
+        Seq(labArr.as("lab_arr"), instArr.as("inst_arr"),
+          posexplode(sitArr).as(Seq("pos", "sit_id_raw"))): _*)
       .select(
         col("doc_id") +: carry.map(col) ++: Seq(
           trim(col("sit_id_raw")).as("sit_id"),
           coalesce(try_element_at(col("lab_arr"), col("pos") + 1), lit("TP")).as("label"),
           coalesce(try_element_at(col("inst_arr"), col("pos") + 1), lit(1)).as("instances")): _*)
-  }
-
-  /** Per-(doc,sit) verdicts: the narrow hot path. `corpus` is keyed by
-    * `filename` — the J6 "first existing path" probe becomes a single join
-    * against the corpus scan instead of per-row file IO. */
-  def verdicts(assignments: DataFrame, corpus: DataFrame,
-               sitDim: DataFrame): DataFrame = {
-    val joined = assignments
-      .join(broadcast(sitDim.select(col("id").as("sit_id"), col("regex"))),
-        Seq("sit_id"), "left")
-      .join(corpus, Seq("filename"), "left")
-
-    val matches = when(
-      col("regex").isNotNull && col("regex") =!= "" && col("text").isNotNull,
-      graft.expr.RegexMatchesExpr.regexMatchesNative(col("text"), col("regex")))
-      .otherwise(array().cast("array<struct<value:string,start:int,excerpt:string>>"))
-
-    joined
-      .withColumn("matches", matches)
-      .withColumn("found_real",
-        size(filter(col("matches"),
-          m => !Placeholder.isPlaceholderFast(m.getField("value")))))
-      .withColumn("need", greatest(lit(1), col("instances")))
-      .withColumn("tp_ok", col("label") === "TP" && col("found_real") >= col("need"))
-      .withColumn("fp_flagged", col("label") =!= "TP" && col("found_real") > 0)
-  }
-
-  /** A1–A4: the per-SIT rollup (`modules/validator.py:336-342`). */
-  def report(verdicts: DataFrame): DataFrame =
-    verdicts.groupBy("sit_id").agg(
-      count(lit(1)).as("docs"),
-      count_if(col("tp_ok")).as("tp_docs"),
-      count_if(col("fp_flagged")).as("fp_flagged"),
-      sum("instances").as("total_instances"))
-      // one row per SIT: a single sorted partition, no range sampling
-      .coalesce(1).sortWithinPartitions("sit_id")
-
-  /** A5: corpus means (`modules/validator.py:344-348`). */
-  def means(mapping: DataFrame): DataFrame = {
-    val sitArr = filter(split(coalesce(col("sit_ids"), lit("")), ";"), s => s =!= "")
-    val instArr = transform(split(coalesce(col("instances"), lit("")), ";"),
-      x => coalesce(x.try_cast("int"), lit(1)))
-    mapping
-      .select(size(sitArr).as("n_sits"), instArr.as("inst_arr"))
-      .agg(
-        avg("n_sits").as("avg_sits_per_doc"),
-        (sum(aggregate(col("inst_arr"), lit(0L), (a, x) => a + x)) /
-          sum(size(col("inst_arr")))).as("avg_instances_per_sit"))
   }
 
   /** W4 — capped, deduped, 120-char-truncated match samples. */
@@ -117,23 +85,132 @@ object Validator {
     slice(array_distinct(displays), 1, 5)
   }
 
-  /** A10/W3 — issue lines, first 500 in (doc_id, sit_id) order
-    * (`modules/validator.py:318,330,350-353`). */
-  def issues(verdicts: DataFrame, cap: Int = 500): DataFrame =
-    verdicts
-      .filter((col("label") === "TP" && !col("tp_ok")) || col("fp_flagged"))
-      .select(col("doc_id"), col("sit_id"),
-        when(col("label") === "TP",
-          format_string(
-            "TP missing matches for doc %d, sit %s: found %d expected %d path %s sample_matches: %s",
-            col("doc_id"), col("sit_id"), col("found_real"), col("need"),
-            col("filename"), sampleCol(col("matches")).cast("string")))
-          .otherwise(format_string(
-            "FP contains valid-looking match in doc %d, sit %s: sample %s",
-            col("doc_id"), col("sit_id"), sampleCol(col("matches")).cast("string")))
-          .as("issue"))
-      .orderBy("doc_id", "sit_id")
-      .limit(cap)
+  /** Per-(doc, sit) verdicts, the narrow hot path: `sit_id, doc_id,
+    * instances, tp_ok, fp_flagged` and `issue`, the A10/W3 issue line of a
+    * TP row short of matches or a flagged FP row (null on every other row;
+    * `modules/validator.py:318,330`). `corpus` is keyed by `filename` — the
+    * J6 "first existing path" probe becomes a single join against the
+    * corpus scan instead of per-row file IO. */
+  def verdicts(assignments: DataFrame, corpus: DataFrame,
+               sitDim: DataFrame): DataFrame = {
+    val matches = when(
+      col("regex").isNotNull && col("regex") =!= "" && col("text").isNotNull,
+      graft.expr.RegexMatchesExpr.regexMatchesNative(col("text"), col("regex")))
+      .otherwise(array().cast("array<struct<value:string,start:int,excerpt:string>>"))
+    val foundReal = size(filter(col("matches"),
+      m => !Placeholder.isPlaceholderFast(m.getField("value"))))
+    val need = greatest(lit(1), col("instances"))
+    val tpOk = col("label") === "TP" && col("found_real") >= need
+    val fpFlagged = col("label") =!= "TP" && col("found_real") > 0
+    val sample = sampleCol(col("matches")).cast("string")
+    val issue =
+      when(col("label") === "TP" && !tpOk, format_string(
+        "TP missing matches for doc %d, sit %s: found %d expected %d path %s sample_matches: %s",
+        col("doc_id"), col("sit_id"), col("found_real"), need, col("filename"), sample))
+      .when(fpFlagged, format_string(
+        "FP contains valid-looking match in doc %d, sit %s: sample %s",
+        col("doc_id"), col("sit_id"), sample))
+    assignments
+      .join(broadcast(sitDim.select(col("id").as("sit_id"), col("regex"))),
+        Seq("sit_id"), "left")
+      .join(corpus, Seq("filename"), "left")
+      .select(col("sit_id"), col("doc_id"), col("filename"), col("label"),
+        col("instances"), matches.as("matches"))
+      .select(col("*"), foundReal.as("found_real"))
+      .select(col("sit_id"), col("doc_id"), col("instances"), tpOk.as("tp_ok"),
+        fpFlagged.as("fp_flagged"), issue.as("issue"))
+  }
+
+  /** A5 inputs, one row per mapping doc: `n_sits` (int), `inst_sum`
+    * (bigint) and `inst_n` (int), the doc's SIT count and the sum and count
+    * of its instance counts (`modules/validator.py:344-348`). */
+  private def meansInputs(mapping: DataFrame): DataFrame =
+    mapping.select(size(sitArr).as("n_sits"), instArr.as("inst_arr"))
+      .select(col("n_sits"),
+        aggregate(col("inst_arr"), lit(0L), (a, x) => a + x).as("inst_sum"),
+        size(col("inst_arr")).as("inst_n"))
+
+  /** The issue cap of the report (`modules/validator.py:350-353`). */
+  private val IssueCap = 500
+
+  private final case class Issue(docId: java.lang.Long, sitId: UTF8String,
+                                 text: UTF8String)
+
+  /** The report's issue order: `doc_id` nulls first, `sit_id` in Spark's
+    * binary string order, the issue text breaking ties. */
+  private val IssueOrder: Ordering[Issue] = (a: Issue, b: Issue) => {
+    val d =
+      if (a.docId == null || b.docId == null)
+        java.lang.Boolean.compare(b.docId == null, a.docId == null)
+      else java.lang.Long.compare(a.docId, b.docId)
+    if (d != 0) d
+    else {
+      val s = a.sitId.binaryCompare(b.sitId)
+      if (s != 0) s else a.text.binaryCompare(b.text)
+    }
+  }
+
+  /** One partition's share of [[run]]'s results, bounded whatever its row
+    * count: one counter row per SIT, the four means sums and its first
+    * [[IssueCap]] issues in report order. Sums fail loudly on overflow, as
+    * ANSI `sum` does. */
+  private final class Partial extends Serializable {
+    /** sit_id → docs, tp_docs, fp_flagged, total_instances */
+    val sits = mutable.HashMap.empty[UTF8String, Array[Long]]
+    var docs = 0L
+    /** Σ n_sits as a double, the sum `avg` keeps */
+    var sitsSum = 0.0
+    var instSum = 0L
+    var instN = 0L
+    var issues = mutable.ArrayBuffer.empty[Issue]
+
+    /** A verdict row: sit_id, doc_id, instances, tp_ok, fp_flagged, issue. */
+    def addVerdict(r: InternalRow): Unit = {
+      val id = r.getUTF8String(0)
+      val c = sits.getOrElse(id, {
+        val fresh = new Array[Long](4)
+        sits.update(id.copy(), fresh)
+        fresh
+      })
+      c(0) += 1
+      if (r.getBoolean(3)) c(1) += 1
+      if (r.getBoolean(4)) c(2) += 1
+      c(3) = Math.addExact(c(3), r.getInt(2).toLong)
+      if (!r.isNullAt(5)) {
+        issues += Issue(if (r.isNullAt(1)) null else r.getLong(1), id.copy(),
+          r.getUTF8String(5).copy())
+        if (issues.length >= 2 * IssueCap) trimIssues()
+      }
+    }
+
+    /** A means row: n_sits, inst_sum, inst_n. */
+    def addMeans(r: InternalRow): Unit = {
+      docs += 1
+      sitsSum += r.getInt(0)
+      instSum = Math.addExact(instSum, r.getLong(1))
+      instN = Math.addExact(instN, r.getInt(2).toLong)
+    }
+
+    def trimIssues(): Unit =
+      issues = issues.sorted(IssueOrder).take(IssueCap)
+
+    def merge(o: Partial): Partial = {
+      o.sits.foreach { case (id, oc) =>
+        val c = sits.getOrElseUpdate(id, new Array[Long](4))
+        c(0) += oc(0)
+        c(1) += oc(1)
+        c(2) += oc(2)
+        c(3) = Math.addExact(c(3), oc(3))
+      }
+      docs += o.docs
+      sitsSum += o.sitsSum
+      instSum = Math.addExact(instSum, o.instSum)
+      instN = Math.addExact(instN, o.instN)
+      issues ++= o.issues
+      trimIssues()
+      this
+    }
+  }
 
   /** S17 — driver-side report formatter (small aggregates only). */
   def formatReport(report: DataFrame, means: DataFrame, issues: DataFrame,
@@ -161,10 +238,56 @@ object Validator {
     sb.toString
   }
 
-  /** End-to-end: mapping + corpus + dim → (report, means, issues). */
+  /** End-to-end: mapping + corpus + dim → (report, means, issues) in one
+    * Spark action, a `treeAggregate` of [[verdicts]] and the mapping's means
+    * inputs into bounded partials. The three results are LocalRelations
+    * with the columns of the A1–A5 rollups (`modules/validator.py:336-353`):
+    *  - report: `sit_id, docs, tp_docs, fp_flagged, total_instances`, one
+    *    row per SIT in `sit_id` order;
+    *  - means: `avg_sits_per_doc, avg_instances_per_sit`, one row, nulls on
+    *    an empty mapping;
+    *  - issues: `doc_id, sit_id, issue`, the first 500 in (`doc_id` nulls
+    *    first, `sit_id`, `issue`) order. */
   def run(mapping: DataFrame, corpus: DataFrame, sitDim: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val v = verdicts(explodeAssignments(mapping), corpus, sitDim).cache()
-    (report(v), means(mapping), issues(v))
+    val v = verdicts(explodeAssignments(mapping), corpus, sitDim)
+    // a SQL execution, as a Dataset action is: its jobs run under the
+    // session's artifact state, so their tasks reuse the classes the
+    // session's other queries generated instead of compiling them again
+    // in the executor's default class loader
+    val all = SQLExecution.withNewExecutionId(v.queryExecution, Some("Validator.run")) {
+      val verdictParts = v.queryExecution.toRdd.mapPartitions { rows =>
+        val p = new Partial
+        rows.foreach(p.addVerdict)
+        p.trimIssues()
+        Iterator(p)
+      }
+      val meansParts = meansInputs(mapping).queryExecution.toRdd.mapPartitions { rows =>
+        val p = new Partial
+        rows.foreach(p.addMeans)
+        Iterator(p)
+      }
+      verdictParts.union(meansParts).treeAggregate(new Partial)(_ merge _, _ merge _)
+    }
+
+    val spark = mapping.sparkSession
+    val counter = (n: String) => StructField(n, LongType, nullable = false)
+    val report = DriverLocal.localFrame(spark,
+      StructType(Seq(v.schema("sit_id"), counter("docs"), counter("tp_docs"),
+        counter("fp_flagged"), StructField("total_instances", LongType))),
+      all.sits.toSeq.sortWith((a, b) => a._1.binaryCompare(b._1) < 0).map {
+        case (id, c) => Row(id.toString, c(0), c(1), c(2), c(3))
+      })
+    def avg(sum: Double, n: Long): java.lang.Double =
+      if (all.docs == 0) null else sum / n
+    val means = DriverLocal.localFrame(spark,
+      StructType(Seq(StructField("avg_sits_per_doc", DoubleType),
+        StructField("avg_instances_per_sit", DoubleType))),
+      Seq(Row(avg(all.sitsSum, all.docs), avg(all.instSum.toDouble, all.instN))))
+    val issues = DriverLocal.localFrame(spark,
+      StructType(Seq(v.schema("doc_id"), v.schema("sit_id"),
+        StructField("issue", StringType, nullable = false))),
+      all.issues.toSeq.map(i => Row(i.docId, i.sitId.toString, i.text.toString)))
+    (report, means, issues)
   }
 }

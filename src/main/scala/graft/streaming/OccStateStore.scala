@@ -760,7 +760,9 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * sizes the exchange so tasks stay within the cap. */
   private def withConcurrentWriters[T](body: => T): T = {
     val key = "spark.sql.maxConcurrentOutputFileWriters"
-    val before = spark.conf.getOption(key)
+    // getAll holds only the keys set on the session; getOption would
+    // report the default of an unset key
+    val before = spark.conf.getAll.get(key)
     spark.conf.set(key, ConcurrentWriters.toString)
     try body
     finally before match {

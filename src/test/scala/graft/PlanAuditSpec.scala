@@ -280,9 +280,11 @@ class PlanAuditSpec extends SparkSpec {
     val corpus = graft.pipeline.ContentGen.corpus(
       graft.pipeline.MetaGen.docs(spark, cfg))
     val mapping = graft.pipeline.ContentGen.mappingFromCorpus(corpus)
-    val (report, _, _) = graft.pipeline.Validator.run(
-      mapping, corpus.select("filename", "text"), cfg.sitDim(spark).toDF())
-    val plan = physical(report)
+    // the one-pass verdict frame `Validator.run` folds
+    val verdicts = graft.pipeline.Validator.verdicts(
+      graft.pipeline.Validator.explodeAssignments(mapping),
+      corpus.select("filename", "text"), cfg.sitDim(spark).toDF())
+    val plan = physical(verdicts)
     assert(plan.contains("BroadcastHashJoin"),
       s"sit dim not broadcast in:\n$plan")
   }

@@ -188,6 +188,18 @@ class StreamingSpanDedupSpec extends SparkSpec {
     assert(m1.keySet === m0.keySet ++ expectedTouched)
   }
 
+  test("a bucketed segment write leaves an unset " +
+    "maxConcurrentOutputFileWriters unset") {
+    val key = "spark.sql.maxConcurrentOutputFileWriters"
+    spark.conf.unset(key)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_occ_conf_").toString
+    val store = OccStateStore.open(spark, root, numBuckets = 8)
+    store.advance(Seq((1L, 1L), (2L, 1L)).toDF("shingle", "occ"), 0L)
+    assert(store.bucketSegments(0L).nonEmpty)
+    assert(!spark.conf.getAll.contains(key))
+  }
+
   test("bucket-pruned probe (r11 weak mark): the state read opens " +
     "EXACTLY the batch's bucket dirs (inputFiles, not just rows); spans " +
     "row-identical; one shingle-kernel evaluation per micro-batch") {
