@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expr.Placeholder
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis, VectorIndex}
+import graft.ops.{Dedup, Similarity, TextAnalysis, VectorIndex}
 import graft.pipeline._
 
 /** Driver contract — one `queries` entry per implemented operator family from
@@ -340,7 +340,7 @@ object SparkEntry {
         length(col("text")).cast("long").as("n_chars"))
 
   // ------------------------------------------------------------------
-  //  scale extensions — dedup / similarity / text analysis / multimodal
+  //  scale extensions — dedup / similarity / text analysis / byte metadata
   // ------------------------------------------------------------------
 
   /** Exact dedup groups via content hash. */
@@ -423,7 +423,7 @@ object SparkEntry {
       .orderBy("query_id", "rank")
   }
 
-  /** Multimodal plumbing: binary column synthesis + byte-level metadata.
+  /** Per-doc UTF-8 byte length and `md5` of `text`, in `doc_id` order.
     * Kernels above the sort — q29 shape note. */
   private def q26(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")

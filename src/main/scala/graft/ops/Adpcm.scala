@@ -1,6 +1,6 @@
 package graft.ops
 
-/** Real compressed-audio codecs for the WAV lane, pure JVM integer
+/** Real compressed-audio codecs of two WAV format tags, pure JVM integer
   * arithmetic (no native libs):
   *
   *   - IMA ADPCM (WAV format tag 0x11, "DVI/IMA"): 4 bits/sample adaptive
@@ -167,13 +167,6 @@ object Adpcm {
     val mantissa = u & 0x0f
     val s = (((mantissa << 3) + MuLawBias) << exp) - MuLawBias
     if ((u & 0x80) != 0) -s else s
-  }
-
-  def muLawEncodeAll(samples: Array[Int]): Array[Byte] = {
-    val out = new Array[Byte](samples.length)
-    var i = 0
-    while (i < samples.length) { out(i) = muLawEncode(samples(i)); i += 1 }
-    out
   }
 
   def muLawDecodeAll(bytes: Array[Byte]): Array[Int] = {

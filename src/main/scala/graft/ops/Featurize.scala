@@ -71,16 +71,12 @@ object Featurize {
   /** (id, counts, embedding_micro, embedding): signed hashed counts, the
     * scaled-integer normalized form (the cross-engine gate), and the
     * double embedding (= micro/scale, an exact integer-by-constant
-    * division) ready for the vector stack. `keepCols` pass through
-    * unchanged (streaming callers keep their event-time column — the
-    * watermark tag rides the projected column). */
+    * division) ready for the vector stack. */
   def featurize(df: DataFrame, idCol: String, textCol: String,
-                dim: Int = 64, scale: Long = 1000000L,
-                keepCols: Seq[String] = Nil): DataFrame = {
+                dim: Int = 64, scale: Long = 1000000L): DataFrame = {
     require(scale > 0, s"scale must be positive, got $scale")
-    df.select(col(idCol).cast("long").as("id") +:
-        hashedCountsCol(col(textCol), dim).as("counts") +:
-        keepCols.map(col): _*)
+    df.select(col(idCol).cast("long").as("id"),
+        hashedCountsCol(col(textCol), dim).as("counts"))
       .withColumn("embedding_micro",
         microNormalizeUdf(col("counts"), lit(scale)))
       .withColumn("embedding",

@@ -6,10 +6,8 @@ import java.io.ByteArrayOutputStream
   * tables, and the LZW-compressed index stream (variable-width codes,
   * clear/end handling). Multi-frame (animated) streams are composited
   * frame by frame on the logical screen — graphic-control transparency,
-  * disposal methods 0–3, and 4-pass interlacing honored — so frame
-  * SAMPLING operates on real pixels. Palette-less streams return None and
-  * callers fall back to header-only metadata. With `ops/Png` and
-  * `ops/Jpeg` this completes the fully-decoding image trio.
+  * disposal methods 0–3, and 4-pass interlacing honored — so every frame
+  * decodes to real pixels. Palette-less streams return None.
   */
 object Gif {
 
@@ -69,7 +67,7 @@ object Gif {
       val sw = u16le(6); val sh = u16le(8)
       if (sw <= 0 || sh <= 0) return None
       // Untrusted logical-screen size: cap at 64M pixels (192 MB canvas)
-      // before allocating, same crafted-dimensions posture as Jpeg.decode.
+      // before allocating: crafted dimensions must not force huge allocations.
       if (sw.toLong * sh.toLong > 64L * 1024 * 1024) return None
       val gctFlag = (u8(10) & 0x80) != 0
       val gctSize = 2 << (u8(10) & 0x07)
@@ -190,20 +188,6 @@ object Gif {
     } catch { case _: Exception => None }
   }
 
-  /** Evenly-spaced sample of `n` composited frames — real video-style
-    * frame sampling for animated GIFs (the only animation container
-    * decodable without native codec libraries). A cheap structural pass
-    * counts frames first, then only the sampled frames are retained
-    * (heap O(n × canvas), not O(total frames × canvas) — a 500-frame
-    * crawl GIF must not materialize 500 canvases in one task). */
-  def frameSample(bytes: Array[Byte], n: Int): Option[Seq[Png.Image]] =
-    countFrames(bytes).filter(_ > 0).flatMap { total =>
-      val wanted =
-        if (total <= n) (0 until total).toSet
-        else (0 until n).map(j => j * total / n).toSet
-      walkFrames(bytes, wanted, wanted.size)
-    }
-
   /** GIF LZW: variable-width codes starting at minCodeSize+1, dictionary
     * grows to 4095, CLEAR resets, END stops. Returns exactly `expected`
     * indices or None. */
@@ -267,10 +251,10 @@ object Gif {
     if (out.size() == expected) Some(out.toByteArray) else None
   }
 
-  /** Minimal single-frame GIF encoder (for round-trip tests and demo
-    * synthesis): global palette from the distinct colors (≤256 required),
-    * LZW stream written as literal codes with a CLEAR before each code so
-    * the code width never grows — valid, if uncompressed, GIF89a. */
+  /** Minimal single-frame GIF encoder, for the decoder's tests: global
+    * palette from the distinct colors (≤256 required), LZW stream written
+    * as literal codes with a CLEAR before each code so the code width
+    * never grows — valid, if uncompressed, GIF89a. */
   def encode(img: Png.Image): Array[Byte] = {
     require(img.channels == 3, "GIF encoder expects RGB")
     val colors = img.pixels.grouped(3).map(c =>

@@ -7,12 +7,7 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * container is zlib (java.util.zip) + five per-scanline byte filters.
   * Supports non-interlaced 8-bit grayscale / RGB / RGBA, which covers the
   * overwhelming majority of ML-pipeline image assets; anything else
-  * returns None and falls back to header-only metadata.
-  *
-  * This makes the image lane of `Multimodal` fully real: decode to
-  * pixels, resample, and feature-extract all operate on actual image
-  * content (the audio/video lanes remain header-only — their codecs
-  * genuinely need native libs).
+  * returns None. [[lumaHistogram]] is a feature over the decoded pixels.
   */
 object Png {
 
@@ -178,28 +173,6 @@ object Png {
   }
 
   // ---------- real kernels over decoded pixels ----------
-
-  /** Nearest-neighbor resample to (outW, outH). */
-  def resize(img: Image, outW: Int, outH: Int): Image = {
-    val out = new Array[Byte](outW * outH * img.channels)
-    var y = 0
-    while (y < outH) {
-      val sy = math.min(img.height - 1, y * img.height / outH)
-      var x = 0
-      while (x < outW) {
-        val sx = math.min(img.width - 1, x * img.width / outW)
-        var c = 0
-        while (c < img.channels) {
-          out((y * outW + x) * img.channels + c) =
-            img.pixels((sy * img.width + sx) * img.channels + c)
-          c += 1
-        }
-        x += 1
-      }
-      y += 1
-    }
-    Image(outW, outH, img.channels, out)
-  }
 
   /** Normalized luminance histogram (`bins` buckets) — a real image
     * feature from real pixel data. */

@@ -11,10 +11,10 @@ import graft.sink.{DocSink, Eml, MiniFormats}
   * The reference loops rows on the driver writing docx/pdf/eml per doc at
   * 8–16 docs/s single-threaded (`modules/postprocessor.py:217-223`,
   * BASELINE.md). Here the per-format encoders run as one distributed
-  * projection producing binary columns (the same plumbing the multimodal
-  * operators use), and files — when a file-per-doc export is actually wanted
-  * — go through one `foreachPartition` pass of the sink. Header extraction
-  * (P9) and path derivation stay declarative. The mapping's new columns
+  * projection producing binary columns, and files — when a file-per-doc
+  * export is actually wanted — go through one `foreachPartition` pass of
+  * the sink. Header extraction (P9) and path derivation stay
+  * declarative. The mapping's new columns
   * depend only on each row's filename and format, so [[updateMapping]] is a
   * projection of the mapping, not a join with the derived frame.
   */

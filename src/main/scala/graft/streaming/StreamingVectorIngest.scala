@@ -5,12 +5,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming vector-index ingest — the lane that keeps a persisted
   * serving index ([[graft.ops.VectorIndex]]) growing as vectors arrive,
-  * without ever re-running the index build's corpus pass (r12 verdict
-  * item 3: `StreamingFeaturize` produced bit-identical embeddings at
-  * ingest and `appendToIvf`/`appendToPq` appended them, but nothing
-  * composed the two under a streaming driver — and nothing COULD until
-  * the appends became replay-idempotent, which r13's `append_id` keying
-  * provides).
+  * without ever re-running the index build's corpus pass. A streaming
+  * driver can compose the appends only because they are
+  * replay-idempotent (`append_id` keying).
   *
   * Shape: `foreachBatch`, like [[StreamingSpanDedup]] — the unit of work
   * is a batch append against a persisted artifact, not per-row state.
@@ -29,9 +26,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * index itself never forces (advice, not a gate).
   *
   * Composition: feed this the raw vector stream, or
-  * [[StreamingFeaturize.featurizeStream]]'s output for text→vector at
-  * ingest (embeddings are bit-identical to the batch featurizer, so the
-  * served index equals one built over the batch-featurized corpus).
+  * [[graft.ops.Featurize.featurize]]'s output for text→vector at ingest
+  * (it is a per-row projection, so embeddings are bit-identical to the
+  * batch featurizer and the served index equals one built over the
+  * batch-featurized corpus).
   *
   * Reference basis: the reference pipeline is batch-only
   * (`/root/reference` generate→validate); this is a Spark-native

@@ -79,35 +79,4 @@ class AdpcmSpec extends AnyFunSuite {
       java.util.Arrays.copyOfRange(enc, 256, 512), blockAlign = 256)
     assert(second.toSeq == dec.slice(spb, 2 * spb).toSeq)
   }
-
-  test("wavSamples: mu-law and IMA-ADPCM WAV containers decode for real") {
-    def wav(fmt: Int, channels: Int, blockAlign: Int, bits: Int,
-            fact: Int, data: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      def w32(v: Int) = (0 to 3).foreach(i => out.write((v >> (8 * i)) & 0xff))
-      def w16(v: Int) = (0 to 1).foreach(i => out.write((v >> (8 * i)) & 0xff))
-      val factLen = if (fact >= 0) 12 else 0
-      out.write("RIFF".getBytes); w32(4 + 24 + factLen + 8 + data.length)
-      out.write("WAVE".getBytes)
-      out.write("fmt ".getBytes); w32(16); w16(fmt); w16(channels); w32(8000)
-      w32(8000 * blockAlign); w16(blockAlign); w16(bits)
-      if (fact >= 0) { out.write("fact".getBytes); w32(4); w32(fact) }
-      out.write("data".getBytes); w32(data.length); out.write(data)
-      out.toByteArray
-    }
-    val pcm = Array.tabulate(700)(i =>
-      (8000 * math.sin(2 * math.Pi * i * 330 / 8000)).toInt)
-    // mu-law container
-    val mu = Multimodal.wavSamples(
-      wav(7, 1, 1, 8, -1, Adpcm.muLawEncodeAll(pcm))).get
-    assert(mu.length == 700)
-    assert(mu.zip(pcm).forall { case (d, s) =>
-      math.abs(d * 32768.0 - s) <= 1024 })
-    // IMA ADPCM container with a fact chunk trimming the padded tail
-    val ima = Multimodal.wavSamples(
-      wav(0x11, 1, 256, 4, 700, Adpcm.encodeIma(pcm, 256))).get
-    assert(ima.length == 700)
-    val direct = Adpcm.decodeIma(Adpcm.encodeIma(pcm, 256), 256, 700)
-    assert(ima.zip(direct).forall { case (d, s) => d == s / 32768.0 })
-  }
 }

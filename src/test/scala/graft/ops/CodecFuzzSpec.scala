@@ -15,24 +15,10 @@ class CodecFuzzSpec extends AnyFunSuite {
     Gif.decode(bytes)
     Gif.decodeFrames(bytes)
     Gif.countFrames(bytes)
-    Jpeg.decode(bytes)
-    Multimodal.imageHeaderMeta(bytes)
-    Multimodal.avHeaderMeta(bytes)
-    Multimodal.wavSamples(bytes)
-    Multimodal.decodeMeta(bytes)
     graft.sink.TarShards.tarEntries(bytes)
-    Avi.headerMeta(bytes)
-    Avi.decodeFrames(bytes)
-    Avi.countFrames(bytes)
-    Avi.fps(bytes)
-    Multimodal.resizeMedia(bytes, 2)
-    Multimodal.sampleFrames(bytes, 3)
     Adpcm.decodeIma(bytes, blockAlign = 8)
     Adpcm.decodeIma(bytes, blockAlign = 256)
     Adpcm.muLawDecodeAll(bytes)
-    Flac.decode(bytes)
-    Flac.flacSamples(bytes)
-    Multimodal.audioSamples(bytes)
   }
 
   test("random garbage never throws in any decoder") {
@@ -66,7 +52,6 @@ class CodecFuzzSpec extends AnyFunSuite {
       Png.encode(img),
       Gif.encode(Png.Image(8, 8, 3,
         Array.tabulate(8 * 8 * 3)(i => (((i / 3) % 4) * 60).toByte))),
-      Jpeg.encode(img, quality = 90),
       graft.sink.TarShards.tarBytes(Seq("a.txt" -> "hello".getBytes)))
     for (v <- valid) {
       for (_ <- 1 to 100) { // single random bit flip
@@ -87,29 +72,9 @@ class CodecFuzzSpec extends AnyFunSuite {
   }
 
   test("crafted huge declared dimensions are rejected before allocation") {
-    // a tiny file declaring 26000x26000 must not force a ~2 GB plane /
-    // canvas allocation per task — one adversarial row would OOM
+    // a tiny file declaring a 65535x65535 screen must not force a
+    // multi-GB canvas allocation per task — one adversarial row would OOM
     // executors deterministically across retries
-    val px = Array.tabulate(16 * 12 * 3)(i => (i * 31 % 256).toByte)
-    val jpg = Jpeg.encode(Png.Image(16, 12, 3, px), quality = 90)
-    // patch SOF0 height/width (big-endian at marker offset +5 / +7)
-    var sof = -1
-    var i = 2
-    while (sof < 0 && i + 4 < jpg.length) {
-      if ((jpg(i) & 0xff) == 0xff && (jpg(i + 1) & 0xff) == 0xc0) sof = i
-      else if ((jpg(i) & 0xff) == 0xff) {
-        val len = ((jpg(i + 2) & 0xff) << 8) | (jpg(i + 3) & 0xff)
-        i += 2 + len
-      } else i += 1
-    }
-    assert(sof > 0, "SOF0 not found in own encoder output")
-    val huge = jpg.clone()
-    huge(sof + 5) = 0x65; huge(sof + 6) = 0x90.toByte // height 26000
-    huge(sof + 7) = 0x65; huge(sof + 8) = 0x90.toByte // width  26000
-    val t0 = System.nanoTime()
-    assert(Jpeg.decode(huge).isEmpty)
-    assert((System.nanoTime() - t0) / 1e9 < 5.0, "rejection must be fast")
-
     val gif = Gif.encode(Png.Image(8, 8, 3,
       Array.tabulate(8 * 8 * 3)(i => (((i / 3) % 4) * 60).toByte)))
     val hugeGif = gif.clone()

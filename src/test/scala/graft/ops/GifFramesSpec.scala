@@ -70,19 +70,6 @@ class GifFramesSpec extends AnyFunSuite {
       == ((255, 0, 0)))
   }
 
-  test("frameSample picks evenly-spaced frames; Multimodal emits PNGs") {
-    val gif = animatedGif(5)
-    val two = Gif.frameSample(gif, 2).get
-    assert(two.length == 2)
-    assert(two(0).sample(0, 0, 0) == 255) // frame 0: red
-    assert(two(1).sample(0, 0, 2) == 255) // frame 2 (index 1*5/2): blue
-    val pngs = Multimodal.sampleFrames(gif, 2)
-    assert(pngs.length == 2)
-    pngs.foreach(p => assert(Png.decode(p).exists(i => i.width == 8)))
-    // non-GIF bytes fall back to the declared stub
-    assert(Multimodal.sampleFrames(Array[Byte](1, 2, 3, 4), 2).nonEmpty)
-  }
-
   test("malformed streams: None, never throw; truncated LZW rejected") {
     assert(Gif.decodeFrames(null).isEmpty)
     assert(Gif.decodeFrames("GIF8".getBytes).isEmpty)

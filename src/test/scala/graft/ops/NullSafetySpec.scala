@@ -48,30 +48,8 @@ class NullSafetySpec extends SparkSpec {
       .count() == 4) // empty benchmark contaminates nothing
   }
 
-  test("multimodal decode survives null/empty binary") {
-    assert(Multimodal.decodeMeta(null)._1 == "empty")
-    assert(Multimodal.decodeMeta(Array.emptyByteArray)._1 == "empty")
-    assert(Multimodal.imageHeaderMeta(Array[Byte](1, 2, 3)).isEmpty)
-    assert(Multimodal.avHeaderMeta(Array[Byte](1, 2, 3)).isEmpty)
-    // truncated containers must not throw
-    assert(Multimodal.imageHeaderMeta(
-      Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a, 0, 0)).isEmpty)
-    Multimodal.avHeaderMeta("RIFFxxxxWAVE".getBytes("US-ASCII"))
-  }
-
   test("malformed size fields terminate, never spin or throw") {
     def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
-    // RIFF/WAVE chunk with size 0xFFFFFFF8 — a non-advancing walk if
-    // unguarded (would hang the decodeMeta UDF on one corrupt row)
-    val badWav = "RIFF".getBytes ++ bytes(0, 0, 0, 0) ++ "WAVE".getBytes ++
-      "junk".getBytes ++ bytes(0xf8, 0xff, 0xff, 0xff) ++ bytes(1, 2, 3, 4)
-    assert(Multimodal.avHeaderMeta(badWav).isEmpty)
-    assert(Multimodal.wavSamples(badWav).isEmpty)
-    // MP4 box with a size in [2^31, 2^32) — negative after toInt
-    val badMp4 = bytes(0, 0, 0, 16) ++ "ftyp".getBytes ++
-      "isom".getBytes ++ bytes(0, 0, 0, 1) ++
-      bytes(0xff, 0xff, 0xff, 0xf0) ++ "moov".getBytes
-    assert(Multimodal.avHeaderMeta(badMp4).isEmpty)
     // PNG chunk whose length field walks the cursor backwards
     val badPng = bytes(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
       bytes(0xff, 0xff, 0xff, 0xf4) ++ "tEXt".getBytes ++ bytes(0, 0, 0, 0) ++

@@ -3,8 +3,8 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Dedup / Similarity / TextAnalysis / Multimodal operator semantics on
-  * hand-made inputs. */
+/** Dedup / Similarity / TextAnalysis operator semantics on hand-made
+  * inputs. */
 class OpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -448,98 +448,6 @@ class OpsSpec extends SparkSpec {
         .filter(not(col("a") <=> col("b"))).count()
       assert(n == 0, "codegen fingerprint diverges from the array form")
     }
-  }
-
-  test("multimodal: real PNG/JPEG/GIF header decode yields true dimensions") {
-    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
-    // PNG: signature + IHDR chunk, width=640 height=480
-    val png = bytes(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a,
-      0, 0, 0, 13, 'I', 'H', 'D', 'R',
-      0, 0, 0x02, 0x80, 0, 0, 0x01, 0xe0, 8, 6, 0, 0, 0)
-    // JPEG: SOI, APP0 (JFIF), SOF0 with height=100 width=200
-    val jpeg = bytes(0xff, 0xd8,
-      0xff, 0xe0, 0x00, 0x10, 'J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0,
-      0xff, 0xc0, 0x00, 0x11, 8, 0x00, 0x64, 0x00, 0xc8,
-      3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
-    // GIF89a: little-endian 320x200 logical screen
-    val gif = bytes('G', 'I', 'F', '8', '9', 'a',
-      0x40, 0x01, 0xc8, 0x00, 0xf7, 0, 0)
-    assert(Multimodal.imageHeaderMeta(png).contains(("png", 640, 480)))
-    assert(Multimodal.imageHeaderMeta(jpeg).contains(("jpeg", 200, 100)))
-    assert(Multimodal.imageHeaderMeta(gif).contains(("gif", 320, 200)))
-    assert(Multimodal.imageHeaderMeta("plain text".getBytes("UTF-8")).isEmpty)
-    // and through the Spark UDF path
-    val df = Seq((1L, png), (2L, jpeg), (3L, gif)).toDF("id", "media_bytes")
-    val m = Multimodal.withMediaMeta(df, "media_bytes")
-      .select(col("id"), col("media_meta.media_type"),
-        col("media_meta.width"), col("media_meta.height"))
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getInt(2), r.getInt(3))).toMap
-    assert(m(1L) == (("image", 640, 480)))
-    assert(m(2L) == (("image", 200, 100)))
-    assert(m(3L) == (("image", 320, 200)))
-  }
-
-  test("multimodal: real WAV/MP4 header decode yields true durations") {
-    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
-    // WAV: RIFF/WAVE, fmt chunk with byteRate=16000 B/s, data chunk 32000 B
-    // → 2000 ms
-    val wav = bytes('R', 'I', 'F', 'F', 0, 0, 0, 0, 'W', 'A', 'V', 'E',
-      'f', 'm', 't', ' ', 16, 0, 0, 0,
-      1, 0, 1, 0, 0x80, 0x3e, 0, 0, 0x80, 0x3e, 0, 0, 2, 0, 16, 0) ++
-      bytes('d', 'a', 't', 'a', 0x00, 0x7d, 0, 0) // 32000 LE
-    assert(Multimodal.avHeaderMeta(wav).contains(("wav", 2000L)))
-    // MP4: ftyp box then moov>mvhd v0 with timescale=600, duration=1800
-    // → 3000 ms
-    val ftyp = bytes(0, 0, 0, 16, 'f', 't', 'y', 'p',
-      'i', 's', 'o', 'm', 0, 0, 0, 1)
-    val mvhd = bytes(0, 0, 0, 28, 'm', 'v', 'h', 'd',
-      0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-      0, 0, 0x02, 0x58, 0, 0, 0x07, 0x08) // timescale 600, duration 1800
-    val moov = bytes(0, 0, 0, 8 + 28, 'm', 'o', 'o', 'v') ++ mvhd
-    assert(Multimodal.avHeaderMeta(ftyp ++ moov).contains(("mp4", 3000L)))
-    assert(Multimodal.avHeaderMeta("not media at all".getBytes("UTF-8")).isEmpty)
-    // through decodeMeta: typed as audio/video with duration populated
-    assert(Multimodal.decodeMeta(wav) == (("audio", wav.length.toLong, 0, 0, 2000L)))
-    val mp4 = ftyp ++ moov
-    assert(Multimodal.decodeMeta(mp4) == (("video", mp4.length.toLong, 0, 0, 3000L)))
-    // FLAC: STREAMINFO with sampleRate 44100, totalSamples 88200 → 2000 ms
-    val flac = bytes('f', 'L', 'a', 'C', 0x00, 0, 0, 34) ++
-      bytes(0x10, 0, 0x10, 0, 0, 0, 0, 0, 0, 0) ++ // block/frame sizes
-      bytes(0x0a, 0xc4, 0x42, // 44100 in 20 bits + channels/bps
-        0x00, 0x00, 0x01, 0x58, 0x88) ++ // bps low | samples 88200 (36-bit)
-      new Array[Byte](18)
-    assert(Multimodal.avHeaderMeta(flac).contains(("flac", 2000L)))
-    assert(Multimodal.decodeMeta(flac)._1 == "audio")
-    // MP3 CBR: MPEG1 Layer III 128 kbps frame header + 15996 byte body
-    // → 16000 bytes total = 1000 ms at 128 kbps
-    val mp3 = bytes(0xff, 0xfb, 0x90, 0x00) ++ new Array[Byte](15996)
-    assert(Multimodal.avHeaderMeta(mp3).contains(("mp3", 1000L)))
-    // the same stream behind an ID3v2 tag (syncsafe size 100)
-    val id3 = bytes('I', 'D', '3', 3, 0, 0, 0, 0, 0, 100) ++
-      new Array[Byte](100) ++ mp3
-    assert(Multimodal.avHeaderMeta(id3).exists(_._1 == "mp3"))
-    assert(Multimodal.decodeMeta(mp3)._1 == "audio")
-  }
-
-  test("multimodal: deterministic fake decode + feature extraction batches") {
-    val bin = Multimodal.synthesizeBinary(docs, "doc_id", "text")
-    val withMeta = Multimodal.withMediaMeta(bin, "media_bytes")
-    val m = withMeta.select("media_meta.*").collect()
-    m.foreach { r =>
-      assert(Seq("image", "audio", "video").contains(r.getAs[String]("media_type")))
-      assert(r.getAs[Long]("n_bytes") > 0)
-    }
-    val feats = Multimodal.extractFeatures(bin, "id", "media_bytes", dim = 8)
-    val f = feats.collect()
-    assert(f.length == 5)
-    f.foreach { r =>
-      val v = r.getSeq[Double](3)
-      assert(v.length == 8)
-      assert(math.abs(v.sum - 1.0) < 1e-9) // normalized histogram
-    }
-    // determinism across partitionings
-    val again = Multimodal.extractFeatures(bin.repartition(3), "id", "media_bytes", 8)
-    assert(again.exceptAll(feats).count() == 0)
   }
 
   test("chunkTokens: overlapping windows cover every token; tail is short") {

@@ -1,13 +1,10 @@
 package graft.ops
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
 
 /** Real PNG codec: encode/decode round-trip, all five scanline filters,
-  * real resample + histogram kernels, and the Spark feature path. */
-class PngSpec extends SparkSpec {
-  import spark.implicits._
-
+  * the luma histogram kernel, and GIF LZW round-trip and decoding. */
+class PngSpec extends AnyFunSuite {
   private def gradient(w: Int, h: Int, channels: Int): Png.Image = {
     val px = new Array[Byte](w * h * channels)
     for (y <- 0 until h; x <- 0 until w; c <- 0 until channels)
@@ -83,18 +80,6 @@ class PngSpec extends SparkSpec {
     assert(Png.decode(enc).isEmpty)
   }
 
-  test("real resize: nearest-neighbor halving picks expected pixels") {
-    val img = gradient(4, 4, 3)
-    val half = Png.resize(img, 2, 2)
-    assert(half.width == 2 && half.height == 2)
-    for (y <- 0 until 2; x <- 0 until 2; c <- 0 until 3)
-      assert(half.sample(x, y, c) == img.sample(x * 2, y * 2, c))
-    // end-to-end kernel: PNG in, smaller PNG out
-    val out = Multimodal.resizeMedia(Png.encode(img), 2)
-    val outImg = Png.decode(out).get
-    assert(outImg.width == 2 && outImg.height == 2)
-  }
-
   test("luma histogram: black/white checkerboard splits extreme bins") {
     val px = (0 until 16).map(i =>
       if ((i % 4 + i / 4) % 2 == 0) 0.toByte else 255.toByte).toArray
@@ -112,15 +97,9 @@ class PngSpec extends SparkSpec {
     val img = Png.Image(6, 4, 3, px)
     val gif = Gif.encode(img)
     assert(new String(gif.take(6), "US-ASCII") == "GIF89a")
-    // header metadata path agrees
-    assert(Multimodal.imageHeaderMeta(gif).contains(("gif", 6, 4)))
     val back = Gif.decode(gif).get
     assert(back.width == 6 && back.height == 4 && back.channels == 3)
     assert(back.pixels.sameElements(px))
-    // real kernels over GIF content
-    val resized = Multimodal.resizeMedia(gif, 2)
-    val r = Gif.decode(resized).get
-    assert(r.width == 3 && r.height == 2)
     assert(Gif.decode("GIF8 but junk".getBytes("UTF-8")).isEmpty)
   }
 
@@ -149,44 +128,5 @@ class PngSpec extends SparkSpec {
     assert(img.width == 4 && img.height == 1)
     val lumas = (0 until 4).map(x => img.luma(x, 0))
     assert(lumas == Seq(0, 255, 0, 255), s"got $lumas")
-  }
-
-  test("WAV PCM decode: real samples, RMS and zero-crossing features") {
-    // 16-bit mono PCM: a full-scale square wave alternating every sample
-    val n = 1000
-    val data = new java.io.ByteArrayOutputStream()
-    for (i <- 0 until n) {
-      val v = if (i % 2 == 0) 16384 else -16384 // half scale
-      data.write(v & 0xff); data.write((v >> 8) & 0xff)
-    }
-    val d = data.toByteArray
-    def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val wav = "RIFF".getBytes ++ le32(36 + d.length) ++ "WAVE".getBytes ++
-      "fmt ".getBytes ++ le32(16) ++ le16(1) ++ le16(1) ++ le32(16000) ++
-      le32(32000) ++ le16(2) ++ le16(16) ++
-      "data".getBytes ++ le32(d.length) ++ d
-    val samples = Multimodal.wavSamples(wav).get
-    assert(samples.length == n)
-    assert(math.abs(samples(0) - 0.5) < 1e-3)    // 16384/32768
-    val (cnt, rms, zcr) = Multimodal.wavFeatures(samples)
-    assert(cnt == n)
-    assert(math.abs(rms - 0.5) < 1e-3)           // constant magnitude
-    assert(math.abs(zcr - 1.0) < 2.0 / n)        // crosses every sample
-    assert(Multimodal.wavSamples("not audio".getBytes("UTF-8")).isEmpty)
-    // header-meta path agrees on duration: 1000 frames / 16kHz = 62 ms
-    assert(Multimodal.avHeaderMeta(wav).contains(("wav", 62L)))
-  }
-
-  test("Spark feature path: PNG rows get real pixel features") {
-    val img = gradient(8, 8, 3)
-    val df = Seq((1L, Png.encode(img)),
-      (2L, "plain text bytes".getBytes("UTF-8"))).toDF("id", "media_bytes")
-    val feats = Multimodal.extractFeatures(df, "id", "media_bytes", dim = 8)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getSeq[Double](3))).toMap
-    assert(feats(1L)._1 == "image")
-    assert(feats(1L)._2 == Png.lumaHistogram(img, 8).toSeq) // real pixels
-    assert(math.abs(feats(2L)._2.sum - 1.0) < 1e-9)         // fake fallback
   }
 }
