@@ -1,39 +1,36 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.SparkSessionExtensions
 
-/** Native Catalyst expressions for the hottest scalar predicates — the tier
-  * above a Scala UDF (SURVEY.md §7.4): no Row/Scala-object conversion, and
-  * `doGenCode` splices a static call straight into whole-stage-codegen'd
+/** Native Catalyst expressions for the hottest scalar string kernels — the
+  * tier above a Scala UDF (SURVEY.md §7.4): no Row/Scala-object conversion,
+  * and `doGenCode` splices a static call straight into whole-stage-codegen'd
   * stages instead of breaking the codegen region the way a UDF does.
   *
-  * Registered as SQL functions (`luhn_valid`, `iban_valid`, `is_placeholder`)
-  * either per-session via [[GraftFunctions.register]] or cluster-wide via
-  * `spark.sql.extensions=graft.expr.GraftExtensions`.
+  * Served as Columns: [[Placeholder.isPlaceholderFast]] and
+  * `Curation.normalizeTextCol`.
   */
 object NativeKernels {
   // static entry points referenced from generated code — must take/return
   // codegen-native types (UTF8String/boolean)
-  def luhnValid(s: UTF8String): Boolean = Checksums.luhnValid(s.toString)
-  def ibanValid(s: UTF8String): Boolean = Checksums.ibanValid(s.toString)
   def isPlaceholder(s: UTF8String): Boolean = Placeholder.isPlaceholder(s.toString)
   def normalizeText(s: UTF8String): UTF8String =
     UTF8String.fromString(TextNorm.normalize(s.toString))
 }
 
-// `Serializable` is load-bearing: a case class (Serializable) whose
-// nearest superclass has constructor params but is NOT serializable fails
-// Java DEserialization on executors with "no valid constructor" — the
-// driver-side LocalRelation fast path in unit tests never serializes the
-// plan, so only a real multi-task job exposes it.
-abstract class StringPredicateExpression(kernel: String)
+// `Serializable` is kept on both expressions below: a case class
+// (Serializable) whose nearest superclass has constructor params but is NOT
+// serializable fails Java DEserialization on executors with "no valid
+// constructor" — the driver-side LocalRelation fast path in unit tests
+// never serializes the plan, so only a real multi-task job exposes it.
+
+/** P5 as a codegen expression: `is_placeholder(str)` — single compiled call
+  * instead of the ~12-regex composed Column form. */
+case class IsPlaceholder(child: Expression)
     extends UnaryExpression with Serializable {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
@@ -41,41 +38,17 @@ abstract class StringPredicateExpression(kernel: String)
       s"$prettyName requires a string argument, got ${child.dataType}")
   override def dataType: DataType = BooleanType
   override protected def nullSafeEval(input: Any): Any =
-    kernel match {
-      case "luhnValid" => NativeKernels.luhnValid(input.asInstanceOf[UTF8String])
-      case "ibanValid" => NativeKernels.ibanValid(input.asInstanceOf[UTF8String])
-      case "isPlaceholder" => NativeKernels.isPlaceholder(input.asInstanceOf[UTF8String])
-    }
+    NativeKernels.isPlaceholder(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.NativeKernels.$kernel($c)")
-}
-
-/** V1 as a codegen expression: `luhn_valid(str)`. */
-case class LuhnValid(child: Expression) extends StringPredicateExpression("luhnValid") {
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "luhn_valid"
-}
-
-/** V3 as a codegen expression: `iban_valid(str)`. */
-case class IbanValid(child: Expression) extends StringPredicateExpression("ibanValid") {
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "iban_valid"
-}
-
-/** P5 as a codegen expression: `is_placeholder(str)` — single compiled call
-  * instead of the ~12-regex composed Column form. */
-case class IsPlaceholder(child: Expression) extends StringPredicateExpression("isPlaceholder") {
+    defineCodeGen(ctx, ev, c => s"graft.expr.NativeKernels.isPlaceholder($c)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "is_placeholder"
 }
 
 /** Unicode normalization as a codegen expression: `normalize_text(str)` —
-  * same kernel as the UDF twin in `graft.ops.Curation`, but spliced into
-  * the codegen region as a static call (no Row↔Scala conversion, no
-  * region break). */
+  * the [[TextNorm]] kernel spliced into the codegen region as a static call
+  * (no Row↔Scala conversion, no region break). */
 case class NormalizeText(child: Expression)
     extends UnaryExpression with Serializable {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -90,63 +63,4 @@ case class NormalizeText(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "normalize_text"
-}
-
-object GraftFunctions {
-  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("luhn_valid"),
-      new ExpressionInfo(classOf[LuhnValid].getName, "luhn_valid"),
-      (args: Seq[Expression]) => LuhnValid(args.head)),
-    (FunctionIdentifier("iban_valid"),
-      new ExpressionInfo(classOf[IbanValid].getName, "iban_valid"),
-      (args: Seq[Expression]) => IbanValid(args.head)),
-    (FunctionIdentifier("is_placeholder"),
-      new ExpressionInfo(classOf[IsPlaceholder].getName, "is_placeholder"),
-      (args: Seq[Expression]) => IsPlaceholder(args.head)),
-    (FunctionIdentifier("regex_matches"),
-      new ExpressionInfo(classOf[RegexMatchesExpr].getName, "regex_matches"),
-      (args: Seq[Expression]) => RegexMatchesExpr(args(0), args(1))),
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimExpr(args(0), args(1))),
-    (FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (args: Seq[Expression]) => NormalizeText(args.head)),
-    (FunctionIdentifier("lorem_words"),
-      new ExpressionInfo(classOf[LoremWordsExpr].getName, "lorem_words"),
-      (args: Seq[Expression]) => LoremWordsExpr(args(0), args(1), args(2))))
-
-  /** Register on an existing session (tests, notebooks). */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-}
-
-/** `spark.sql.extensions` entry point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    Seq(
-      (FunctionIdentifier("luhn_valid"),
-        new ExpressionInfo(classOf[LuhnValid].getName, "luhn_valid"),
-        (args: Seq[Expression]) => LuhnValid(args.head): Expression),
-      (FunctionIdentifier("iban_valid"),
-        new ExpressionInfo(classOf[IbanValid].getName, "iban_valid"),
-        (args: Seq[Expression]) => IbanValid(args.head): Expression),
-      (FunctionIdentifier("is_placeholder"),
-        new ExpressionInfo(classOf[IsPlaceholder].getName, "is_placeholder"),
-        (args: Seq[Expression]) => IsPlaceholder(args.head): Expression),
-      (FunctionIdentifier("regex_matches"),
-        new ExpressionInfo(classOf[RegexMatchesExpr].getName, "regex_matches"),
-        (args: Seq[Expression]) => RegexMatchesExpr(args(0), args(1)): Expression),
-      (FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
-        (args: Seq[Expression]) => CosineSimExpr(args(0), args(1)): Expression),
-      (FunctionIdentifier("normalize_text"),
-        new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-        (args: Seq[Expression]) => NormalizeText(args.head): Expression),
-      (FunctionIdentifier("lorem_words"),
-        new ExpressionInfo(classOf[LoremWordsExpr].getName, "lorem_words"),
-        (args: Seq[Expression]) => LoremWordsExpr(args(0), args(1), args(2)): Expression))
-      .foreach(ext.injectFunction)
 }

@@ -2,8 +2,6 @@ package graft.expr
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.regex.Pattern
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** One match of a SIT regex against a document, with position + context.
   * Mirrors the tuple built at `modules/validator.py:278-287`. */
@@ -13,10 +11,10 @@ case class RegexMatch(value: String, start: Int, excerpt: String)
   *
   * `regexp_extract_all` covers values but not positions/excerpts
   * (`modules/validator.py:278-287`), so this is the one genuinely custom
-  * scalar function in the engine (SURVEY.md §2.8 P2). Implemented as a Scala
-  * UDF returning `array<struct<value,start,excerpt>>`; patterns are compiled
-  * once per executor via a concurrent cache, never per row
-  * (the reference's fallback script recompiles per row —
+  * scalar function in the engine (SURVEY.md §2.8 P2). This is its kernel;
+  * [[RegexMatchesExpr]] serves it as `array<struct<value,start,excerpt>>`.
+  * Patterns are compiled once per executor via a concurrent cache, never
+  * per row (the reference's fallback script recompiles per row —
   * `show_sit_samples.py:68`).
   *
   * Flags match `modules/validator.py:49`: MULTILINE | CASE_INSENSITIVE.
@@ -53,10 +51,4 @@ object RegexMatches {
         out.result()
     }
   }
-
-  private val matchesUdf =
-    udf((text: String, regex: String) => findMatches(text, regex))
-
-  /** `array<struct<value:string,start:int,excerpt:string>>` column. */
-  def regexMatches(text: Column, regex: Column): Column = matchesUdf(text, regex)
 }

@@ -68,12 +68,11 @@ object Attribution {
     creditRollup(joined)
   }
 
-  /** Credit math over materialized (conversion, touch) pairs — shared by
-    * the batch path above and the streaming interval join
-    * ([[graft.streaming.StreamingAttribution]]), so the two legs cannot
-    * drift. `pairs` needs conv_id, cents, channel, touch_ts (any ordered
-    * type), touch_id. */
-  def creditRollup(pairs: DataFrame): DataFrame = {
+  /** Credit math over materialized (conversion, touch) pairs, kept apart
+    * from the interval join above so all three credit models read one
+    * set of pairs. `pairs` needs conv_id, cents, channel, touch_ts (any
+    * ordered type), touch_id. */
+  private def creditRollup(pairs: DataFrame): DataFrame = {
     // one partitioning serves all three models — and ONE window SORT
     // (r16): the former descending `last` window re-sorted every
     // conversion's touches a second time, but last-touch is just

@@ -333,19 +333,14 @@ object Curation {
     * the algorithm and the DuckDB-parity contract. */
   def normalizeText(s: String): String = graft.expr.TextNorm.normalize(s)
 
-  private val normalizeUdf = udf(normalizeText _)
-
   /** Normalized text, served by the NATIVE codegen expression
     * (`normalize_text`): the kernel is spliced into the codegen region as
     * a static call — no Row↔Scala conversion, no region break (same
-    * pattern as `cosine_sim`). UDF twin below, spec-pinned identical. */
+    * pattern as `cosine_sim`). */
   def normalizeTextCol(text: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.expr.NormalizeText(
         org.apache.spark.sql.GraftColumnBridge.expression(text)))
-
-  /** UDF twin of [[normalizeTextCol]] (proof twin; not a serving path). */
-  private[ops] def normalizeTextUdfCol(text: Column): Column = normalizeUdf(text)
 
   /** Temperature-weighted domain rebalancing (α = 0.5 — the "square-root
     * sampling" mix multilingual-corpus work uses to up-weight tail

@@ -942,7 +942,7 @@ object Dedup {
     // The passthrough leg RETAINS the r9 kernel/pack work and still beats
     // the r8 bench medians, so the exchange was the whole regression,
     // not the kernel swap. `docParts = 0` therefore
-    // consults plan statistics the way `ParquetSink.writeSized` does and
+    // consults the doc frame's plan statistics (`sizeInBytes`) and
     // repartitions only when the doc frame's estimated bytes reach
     // [[DocRepartitionMinBytes]] (64 MB — post-explode that is ~1.3 GB
     // packed across a 32-split scan, still comfortably inside write
@@ -1338,9 +1338,9 @@ object Dedup {
 
   /** Incremental substring-level exact dedup: [[repeatedSpans]] for an
     * ARRIVING batch against a persisted base corpus, without re-shingling
-    * the base — the lane that closes the dedup suite's last batch-only
-    * asymmetry (StreamingDedup gates exact content hashes at ingest;
-    * span-level detection was batch-only before this).
+    * the base — the lane that makes span-level detection incremental
+    * ([[graft.streaming.StreamingSpanDedup]] drives it per micro-batch;
+    * it was batch-only before this).
     *
     * Contract: `baseOcc` carries the base corpus's per-shingle occurrence
     * counts built with the SAME `n` — either [[shingleOccurrenceTable]]

@@ -85,6 +85,27 @@ object Validator {
     slice(array_distinct(displays), 1, 5)
   }
 
+  /** The verdict rule of both validators ([[verdicts]] and
+    * `StreamingValidator.windowedReport`), as columns over assignment rows
+    * that carry the SIT's `regex`, the document `text`, `label` and
+    * `instances`. */
+  private[graft] object Verdict {
+    /** P2 — the regex matches; none without a regex or a text. */
+    def matches: Column = when(
+      col("regex").isNotNull && col("regex") =!= "" && col("text").isNotNull,
+      graft.expr.RegexMatchesExpr.regexMatchesNative(col("text"), col("regex")))
+      .otherwise(array().cast("array<struct<value:string,start:int,excerpt:string>>"))
+    /** P5 — the count of `matches` that are not placeholders. */
+    def foundReal: Column = size(filter(col("matches"),
+      m => !Placeholder.isPlaceholderFast(m.getField("value"))))
+    /** The matches a TP row needs. */
+    def need: Column = greatest(lit(1), col("instances"))
+    /** A TP row with at least `need` real matches (reads `found_real`). */
+    def tpOk: Column = col("label") === "TP" && col("found_real") >= need
+    /** A non-TP row with a real match (reads `found_real`). */
+    def fpFlagged: Column = col("label") =!= "TP" && col("found_real") > 0
+  }
+
   /** Per-(doc, sit) verdicts, the narrow hot path: `sit_id, doc_id,
     * instances, tp_ok, fp_flagged` and `issue`, the A10/W3 issue line of a
     * TP row short of matches or a flagged FP row (null on every other row;
@@ -93,15 +114,10 @@ object Validator {
     * corpus scan instead of per-row file IO. */
   def verdicts(assignments: DataFrame, corpus: DataFrame,
                sitDim: DataFrame): DataFrame = {
-    val matches = when(
-      col("regex").isNotNull && col("regex") =!= "" && col("text").isNotNull,
-      graft.expr.RegexMatchesExpr.regexMatchesNative(col("text"), col("regex")))
-      .otherwise(array().cast("array<struct<value:string,start:int,excerpt:string>>"))
-    val foundReal = size(filter(col("matches"),
-      m => !Placeholder.isPlaceholderFast(m.getField("value"))))
-    val need = greatest(lit(1), col("instances"))
-    val tpOk = col("label") === "TP" && col("found_real") >= need
-    val fpFlagged = col("label") =!= "TP" && col("found_real") > 0
+    import Verdict.{fpFlagged, need, tpOk}
+    // built before `sample`: lambda variables are numbered in build order,
+    // and this order keeps the plan's names
+    val foundReal = Verdict.foundReal
     val sample = sampleCol(col("matches")).cast("string")
     val issue =
       when(col("label") === "TP" && !tpOk, format_string(
@@ -115,7 +131,7 @@ object Validator {
         Seq("sit_id"), "left")
       .join(corpus, Seq("filename"), "left")
       .select(col("sit_id"), col("doc_id"), col("filename"), col("label"),
-        col("instances"), matches.as("matches"))
+        col("instances"), Verdict.matches.as("matches"))
       .select(col("*"), foundReal.as("found_real"))
       .select(col("sit_id"), col("doc_id"), col("instances"), tpOk.as("tp_ok"),
         fpFlagged.as("fp_flagged"), issue.as("issue"))

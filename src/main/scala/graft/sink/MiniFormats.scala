@@ -44,6 +44,8 @@ object MiniFormats {
     bos.toByteArray
   }
 
+  /** The named entry's bytes; None when it is absent or the archive is
+    * malformed (bad headers, truncated or corrupt deflate data). */
   private def unzipEntry(bytes: Array[Byte], name: String): Option[Array[Byte]] = {
     val zis = new ZipInputStream(new ByteArrayInputStream(bytes))
     try {
@@ -59,6 +61,8 @@ object MiniFormats {
         e = zis.getNextEntry
       }
       None
+    } catch {
+      case _: java.io.IOException | _: IllegalArgumentException => None
     } finally zis.close()
   }
 
@@ -157,6 +161,17 @@ object MiniFormats {
     s.replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
       .replace("&apos;", "'").replace("&amp;", "&")
 
+  /** Columns A..XFD, the OOXML sheet width. */
+  private val MaxXlsxColumns = 16384
+
+  /** Zero-based column of a cell reference's letters (`A` → 0), or -1 for
+    * a column past `XFD`. */
+  private def columnIndex(letters: String): Int = {
+    val i = if (letters.length > 3) MaxXlsxColumns
+      else letters.foldLeft(0)((a, ch) => a * 26 + (ch - 'A' + 1)) - 1
+    if (i < MaxXlsxColumns) i else -1
+  }
+
   /** Rows of cells (S7 scan). Reads BOTH dialects: our own inline-string
     * output (inverse of [[xlsxBytes]]) and externally-produced workbooks in
     * the shared-strings + cell-reference style (openpyxl/Excel — the
@@ -184,19 +199,22 @@ object MiniFormats {
             val attrs = c.group(1)
             val body = Option(c.group(2)).getOrElse("")
             val colIdx = "r=\"([A-Z]+)[0-9]+\"".r.findFirstMatchIn(attrs)
-              .map(_.group(1).foldLeft(0)((a, ch) => a * 26 + (ch - 'A' + 1)) - 1)
-              .getOrElse(cells.length)
-            while (cells.length <= colIdx) cells += ""
-            cells(colIdx) =
-              if (attrs.contains("t=\"s\""))
-                "<v>([0-9]+)</v>".r.findFirstMatchIn(body)
-                  // unresolvable reference (missing/under-parsed
-                  // sharedStrings) degrades to "" like every other
-                  // malformed-input path in this reader
-                  .flatMap(m => shared.lift(m.group(1).toInt)).getOrElse("")
-              else if (attrs.contains("t=\"inlineStr\"")) inlineText(body)
-              else "(?s)<v>(.*?)</v>".r.findFirstMatchIn(body)
-                .map(m => xmlUnescape(m.group(1))).getOrElse(inlineText(body))
+              .map(m => columnIndex(m.group(1))).getOrElse(cells.length)
+            // a reference past the last sheet column drops its cell
+            if (colIdx >= 0) {
+              while (cells.length <= colIdx) cells += ""
+              cells(colIdx) =
+                if (attrs.contains("t=\"s\""))
+                  "<v>([0-9]+)</v>".r.findFirstMatchIn(body)
+                    // unresolvable reference (missing/under-parsed
+                    // sharedStrings, an index past Int) degrades to ""
+                    // like every other malformed-input path in this reader
+                    .flatMap(m => m.group(1).toIntOption.flatMap(shared.lift))
+                    .getOrElse("")
+                else if (attrs.contains("t=\"inlineStr\"")) inlineText(body)
+                else "(?s)<v>(.*?)</v>".r.findFirstMatchIn(body)
+                  .map(m => xmlUnescape(m.group(1))).getOrElse(inlineText(body))
+            }
           }
         cells.toSeq
       }.toSeq

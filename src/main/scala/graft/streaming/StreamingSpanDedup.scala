@@ -14,9 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Why `foreachBatch` and not `mapGroupsWithState`: the lane's state is
   * the per-shingle occurrence table — DISTINCT-SHINGLE-sized, i.e.
   * corpus-proportional. Corpus-sized state belongs in a relation that
-  * shuffles/persists on 8-byte keys, not in executor state-store memory
-  * (contrast [[StreamingDedup]], whose per-content-hash state is bounded
-  * by the watermark horizon and so fits the state store). The price is
+  * shuffles/persists on 8-byte keys, not in executor state-store memory,
+  * which suits only state a watermark horizon bounds (say, one entry per
+  * content hash seen within the last window). The price is
   * micro-batch (not per-row) latency — the right trade for an operator
   * whose unit of work is a corpus-wide threshold.
   *

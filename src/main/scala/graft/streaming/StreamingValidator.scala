@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-import graft.expr.{Placeholder, RegexMatches}
 import graft.pipeline.Validator
 
 /** Structured Streaming extension (SURVEY.md §2.9 / §7.3 step 7).
@@ -40,25 +39,20 @@ object StreamingValidator {
   def windowedReport(mapping: DataFrame, sitDim: DataFrame,
                      windowLength: String = "10 minutes",
                      watermarkDelay: String = "5 minutes"): DataFrame = {
+    import Validator.Verdict
     // carry event-time + text through the explode — a stream-stream
     // self-join is unsupported, and unnecessary
-    val assignments = Validator.explodeAssignments(
-      mapping.select("doc_id", "created_at", "text",
-        "sit_ids", "labels", "instances"),
-      carry = Seq("created_at", "text"))
-    val joined = assignments
+    Validator.explodeAssignments(
+        mapping.select("doc_id", "created_at", "text",
+          "sit_ids", "labels", "instances"),
+        carry = Seq("created_at", "text"))
       .join(broadcast(sitDim.select(col("id").as("sit_id"), col("regex"))),
         Seq("sit_id"), "left")
-    val matches = when(
-      col("regex").isNotNull && col("regex") =!= "" && col("text").isNotNull,
-      graft.expr.RegexMatchesExpr.regexMatchesNative(col("text"), col("regex")))
-      .otherwise(array().cast("array<struct<value:string,start:int,excerpt:string>>"))
-    joined
-      .withColumn("found_real",
-        size(filter(matches, m => !Placeholder.isPlaceholderCol(m.getField("value")))))
-      .withColumn("tp_ok",
-        col("label") === "TP" && col("found_real") >= greatest(lit(1), col("instances")))
-      .withColumn("fp_flagged", col("label") =!= "TP" && col("found_real") > 0)
+      .select(col("created_at"), col("sit_id"), col("label"), col("instances"),
+        Verdict.matches.as("matches"))
+      .select(col("*"), Verdict.foundReal.as("found_real"))
+      .select(col("created_at"), col("sit_id"), col("instances"),
+        Verdict.tpOk.as("tp_ok"), Verdict.fpFlagged.as("fp_flagged"))
       .withWatermark("created_at", watermarkDelay)
       .groupBy(window(col("created_at"), windowLength), col("sit_id"))
       .agg(

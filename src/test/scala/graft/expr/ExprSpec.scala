@@ -45,10 +45,10 @@ class ExprSpec extends SparkSpec {
     assert(RegexMatches.findMatches("x", "").isEmpty)
   }
 
-  test("RegexMatches UDF column returns struct array") {
+  test("RegexMatches native column returns struct array") {
     import spark.implicits._
     val df = Seq(("a1b2", "\\d")).toDF("t", "p")
-      .select(RegexMatches.regexMatches(col("t"), col("p")).as("m"))
+      .select(RegexMatchesExpr.regexMatchesNative(col("t"), col("p")).as("m"))
     val row = df.collect()(0).getSeq[org.apache.spark.sql.Row](0)
     assert(row.map(_.getString(0)) == Seq("1", "2"))
     assert(row.map(_.getInt(1)) == Seq(1, 3))

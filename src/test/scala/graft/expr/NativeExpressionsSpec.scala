@@ -3,33 +3,22 @@ package graft.expr
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Native codegen expressions registered as SQL functions. */
+/** Native codegen expressions, served as Columns. */
 class NativeExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("luhn_valid / iban_valid / is_placeholder work from SQL and codegen") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      """SELECT luhn_valid('4539148803436467') AS a,
-                luhn_valid('4539148803436466') AS b,
-                iban_valid('GB82WEST12345698765432') AS c,
-                is_placeholder('XXX-XX-XXXX') AS d,
-                is_placeholder('841-269-960') AS e""").collect()(0)
-    assert(r.getBoolean(0) && !r.getBoolean(1) && r.getBoolean(2) &&
-      r.getBoolean(3) && !r.getBoolean(4))
-    // exercised over a DataFrame (whole-stage codegen path, nulls included)
-    val df = Seq(Some("4539148803436467"), Some("junk"), None).toDF("v")
-      .selectExpr("v", "luhn_valid(v) AS ok", "is_placeholder(v) AS ph")
+  test("is_placeholder: null-safe, agrees with the composed Column form") {
+    val df = Seq(Some("XXX-XX-XXXX"), Some("841-269-960"), None).toDF("v")
+      .select(Placeholder.isPlaceholderFast(col("v")).as("ph"))
     val rows = df.collect()
-    assert(rows(0).getBoolean(1) && !rows(1).getBoolean(1))
-    assert(rows(2).isNullAt(1)) // null-safe
+    assert(rows(0).getBoolean(0) && !rows(1).getBoolean(0))
+    assert(rows(2).isNullAt(0)) // null-safe
     // agreement with the composed Column form of P5 on generated values
     val vals = (1L to 200L).map(k =>
       graft.pipeline.SitValues.value("SIT_CCN", "Credit Card Number",
         if (k % 2 == 0) "TP" else "FP", k, 0)).toDF("v")
-    GraftFunctions.register(spark)
     val disagree = vals
-      .withColumn("native", expr("is_placeholder(v)"))
+      .withColumn("native", Placeholder.isPlaceholderFast(col("v")))
       .withColumn("composed", Placeholder.isPlaceholderCol(col("v")))
       .filter(col("native") =!= col("composed")).count()
     assert(disagree == 0)
@@ -80,10 +69,5 @@ class NativeExpressionsSpec extends SparkSpec {
       .toDF("a", "b")
     assert(withNull.select(
       graft.ops.Similarity.cosineCol(col("a"), col("b"))).collect()(0).isNullAt(0))
-    // registered for SQL users
-    GraftFunctions.register(spark)
-    assert(spark.sql(
-      "SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D))")
-      .collect()(0).getDouble(0) == 1.0)
   }
 }

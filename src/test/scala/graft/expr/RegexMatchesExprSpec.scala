@@ -3,25 +3,28 @@ package graft.expr
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Native regex_matches ≡ the UDF form, inside codegen. */
+/** Native regex_matches ≡ the `findMatches` kernel, inside codegen. */
 class RegexMatchesExprSpec extends SparkSpec {
   import spark.implicits._
 
-  test("native expression agrees with the UDF on corpus-like data") {
+  test("native expression agrees with findMatches on corpus-like data") {
     val df = Seq(
       ("pay 5133 2181 9600 1338 now", "\\b\\d{4}( \\d{4}){3}\\b"),
       ("Ssn: 1\nssn: 2", "^ssn: (\\d+)$"),
       ("no hits here", "\\d{9}"),
       (null.asInstanceOf[String], "x"))
       .toDF("text", "pattern")
-    val both = df.select(
-      RegexMatches.regexMatches(col("text"), col("pattern")).as("viaUdf"),
-      RegexMatchesExpr.regexMatchesNative(col("text"), col("pattern")).as("viaExpr"))
-    both.collect().foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1) ||
-        (r.isNullAt(1) && r.getSeq[Any](0).isEmpty)) // UDF returns [] for null, expr null
-      if (!r.isNullAt(0) && !r.isNullAt(1))
-        assert(r.getSeq[org.apache.spark.sql.Row](0) == r.getSeq[org.apache.spark.sql.Row](1))
+    val rows = df.select(col("text"), col("pattern"),
+      RegexMatchesExpr.regexMatchesNative(col("text"), col("pattern")).as("m"))
+      .collect()
+    rows.foreach { r =>
+      if (r.isNullAt(0)) assert(r.isNullAt(2), "null text must give null")
+      else {
+        val want = RegexMatches.findMatches(r.getString(0), r.getString(1))
+        val got = r.getSeq[org.apache.spark.sql.Row](2)
+          .map(m => RegexMatch(m.getString(0), m.getInt(1), m.getString(2)))
+        assert(got == want, s"on '${r.getString(0)}'")
+      }
     }
     // position/excerpt semantics preserved end to end
     val one = df.limit(1).select(

@@ -183,22 +183,17 @@ class CurationSpec extends SparkSpec {
     assert(got == "cafe n")
   }
 
-  test("normalize_text native expression matches the UDF twin on real tasks") {
+  test("normalize_text native expression matches TextNorm.normalize on real tasks") {
     // parquet-backed (multi-task serialization path — LocalRelation-only
     // tests evaluate driver-side and would mask a non-serializable expr)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("t", concat(lit("Café Ångström — ﬁ "), col("text")))
-    val diff = docs.select(
-        Curation.normalizeTextCol(col("t")).as("a"),
-        Curation.normalizeTextUdfCol(col("t")).as("b"))
-      .filter(col("a") =!= col("b") || col("a").isNull =!= col("b").isNull)
-      .count()
-    assert(diff == 0)
-    // and through the SQL registration
-    graft.expr.GraftFunctions.register(spark)
-    val viaSql = spark.sql(
-      "SELECT normalize_text('Café—ﬁn  x') AS n").collect()(0).getString(0)
-    assert(viaSql == "cafe n x")
+    val rows = docs.select(col("t"), Curation.normalizeTextCol(col("t")).as("n"))
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getString(1) == graft.expr.TextNorm.normalize(r.getString(0)))
+    }
   }
 
   test("sqrtQuotaMix: per-domain quota floor(scale*sqrt(n)), deterministic") {
@@ -215,5 +210,24 @@ class CurationSpec extends SparkSpec {
     // arrival order)
     val again = Curation.sqrtQuotaMix(df.repartition(7), "id", "dom", 3.0)
     assert(out.select("id").exceptAll(again.select("id")).count() == 0)
+  }
+
+  test("stratified sample: deterministic, proportions honored") {
+    import spark.implicits._
+    val df = spark.range(100000)
+      .withColumn("stratum", when(col("id") % 2 === 0, "keep_half")
+        .otherwise("keep_tenth"))
+    val sampled = graft.ops.Curation.stratifiedSample(df, "id", "stratum",
+      Map("keep_half" -> 500, "keep_tenth" -> 100))
+    val counts = sampled.groupBy("stratum").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(math.abs(counts("keep_half") - 25000L) < 1500,
+      s"keep_half ${counts("keep_half")}")
+    assert(math.abs(counts("keep_tenth") - 5000L) < 800,
+      s"keep_tenth ${counts("keep_tenth")}")
+    // exact determinism across partitionings
+    val again = graft.ops.Curation.stratifiedSample(df.repartition(7),
+      "id", "stratum", Map("keep_half" -> 500, "keep_tenth" -> 100))
+    assert(again.exceptAll(sampled).count() == 0)
   }
 }

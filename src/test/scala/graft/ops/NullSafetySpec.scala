@@ -48,19 +48,27 @@ class NullSafetySpec extends SparkSpec {
       .count() == 4) // empty benchmark contaminates nothing
   }
 
-  test("malformed size fields terminate, never spin or throw") {
-    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
-    // PNG chunk whose length field walks the cursor backwards
-    val badPng = bytes(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
-      bytes(0xff, 0xff, 0xff, 0xf4) ++ "tEXt".getBytes ++ bytes(0, 0, 0, 0) ++
-      new Array[Byte](40)
-    assert(Png.decode(badPng).isEmpty)
-  }
-
   test("format readers survive garbage bytes") {
     assert(graft.sink.MiniFormats.pdfText("not a pdf".getBytes("UTF-8")) == "")
     assert(graft.sink.MiniFormats.xlsxRows("not a zip".getBytes("UTF-8")).isEmpty)
     assert(graft.sink.MiniFormats.docxText("junk".getBytes("UTF-8")) == "")
+    // well-formed zips around malformed sheets: a shared-string index past
+    // Int, and column references past XFD (6 letters would pad ~321M cells,
+    // 7 overflow Int); each bad cell degrades to ""
+    def workbook(row: String): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val zos = new java.util.zip.ZipOutputStream(bos)
+      zos.putNextEntry(new java.util.zip.ZipEntry("xl/worksheets/sheet1.xml"))
+      zos.write(s"<worksheet><sheetData>$row</sheetData></worksheet>".getBytes("UTF-8"))
+      zos.close()
+      bos.toByteArray
+    }
+    assert(graft.sink.MiniFormats.xlsxRows(workbook(
+      """<row r="1"><c r="A1" t="s"><v>99999999999</v></c></row>""")) == Seq(Seq("")))
+    assert(graft.sink.MiniFormats.xlsxRows(workbook(
+      """<row r="1"><c r="A1" t="inlineStr"><is><t>ok</t></is></c>""" +
+        """<c r="ZZZZZZ1"><v>1</v></c><c r="ZZZZZZZ1"><v>2</v></c></row>""")) ==
+      Seq(Seq("ok")))
   }
 
   test("new curation/chunk/PQ ops survive null/empty rows") {

@@ -47,28 +47,6 @@ class StreamingValidatorSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming dedup: first arrival wins, watermark bounds state") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String, Timestamp)]
-    val t = Timestamp.valueOf("2026-01-01 10:00:00")
-    val deduped = StreamingDedup.dedupStream(
-      stream.toDF().toDF("doc_id", "text", "created_at"),
-      "text", "created_at", "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      stream.addData((1L, "same text", t), (2L, "same text", t),
-        (3L, "other text", t))
-      q.processAllAvailable()
-      // second arrival of "same text" in a later batch, still in horizon
-      stream.addData((4L, "same text", Timestamp.valueOf("2026-01-01 10:05:00")))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(ids == Set(1L, 3L), s"got $ids")
-    } finally q.stop()
-  }
-
   test("file-source round-trip at reference-corpus scale converges to batch") {
     import graft.pipeline.{ContentGen, MetaGen, Validator}
     // perSit=100 ≈ the reference's full corpus (~1,500 docs) — the same
