@@ -447,10 +447,7 @@ object ScaleRun {
       // at this batch:bucket ratio (69M keys over 64 buckets touches
       // every bucket — the full read IS the pruned read; the inc-serve
       // rows below measure the regime where pruning bites), so the full
-      // read keeps this row comparable. The bloomKeys runtime-filter
-      // option was A/B'd here in r11 and LOST on this box (112.8 vs
-      // 40.1 s — single-JVM wire is memory bandwidth; see the option's
-      // scaladoc for the regime where it wins).
+      // read keeps this row comparable.
       val (shEx, counts) = graft.ops.Dedup.prepareIncrementalBatch(
         batch, "doc_id", "text", n = 10)
       incPrepared = Some((shEx, counts))

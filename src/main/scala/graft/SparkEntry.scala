@@ -1501,51 +1501,31 @@ object SparkEntry {
       .orderBy("query_id", "rank")
   }
 
-  /** ANN serving through BOTH append-compaction paths (r14/r15,
-    * [[graft.ops.VectorIndex.compactAppends]] — the fold that bounds a
-    * long-running ingest cadence's directory growth): the base drops
-    * three tenths (every stride-50 codebook row has vec_id % 10 = 0, so
-    * the frozen codebook still equals the full-corpus one); append 0 is
-    * folded PHYSICALLY (a file move under the frozen codebook) and then
-    * REPLAYED (must be a tombstoned no-op — re-landing it would
-    * duplicate every row); append 1 is folded LOGICALLY (the rename-free
-    * object-store variant — meta-only commit, the dir keeps serving in
-    * place) and replayed too; append 2 lands live and is then folded by
-    * COPY-THEN-COMMIT together with the logically-folded dir (r16 — the
-    * no-rename mode that also bounds directory count) and replayed as a
-    * third tombstoned no-op. The oracle is q46's single-shot IVF SQL
-    * verbatim: a hash match proves each of the THREE fold modes
-    * moved/copied/kept every row exactly once, every tombstone swallowed
-    * its replay, and post-compaction appends still serve. */
+  /** ANN serving through the append fold
+    * ([[graft.ops.VectorIndex.compactAppends]] — copy-then-commit, the
+    * fold that bounds a long-running ingest cadence's directory growth):
+    * the base drops three tenths (every stride-50 codebook row has
+    * vec_id % 10 = 0, so the frozen codebook still equals the
+    * full-corpus one); each tenth is appended, folded, and then REPLAYED
+    * (must be a tombstoned no-op — re-landing it would duplicate every
+    * row). The second and third folds copy the previous merged dir
+    * together with the new append. The oracle is q46's single-shot IVF
+    * SQL verbatim: a hash match proves every fold copied every row
+    * exactly once, every tombstone swallowed its replay, and post-fold
+    * appends still serve. */
   private def q105(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val idxPath = MemoParquet(s"q105_ivf_compact2:$dir") { out =>
+    val idxPath = MemoParquet(s"q105_ivf_compact:$dir") { out =>
       VectorIndex.buildIvf(
         emb.filter(col("vec_id") % 10 =!= 3 && col("vec_id") % 10 =!= 7 &&
           col("vec_id") % 10 =!= 9),
         out, centroidStride = 50)
-      VectorIndex.appendToIvf(emb.filter(col("vec_id") % 10 === 3), out,
-        appendId = 0L)
-      VectorIndex.compactAppends(s, out)
-      // replay of the PHYSICALLY folded append: the tombstone no-ops it
-      VectorIndex.appendToIvf(emb.filter(col("vec_id") % 10 === 3), out,
-        appendId = 0L)
-      VectorIndex.appendToIvf(emb.filter(col("vec_id") % 10 === 7), out,
-        appendId = 1L)
-      VectorIndex.compactAppends(s, out, logical = true)
-      // replay of the LOGICALLY folded append: same no-op contract
-      VectorIndex.appendToIvf(emb.filter(col("vec_id") % 10 === 7), out,
-        appendId = 1L)
-      VectorIndex.appendToIvf(emb.filter(col("vec_id") % 10 === 9), out,
-        appendId = 2L)
-      // r16: the COPY-THEN-COMMIT fold (no rename anywhere in the data
-      // plane) merges the logically-folded dir + the live append into
-      // one committed dir, then the folded id replays as a no-op — the
-      // q105 chain now exercises all THREE fold modes against the same
-      // single-shot SQL
-      VectorIndex.compactAppends(s, out, copyCommit = true)
-      VectorIndex.appendToIvf(emb.filter(col("vec_id") % 10 === 9), out,
-        appendId = 2L)
+      Seq(3, 7, 9).zipWithIndex.foreach { case (tenth, appendId) =>
+        val batch = emb.filter(col("vec_id") % 10 === tenth)
+        VectorIndex.appendToIvf(batch, out, appendId.toLong)
+        VectorIndex.compactAppends(s, out)
+        VectorIndex.appendToIvf(batch, out, appendId.toLong)
+      }
     }
     VectorIndex.ivfTopKIndexed(s, idxPath,
         emb.filter(col("vec_id") % 25 === 0), k = 3, nProbe = 2)
@@ -1553,20 +1533,21 @@ object SparkEntry {
   }
 
   /** ANN serving over an index grown by the STREAMING INGEST DRIVER
-    * (r15, r14 verdict item 4 — the composition q105 gated only through
-    * the batch API): three vector tenths arrive as micro-batches through
+    * (the composition q105 gates only through the batch API): three
+    * vector tenths arrive as micro-batches through
     * [[graft.streaming.StreamingVectorIngest.processBatch]] — the
     * literal foreachBatch body: kind dispatch, `appendId = batchId`
     * keying, and the `compactEvery = 2` cadence, so batch 2's commit
-    * FOLDS batches 1–2 into the base mid-stream — and batch 2 is then
-    * REPLAYED through the same driver (the foreachBatch-retry shape; its
-    * cadence fires again and folds batch 3 too, so the retry exercises
-    * both the tombstone and a retry-triggered compaction). The oracle is
-    * q46's single-shot IVF SQL verbatim: a hash match proves the whole
-    * driver loop — append, cadence fold, replay — serves exactly the
-    * one-shot build. (Text→vector at ingest composes in front of this
-    * driver; StreamingVectorIngestSpec pins the featurized stream
-    * bit-identical to batch featurize, so this identity carries.) */
+    * FOLDS batches 1–2 into one merged dir mid-stream — and batch 2 is
+    * then REPLAYED through the same driver (the foreachBatch-retry shape;
+    * its cadence fires again and folds batch 3 into a new merged dir, so
+    * the retry exercises both the tombstone and a retry-triggered
+    * compaction). The oracle is q46's single-shot IVF SQL verbatim: a
+    * hash match proves the whole driver loop — append, cadence fold,
+    * replay — serves exactly the one-shot build. (Text→vector at ingest
+    * composes in front of this driver; StreamingVectorIngestSpec pins
+    * the featurized stream bit-identical to batch featurize, so this
+    * identity carries.) */
   private def q106(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val idxPath = MemoParquet(s"q106_ivf_ingest:$dir") { out =>

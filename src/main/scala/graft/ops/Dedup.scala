@@ -1336,6 +1336,26 @@ object Dedup {
         .unionByName(b.select(col("shingle"), col("occ"))), parts)
   }
 
+  /** Micro-batch gate for [[incrementalRepeatedSpans]]: a batch whose
+    * plan-stats bytes sit at or under this (and whose distinct-shingle
+    * count clears [[Curation.MaxFlaggedIdBroadcast]]) takes the
+    * BROADCAST-slim path — the state is filtered map-side and NEVER
+    * exchanges, the streaming regime's per-micro-batch shape (16 MB of
+    * text ≈ ~3M shingle keys, inside the 4M broadcast gate by
+    * construction). Unknown plan stats estimate huge → the default
+    * (SHUFFLE_HASH) path, the scale-safe direction. Package-visible so
+    * specs pin both gate sides. */
+  private[graft] final val MicroBatchMaxBytes = 16L << 20
+
+  /** Pass as `microBatchMaxBytes` to DISABLE the micro-batch gate: the
+    * probe keeps the one-job lazy SHUFFLE_HASH plan — no eager
+    * checkpoint/count jobs at construction, full lineage fault tolerance
+    * (the gate's localCheckpoint blocks are not recomputed on executor
+    * loss). Batch-context callers whose frames are small but who don't
+    * want construction running jobs should pass this instead of the magic
+    * -1 (r11 advice); q100 pins it to bench the at-scale shuffle lane. */
+  final val MicroBatchGateDisabled = -1L
+
   /** Incremental substring-level exact dedup: [[repeatedSpans]] for an
     * ARRIVING batch against a persisted base corpus, without re-shingling
     * the base — the lane that makes span-level detection incremental
@@ -1369,37 +1389,13 @@ object Dedup {
     * covered-key set (batch-count ⋈ broadcast-free base-table lookup,
     * both sides 8-byte keys). The base corpus never re-shingles and
     * never crosses the wire: only its (distinct-shingle-sized) count
-    * table joins, partitioned on the same key — and with `bloomKeys` set,
-    * even that table is Bloom-prefiltered map-side so only ~batch-mass
-    * state rows reach the exchange (see the inline note). Islands merge
-    * per doc exactly as the batch form. */
-  /** Micro-batch gate for [[incrementalRepeatedSpans]]: a batch whose
-    * plan-stats bytes sit at or under this (and whose distinct-shingle
-    * count clears [[Curation.MaxFlaggedIdBroadcast]]) takes the
-    * BROADCAST-slim path — the state is filtered map-side and NEVER
-    * exchanges, the streaming regime's per-micro-batch shape (16 MB of
-    * text ≈ ~3M shingle keys, inside the 4M broadcast gate by
-    * construction). Unknown plan stats estimate huge → the default
-    * (SHUFFLE_HASH) path, the scale-safe direction. Package-visible so
-    * specs pin both gate sides. */
-  private[graft] final val MicroBatchMaxBytes = 16L << 20
-
-  /** Pass as `microBatchMaxBytes` to DISABLE the micro-batch gate: the
-    * probe keeps the one-job lazy SHUFFLE_HASH plan — no eager
-    * checkpoint/count jobs at construction, full lineage fault tolerance
-    * (the gate's localCheckpoint blocks are not recomputed on executor
-    * loss). Batch-context callers whose frames are small but who don't
-    * want construction running jobs should pass this instead of the magic
-    * -1 (r11 advice); q100 pins it to bench the at-scale shuffle lane. */
-  final val MicroBatchGateDisabled = -1L
-
+    * table joins, partitioned on the same key. Islands merge per doc
+    * exactly as the batch form. */
   def incrementalRepeatedSpans(batch: DataFrame, idCol: String,
                                textCol: String, baseOcc: DataFrame,
                                n: Int = 10, minOcc: Int = 2,
                                occParts: Int = 0,
                                docParts: Int = 0,
-                               bloomKeys: Long = 0,
-                               bloomFpp: Double = 0.01,
                                microBatchMaxBytes: Long = MicroBatchMaxBytes)
       : DataFrame = {
     require(n >= 1 && minOcc >= 2, "need n >= 1 and minOcc >= 2")
@@ -1417,10 +1413,10 @@ object Dedup {
     // slim, the state is filtered in its scan stage, and nothing
     // state-sized ever shuffles; the checkpoint also stands in for the
     // plan-level exchange reuse the one-job path gets for free. NOTE the
-    // gate (and bloomKeys) makes CONSTRUCTION eager — the checkpoint +
-    // count jobs run before this returns, and their blocks live until
-    // the ContextCleaner collects the dropped frames — batch-sized by
-    // the gate, the accepted price of keeping state bytes off the wire.
+    // gate makes CONSTRUCTION eager — the checkpoint + count jobs run
+    // before this returns, and their blocks live until the
+    // ContextCleaner collects the dropped frames — batch-sized by the
+    // gate, the accepted price of keeping state bytes off the wire.
     // localCheckpoint blocks are NOT fault-tolerant (an executor loss
     // fails the query instead of recomputing) — batch-context callers
     // who want the lazy, lineage-recoverable one-job plan pass
@@ -1439,36 +1435,8 @@ object Dedup {
       .as[(Long, Long)]
       .mapPartitions(it => new KeyedSum()(it))
       .toDF("shingle", "occ_new")
-    // bloomKeys > 0 enables the RUNTIME-FILTER slim (RuntimeFilter's
-    // pattern, r11): a Bloom filter of the batch's keys prefilters the
-    // state MAP-SIDE, so the state-side exchange below shrinks from
-    // |state| rows to ~|batch keys| + fpp·|state|. No false negatives ⇒
-    // the semi-join's surviving row set is IDENTICAL (it still runs,
-    // removing the false positives), so the output is bit-for-bit the
-    // default path's (IncrementalDedupSpec pins it). DEFAULT OFF for a
-    // measured reason: the same-day A/B at the 504k scale state (623M
-    // keys, 69M-key increment, bloomKeys=80M) read 112.8 s / 8.3 GB
-    // shuffle WITH the filter vs 40.1 / 7.8 without — on a single-JVM
-    // box the "wire" is memory bandwidth, so 623M boxed-UDF probes of a
-    // 96 MB bitset plus the lost shEx exchange-reuse (the checkpoint
-    // splits the plan) cost more than the exchange they save. The option
-    // exists for the regime the arithmetic favors it: real cluster
-    // networks (exchange bytes cross racks, not RAM) and state/batch
-    // ratios where fpp·|state| ≪ the saved shuffle — pick `bloomFpp` ≪
-    // |batch keys| / |state keys| (~10 bits/key at the 0.01 default,
-    // ≈ 96 MB closure at 80M keys). The count table is checkpointed
-    // first so the Bloom build's job does not re-shingle the batch for
-    // the main query.
     val batchCnt =
-      if (microBatch || bloomKeys > 0) batchCnt0.localCheckpoint()
-      else batchCnt0
-    val baseSrc =
-      if (!microBatch && bloomKeys > 0) {
-        val bf = batchCnt.stat.bloomFilter("shingle", bloomKeys, bloomFpp)
-        val mightContain =
-          udf { (k: java.lang.Long) => k != null && bf.mightContainLong(k) }
-        baseOcc.filter(mightContain(col("shingle")))
-      } else baseOcc
+      if (microBatch) batchCnt0.localCheckpoint() else batchCnt0
     val broadcastSlim = microBatch &&
       batchCnt.count() <= Curation.MaxFlaggedIdBroadcast
     // Join-shape discipline (measured at 504k docs, ScaleRun phase 5b):
@@ -1495,7 +1463,7 @@ object Dedup {
     // uncompacted deltas straight in without a corpus-wide pre-merge. The
     // sum runs AFTER the semi-join slim — batch-sized, and the SHUFFLE_HASH
     // output is already partitioned on shingle, so it adds no exchange.
-    incrementalSpansTail(shEx, batchCnt, baseSrc, broadcastSlim, n, minOcc)
+    incrementalSpansTail(shEx, batchCnt, baseOcc, broadcastSlim, n, minOcc)
   }
 
   /** Shared probe tail of [[incrementalRepeatedSpans]] and
@@ -1505,16 +1473,16 @@ object Dedup {
     * sorting), threshold base+batch counts, semi-join the batch's
     * positions, merge islands. `batchCnt` carries (shingle, occ_new). */
   private def incrementalSpansTail(shEx: DataFrame, batchCnt: DataFrame,
-                                   baseSrc: DataFrame,
+                                   baseOcc: DataFrame,
                                    broadcastSlim: Boolean,
                                    n: Int, minOcc: Int): DataFrame = {
     val baseSlim = (
       if (broadcastSlim)
-        baseSrc.select(col("shingle"), col("occ").as("occ_base"))
+        baseOcc.select(col("shingle"), col("occ").as("occ_base"))
           .join(broadcast(batchCnt.select("shingle")),
             Seq("shingle"), "left_semi")
       else
-        baseSrc.select(col("shingle"), col("occ").as("occ_base"))
+        baseOcc.select(col("shingle"), col("occ").as("occ_base"))
           .join(batchCnt.select("shingle").hint("SHUFFLE_HASH"),
             Seq("shingle"), "left_semi"))
       .groupBy("shingle").agg(sum("occ_base").as("occ_base"))

@@ -1,13 +1,13 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted vector-index artifacts (r10 verdict stretch item): at 100 TB
-  * the expensive half of every ANN query is the INDEX BUILD — the corpus
-  * pass that assigns each vector to its coarse cell (IVF), encodes it to
-  * PQ codes, or trains Lloyd centroids. These are one-time jobs; serving
+/** Persisted vector-index artifacts: at 100 TB the expensive half of
+  * every ANN query is the INDEX BUILD — the corpus pass that assigns
+  * each vector to its coarse cell (IVF), encodes it to PQ codes, or
+  * trains Lloyd centroids. These are one-time jobs; serving
   * must not repeat them per call (the stride-based `Similarity` entry
   * points deliberately recompute so their oracles are self-contained —
   * their scaladocs point here for the reuse path).
@@ -37,17 +37,18 @@ import org.apache.spark.sql.functions._
   *  - [[kmeansAssignIndexed]]: one narrow corpus pass against the loaded
   *    k×dim matrix — no training jobs, no shuffle.
   *
-  * IVF and PQ indexes are APPENDABLE (r12) and appends are
-  * REPLAY-IDEMPOTENT (r13): [[appendToIvf]] / [[appendToPq]] encode ONLY
-  * a new vector batch with the persisted codebook and land it under an
-  * `append_id=`-keyed directory next to the cell partitions / codes
-  * table — the build's corpus pass never re-runs for an append (the
-  * dedup lane's incremental pattern), and a retried append overwrites
-  * itself instead of duplicating rows, so the lane wires directly under
-  * Structured Streaming ([[graft.streaming.StreamingVectorIngest]]).
+  * IVF and PQ indexes are APPENDABLE and appends are REPLAY-IDEMPOTENT:
+  * [[appendToIvf]] / [[appendToPq]] encode ONLY a new vector batch with
+  * the persisted codebook and land it under an `append_id=`-keyed
+  * directory next to the cell partitions / codes table — the build's
+  * corpus pass never re-runs for an append (the dedup lane's
+  * incremental pattern), and a retried append overwrites itself instead
+  * of duplicating rows, so the lane wires directly under Structured
+  * Streaming ([[graft.streaming.StreamingVectorIngest]]).
   * The codebook stays frozen; the meta records per-append rows and
   * flips `rebuildAdvised` when appends outnumber the base — see
-  * [[appendToIvf]] for the drift contract. */
+  * [[appendToIvf]] for the drift contract. [[compactAppends]] merges
+  * the accumulated append dirs into one by copy-then-commit. */
 object VectorIndex {
 
   // ---- meta contract ---------------------------------------------------
@@ -81,14 +82,14 @@ object VectorIndex {
   // ---- IVF ---------------------------------------------------------
 
   /** Count + decimal-exact mean of an integer error column — the drift
-    * accounting's one aggregation shape (r14 ADVICE item 3: a scaled-int
-    * squared-L2 error row reaches ~1e14–1e17, so a plain Long `sum()`
-    * can wrap silently at corpus-scale row counts and hand the drift
-    * rule a garbage or negative baseline; decimal(38,0) holds ~1e21 rows
-    * of max-Long addends, and the mean divides in BigInt like
-    * [[recordAppend]] already does on the driver). */
+    * accounting's one aggregation shape (a scaled-int squared-L2 error
+    * row reaches ~1e14–1e17, so a plain Long `sum()` can wrap silently
+    * at corpus-scale row counts and hand the drift rule a garbage or
+    * negative baseline; decimal(38,0) holds ~1e21 rows of max-Long
+    * addends, and the mean divides in BigInt like [[recordAppend]]
+    * already does on the driver). */
   private def rowsAndMeanErr(df: DataFrame,
-                             errCol: org.apache.spark.sql.Column): (Long, Long) = {
+                             errCol: Column): (Long, Long) = {
     val st = df.agg(count(lit(1)), sum(errCol.cast("decimal(38,0)")))
       .collect()(0)
     val n = st.getLong(0)
@@ -102,9 +103,9 @@ object VectorIndex {
     * cell assignments (vectors ride along for the exact re-rank),
     * PARTITIONED by cell so serving scans only probed cells.
     * `driftRatio` is the index's OWN rebuild-advice threshold (recorded
-    * in the meta, honored by every later [[appendToIvf]] — r14 verdict
-    * item 5: the fixed 4× default is sensible but a deployment must be
-    * able to tune the advice per index without recompiling). */
+    * in the meta, honored by every later [[appendToIvf]]: the fixed 4×
+    * default is sensible but a deployment must be able to tune the
+    * advice per index without recompiling). */
   def buildIvf(corpus: DataFrame, path: String, centroidStride: Long = 50,
                idCol: String = "vec_id",
                vecCol: String = "embedding",
@@ -126,8 +127,8 @@ object VectorIndex {
     // one narrow stats pass over the written cells: row count + the
     // base's mean quantization error (integer squared-L2 to the assigned
     // centroid — Similarity.ivfQuantErrCol) — the figure the append
-    // path's DRIFT rule compares against (r13 verdict item 4: the
-    // count-based proxy alone misses distribution shift at low volume)
+    // path's DRIFT rule compares against (the count-based proxy alone
+    // misses distribution shift at low volume)
     val cellsDf = spark.read.parquet(s"$path/cells")
     val (baseRows, baseErr) = rowsAndMeanErr(cellsDf,
       Similarity.ivfQuantErrCol(cents, col("vec_c"), col("cell")))
@@ -142,24 +143,22 @@ object VectorIndex {
       "rebuildAdvised" -> "false"))
   }
 
-  /** Append a NEW vector batch to a persisted IVF index (r11 verdict
-    * item 5 — the dedup lane's incremental pattern applied to serving
-    * indexes): the batch is encoded with the PERSISTED codebook (the
-    * centroids are frozen at build — re-deriving them would re-route
-    * every existing cell) and lands under
-    * `appends/append_id=<appendId>/cell=<c>/` — cell-partitioned like
-    * the base, so [[ivfTopKIndexed]]'s static partition pruning covers
-    * base and appended files alike. Serve over build ∪ appends is
-    * bit-identical to a full rebuild WITH THE SAME codebook
-    * (VectorIndexSpec pins it).
+  /** Append a NEW vector batch to a persisted IVF index (the dedup
+    * lane's incremental pattern applied to serving indexes): the batch
+    * is encoded with the PERSISTED codebook (the centroids are frozen at
+    * build — re-deriving them would re-route every existing cell) and
+    * lands under `appends/append_id=<appendId>/cell=<c>/` —
+    * cell-partitioned like the base, so [[ivfTopKIndexed]]'s static
+    * partition pruning covers base and appended files alike. Serve over
+    * build ∪ appends is bit-identical to a full rebuild WITH THE SAME
+    * codebook (VectorIndexSpec pins it).
     *
-    * REPLAY-IDEMPOTENT (r12 verdict item 2 —
-    * [[graft.streaming.OccStateStore.advance]]'s batchId discipline
-    * brought to the serving index; the r12 cut used `mode("append")`
-    * into the base cells, so a retried batch DUPLICATED its rows and
-    * nothing could ever remove them): every append is keyed by the
-    * caller's monotone `appendId` — a retry OVERWRITES its own
-    * `append_id=` directory and re-records its own `append_<id>` meta
+    * REPLAY-IDEMPOTENT ([[graft.streaming.OccStateStore.advance]]'s
+    * batchId discipline brought to the serving index — a plain
+    * `mode("append")` into the base cells would DUPLICATE a retried
+    * batch's rows with nothing able to remove them): every append is
+    * keyed by the caller's monotone `appendId` — a retry OVERWRITES its
+    * own `append_id=` directory and re-records its own `append_<id>` meta
     * row, changing nothing (StreamingVectorIngestSpec pins double-apply
     * == single-apply, serve and accounting both). Wire it under
     * Structured Streaming with the batchId
@@ -175,50 +174,64 @@ object VectorIndex {
     * same id is a no-op), derives `appendedRows` as their sum, and flips
     * `rebuildAdvised` once appendedRows > baseRows; serving never
     * refuses (advice, not a gate — the caller owns the rebuild cadence). */
-  def appendToIvf(newVecs: DataFrame, path: String,
-                  appendId: Long): Unit = {
+  def appendToIvf(newVecs: DataFrame, path: String, appendId: Long): Unit =
+    appendBatch(newVecs, path, appendId, "ivf") { (meta, dir) =>
+      val cents = loadIvfCentroids(newVecs.sparkSession, path, meta)
+      val vecCol = meta("vecCol")
+      // ONE file per touched cell: without the cell repartition every
+      // input partition writes its own file into every cell it touches
+      // (≤ tasks × cells tiny files per append — the 504k ann leg's
+      // 50k-row append cost 84.7 s, mostly file count + v1 job-commit
+      // renames); the exchange is batch-sized.
+      newVecs.select(col(meta("idCol")).cast("long").as("neighbor_id"),
+          col(vecCol).as("vec_c"),
+          Similarity.cellAssignCol(cents, col(vecCol)).as("cell"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(dir)
+      Similarity.ivfQuantErrCol(cents, col("vec_c"), col("cell"))
+    }
+
+  /** The append protocol [[appendToIvf]] and [[appendToPq]] share, under
+    * the lease: assert the kind and append support, no-op a replay of an
+    * id [[compactAppends]] already folded (re-landing its rows would
+    * duplicate them next to the merged copies, so the `compacted_<id>`
+    * tombstone makes the retry the same no-op a normal replayed append
+    * is), assert the vector type, then `write` the encoded batch into its
+    * `append_id=` dir and return the error column of the written rows.
+    * The source evaluates ONCE (the write); rows + drift stats read BACK
+    * the written dir, so the meta records exactly what landed on disk. */
+  private def appendBatch(newVecs: DataFrame, path: String, appendId: Long,
+                          kind: String)(
+      write: (Map[String, String], String) => Column): Unit = {
     val spark = newVecs.sparkSession
     withLease(spark, path) {
       val meta = readMeta(spark, path)
-      assertMeta(meta, path, "kind" -> "ivf")
+      assertMeta(meta, path, "kind" -> kind)
       require(meta.contains("baseRows"),
         s"vector index at $path predates append support (no baseRows in " +
-          "meta) — rebuild it once with buildIvf to enable appends")
-      if (meta.contains(s"compacted_$appendId") ||
-          meta.contains(s"folded_$appendId"))
-        // a replay of an id compactAppends already folded (physically or
-        // logically) into the base: re-landing its rows would duplicate
-        // them next to the folded copies, so the tombstone makes the
-        // retry the same no-op a normal replayed append is
+          s"meta) — rebuild it once with build${kind.capitalize} to " +
+          "enable appends")
+      if (meta.contains(s"compacted_$appendId"))
         System.err.println(s"[vector-index] append $appendId at $path " +
-          "was already folded into the base by compactAppends — replay " +
-          "is a no-op")
+          "was already folded by compactAppends — replay is a no-op")
       else {
-        val (idCol, vecCol) = (meta("idCol"), meta("vecCol"))
-        assertVecType(meta, path, newVecs, vecCol)
-        val cents = loadIvfCentroids(spark, path, meta)
-        // ONE file per touched cell: without the cell repartition every
-        // input partition writes its own file into every cell it touches
-        // (≤ tasks × cells tiny files per append — the 504k ann leg's
-        // 50k-row append cost 84.7 s, mostly file count + v1 job-commit
-        // renames); the exchange is batch-sized. The source evaluates
-        // ONCE (the write); rows/drift stats read BACK the written dir,
-        // so the meta records exactly what landed on disk.
-        val dir = s"$path/appends/append_id=$appendId"
-        newVecs.select(col(idCol).cast("long").as("neighbor_id"),
-            col(vecCol).as("vec_c"),
-            Similarity.cellAssignCol(cents, col(vecCol)).as("cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(dir)
+        assertVecType(meta, path, newVecs, meta("vecCol"))
+        val dir = s"${appendRoot(path, kind)}/append_id=$appendId"
+        val errCol = write(meta, dir)
         val (appended, errAvg) =
           if (!hasDataFiles(spark, dir)) (0L, 0L)
-          else rowsAndMeanErr(spark.read.parquet(dir),
-            Similarity.ivfQuantErrCol(cents, col("vec_c"), col("cell")))
+          else rowsAndMeanErr(spark.read.parquet(dir), errCol)
         recordAppend(spark, path, meta, appendId, appended, errAvg)
       }
     }
   }
+
+  /** Where a `kind` index's appends land: IVF appends nest the base's
+    * `cell=` layout under `appends/`, PQ codes sit flat under
+    * `append_codes/`. */
+  private def appendRoot(path: String, kind: String): String =
+    if (kind == "ivf") s"$path/appends" else s"$path/append_codes"
 
   /** ≥ 1 non-hidden file anywhere under `dir` — guards the read-back
     * stats pass (an empty batch's write leaves only `_SUCCESS`, and
@@ -237,7 +250,7 @@ object VectorIndex {
   }
 
   /** Exclusive claim around every meta READ-MODIFY-WRITE (append,
-    * compaction) — r13 review item 3: the meta rewrite is last-wins, so
+    * compaction): the meta rewrite is last-wins, so
     * two concurrent appenders would silently drop one side's accounting;
     * the store-side writers assert their single-writer contract, this
     * one now does too. `createNewFile` is atomic on HDFS/local (object
@@ -295,19 +308,18 @@ object VectorIndex {
     * the base), a genuinely shifted batch lands orders of magnitude out
     * (VectorIndexSpec pins both sides with a scaled append). Per-index
     * override: `buildIvf`/`buildPq`'s `driftRatio` parameter, recorded in
-    * the meta (r14 verdict item 5); indexes built before the row existed
-    * keep this default. */
+    * the meta; indexes built before the row existed keep this default. */
   final val QuantErrDriftRatio = 4L
 
   /** Record append `appendId`'s rows + mean quantization error and
     * refresh the derived accounting (see [[appendToIvf]]'s contract):
     * the per-id `append_<id>`/`appendErr_<id>` rows are what make a
     * REPLAYED append a no-op (they overwrite themselves, never
-    * accumulate — the r12 running `appendedRows +=` double-counted on
+    * accumulate — a running `appendedRows +=` would double-count on
     * retry; the integer error figure is deterministic, so a replay
     * rewrites the same value). `rebuildAdvised` = the count rule
-    * (appends outnumber the base) OR the drift rule (r13 verdict item 4
-    * — weighted append error > [[QuantErrDriftRatio]] × base error,
+    * (appends outnumber the base) OR the drift rule (weighted append
+    * error > [[QuantErrDriftRatio]] × base error,
     * catching distribution shift the count proxy misses at low volume;
     * indexes built before `baseQuantErr` existed keep the count rule
     * only). */
@@ -315,12 +327,12 @@ object VectorIndex {
                            meta: Map[String, String], appendId: Long,
                            appended: Long, errAvg: Long): Unit = {
     val base = meta("baseRows").toLong
-    // a pre-r13 index carries a running `appendedRows` counter with NO
-    // per-id rows (the old bumpAppended accounting) — deriving the sum
-    // from per-id rows alone would silently RESET it on the first keyed
-    // append (r13 ADVICE item 2); preserve it once as a legacy row so the
-    // derived total keeps counting those rows (`committedAppendDirs`
-    // ignores it: no `append_id=legacy` dir can exist)
+    // an index written before per-id rows carries a running
+    // `appendedRows` counter with NO per-id rows — deriving the sum from
+    // per-id rows alone would silently RESET it on the first keyed
+    // append; preserve it once as a legacy row so the derived total
+    // keeps counting those rows (`committedAppendDirs` ignores it: no
+    // `append_id=legacy` dir can exist)
     val hasIdRows = meta.keysIterator.exists(_.startsWith("append_"))
     val legacy = meta.get("appendedRows").map(_.toLong).getOrElse(0L)
     val carried =
@@ -349,7 +361,7 @@ object VectorIndex {
       else (weighted.map { case (r, e) => BigInt(r) * BigInt(e) }.sum /
         BigInt(wRows)).toLong
     val baseErr = meta.get("baseQuantErr").map(_.toLong).getOrElse(0L)
-    // per-index threshold (build meta, r14 verdict item 5); the compiled
+    // per-index threshold (build meta); the compiled
     // default covers indexes built before the row existed. BigInt guard:
     // a huge configured ratio times a large baseline must not wrap into
     // a threshold the drifted append sails under.
@@ -357,7 +369,7 @@ object VectorIndex {
       .getOrElse(QuantErrDriftRatio)
     val drift = baseErr > 0L && wRows > 0L &&
       BigInt(appendErr) > BigInt(ratio) * BigInt(baseErr)
-    // STICKY until an actual rebuild (r14 ADVICE item 2): compactAppends
+    // STICKY until an actual rebuild: compactAppends
     // preserves the flag but resets the counters it was derived from
     // (appendedRows -> 0, drifted error absorbed into baseQuantErr), so
     // recomputing from post-fold state alone would let one small
@@ -378,7 +390,7 @@ object VectorIndex {
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs` (common on
     * object stores) write no marker at all, and a marker-only gate
     * would silently serve the base forever while the accounting said
-    * rows were appended (r13 review). A dir is served iff its id is
+    * rows were appended. A dir is served iff its id is
     * recorded in the meta AND it holds ≥ 1 data file (empty committed
     * appends are skipped so schema inference always sees real files)
     * AND — only when markers are enabled — `_SUCCESS` is present, which
@@ -389,8 +401,7 @@ object VectorIndex {
     val p = new Path(root)
     val fs = graft.FsText.fs(spark, p)
     if (!fs.exists(p)) return Seq.empty
-    // live appends AND logically-folded ones (the rename-free fold keeps
-    // a folded dir serving in place — see compactAppends' logical mode)
+    // live appends AND the merged dir compactAppends records as folded
     val recorded: Set[String] = meta.keysIterator.collect {
       case k if k.startsWith("append_") => k.stripPrefix("append_")
       case k if k.startsWith("folded_") => k.stripPrefix("folded_")
@@ -400,18 +411,8 @@ object VectorIndex {
     fs.listStatus(p).toSeq.map(_.getPath)
       .filter(d => d.getName.startsWith("append_id=") &&
         recorded.contains(d.getName.stripPrefix("append_id=")))
-      .filter { d =>
-        (!markers || fs.exists(new Path(d, "_SUCCESS"))) && {
-          // any data file at any depth (IVF appends nest cell= dirs)
-          val it = fs.listFiles(d, true)
-          var found = false
-          while (!found && it.hasNext) {
-            val name = it.next().getPath.getName
-            found = !name.startsWith("_") && !name.startsWith(".")
-          }
-          found
-        }
-      }
+      .filter(d => (!markers || fs.exists(new Path(d, "_SUCCESS"))) &&
+        hasDataFiles(spark, d.toString))
       .map(_.toString).sorted
   }
 
@@ -421,281 +422,142 @@ object VectorIndex {
   def indexStats(spark: SparkSession, path: String): Map[String, String] =
     readMeta(spark, path)
 
-  /** Fold every RECORDED append into the base table — a FILE MOVE, exact
-    * under the frozen codebook (appends were encoded with the base's own
-    * codebook, so folding re-encodes nothing and the serve set is
-    * unchanged; q105 oracle-gates it with a compaction interleaved
-    * between appends). This is what bounds a long-running
+  /** Fold every recorded append into ONE merged append dir by
+    * COPY-THEN-COMMIT — exact under the frozen codebook (appends were
+    * encoded with the base's own codebook, so folding re-encodes nothing
+    * and the serve set is unchanged; q105 oracle-gates a fold after each
+    * of three appends). This is what bounds a long-running
     * [[graft.streaming.StreamingVectorIngest]] cadence's directory
-    * growth (r13 verdict item 3): without it every micro-batch leaves an
-    * `append_id=<n>` tree forever — the same small-file/manifest growth
-    * the occurrence store solved with size-tiered refold, except here
-    * the fold is free because appends already nest the base's partition
-    * layout.
+    * growth: without it every micro-batch leaves an `append_id=<n>` tree
+    * forever — the same small-file/manifest growth the occurrence store
+    * solved with size-tiered refold.
     *
     * Protocol (single-writer, lease-guarded like every meta writer; run
     * it from the ingest lane's own maintenance cadence, never
-    * concurrently with an append):
-    *  1. every data file under a recorded append dir RENAMES into the
-    *     base (`cells/cell=<c>/` for ivf — the per-cell subdirs map
-    *     1:1; `codes/` for pq), name-prefixed with its append id so
-    *     files never collide; the drained dir is deleted;
-    *  2. the meta rewrite is the commit: `baseRows` absorbs the folded
-    *     rows, `baseQuantErr` absorbs their weighted error, each
-    *     `append_<id>`/`appendErr_<id>` pair becomes a
-    *     `compacted_<id>` TOMBSTONE (a replayed append of a folded id
-    *     must be a no-op — re-landing rows next to their folded copies
-    *     would duplicate them; [[appendToIvf]]/[[appendToPq]] check it),
-    *     and `rebuildAdvised` carries over STICKY — folding moves files,
-    *     it does not re-fit the codebook, so advice earned by drifted
-    *     appends survives until an actual rebuild.
-    * Crash-safe at every point: a data file lives in exactly one place
-    * (rename), the base always serves whole, and a dir drained before
-    * the meta rewrite simply has no data files — [[committedAppendDirs]]
-    * already skips those, so nothing double-serves; the next call finds
-    * the still-recorded ids and finishes the accounting. Only fold ids
-    * no in-flight batch can replay (the positions compaction's
-    * `upToBatch` contract); [[graft.streaming.StreamingVectorIngest]]'s
-    * cadence satisfies this by construction — a foreachBatch retry
-    * replays only the latest batch, and the tombstone catches even that.
-    * Returns the number of appends folded.
-    *
-    * `logical = true` — the RENAME-FREE variant (r14 verdict item 3:
-    * the physical fold's crash-safety rides atomic rename, which object
-    * stores lack): no file moves at all. The meta rewrite alone is the
-    * fold — each `append_<id>` row becomes a `folded_<id>` row whose
-    * directory KEEPS SERVING in place ([[committedAppendDirs]] reads
-    * both row kinds), its rows/error are absorbed into the base figures,
-    * and a replay of a folded id is the same tombstoned no-op. What it
-    * buys: the accounting, drift baseline, and replay surface are
-    * bounded exactly as in the physical fold — one atomic meta write,
-    * safe on any storage. What it does NOT buy: the directory count
-    * keeps growing until a rebuild (or until a later PHYSICAL
-    * compactAppends, which drains `folded_` dirs too — moving their
-    * files without re-absorbing rows). That residual is the honest
-    * object-store trade; deployments with atomic rename keep the
-    * default — or close it with `copyCommit`.
-    *
-    * `copyCommit = true` — the COPY-THEN-COMMIT variant (r15 verdict
-    * item 2: bound the DIRECTORY count too, with no rename anywhere in
-    * the data plane): every recorded append dir AND every previously
-    * `folded_` dir COPIES its data files into ONE fresh merged dir
-    * (`append_id=fold<n>`, the same cell=/flat layout, a hand-written
-    * `_SUCCESS` since the copies bypass the committer), INVISIBLE until
-    * the meta commit — [[committedAppendDirs]] gates serving on the
-    * meta, so a half-copied merged dir double-serves nothing. The one
-    * atomic meta write then simultaneously (a) tombstones every source
-    * id (`compacted_<id>` — replays stay no-ops), (b) absorbs the live
-    * appends' rows/error into the base figures exactly like the logical
-    * fold, and (c) records the merged dir as `folded_fold<n>`, flipping
-    * the serve set from k dirs to one in a single object PUT. Source
-    * dirs are deleted best-effort AFTER the commit; a crash anywhere is
-    * re-runnable — a merged dir never committed, or a tombstoned source
-    * never deleted, is garbage the NEXT call's GC phase removes (the
-    * positions-compaction pattern). Repeated cadences refold the one
-    * merged dir together with the new appends, so live dir count is
-    * O(1) + live appends, not O(stream lifetime); the rewrite
-    * amplification is the size trade the caller's cadence controls.
-    * No-ops (returns 0) when only a single already-merged dir exists.
-    * VectorIndexSpec drives it through a rename-refusing FileSystem;
-    * q105 chains it after the logical fold against q46's single-shot
-    * SQL. */
-  def compactAppends(spark: SparkSession, path: String,
-                     logical: Boolean = false,
-                     copyCommit: Boolean = false): Int =
+    * concurrently with an append). No data path is ever renamed, so it
+    * runs unchanged on stores without atomic rename:
+    *  1. GC: fold-named dirs no commit recorded (a crashed half-copy) and
+    *     tombstoned sources whose post-commit delete crashed are removed.
+    *     Unrecorded plain append dirs are NOT touched — they may be a
+    *     crashed append an in-flight batch will replay;
+    *  2. every recorded append dir AND the previously merged dir COPY
+    *     their data files into one fresh `append_id=fold<n>` (the same
+    *     cell=/flat layout, a hand-written `_SUCCESS` since the copies
+    *     bypass the committer), invisible until the commit —
+    *     [[committedAppendDirs]] gates serving on the meta, so a
+    *     half-copied merged dir double-serves nothing;
+    *  3. ONE atomic meta write is the commit: it tombstones every source
+    *     id (`compacted_<id>` — a replayed append of it is a no-op),
+    *     absorbs the live appends' rows and weighted error into
+    *     `baseRows`/`baseQuantErr` (the merged dir's rows were absorbed
+    *     at ITS commit, so refolding it adds nothing), records the merged
+    *     dir as `folded_fold<n>` — serving flips from k dirs to one — and
+    *     carries `rebuildAdvised` over STICKY: folding does not re-fit
+    *     the codebook, so advice earned by drifted appends survives until
+    *     an actual rebuild;
+    *  4. the sources are deleted best-effort AFTER the commit.
+    * A crash anywhere is re-runnable: a merged dir never committed, or a
+    * tombstoned source never deleted, is garbage the NEXT call's GC
+    * removes. Live dir count is O(1) + live appends, not O(stream
+    * lifetime); each fold re-copies the merged dir — the rewrite
+    * amplification the caller's cadence controls. Only fold ids no
+    * in-flight batch can replay (the positions compaction's `upToBatch`
+    * contract); [[graft.streaming.StreamingVectorIngest]]'s cadence
+    * satisfies this by construction — a foreachBatch retry replays only
+    * the latest batch, and the tombstone catches even that. Returns the
+    * number of source dirs folded: 0 when nothing is recorded or only one
+    * already-merged dir exists (re-copying it would shrink nothing).
+    * VectorIndexSpec drives it through a rename-refusing FileSystem. */
+  def compactAppends(spark: SparkSession, path: String): Int =
     withLease(spark, path) {
-      require(!(logical && copyCommit),
-        "compactAppends: pick ONE of logical / copyCommit")
       val meta = readMeta(spark, path)
       val kind = meta.getOrElse("kind", "<absent>")
       require(kind == "ivf" || kind == "pq",
         s"compactAppends supports ivf/pq indexes, got kind=$kind at $path")
-      val (appRoot, baseRoot) =
-        if (kind == "ivf") (s"$path/appends", s"$path/cells")
-        else (s"$path/append_codes", s"$path/codes")
-      val recorded = meta.keysIterator
-        .filter(k => k.startsWith("append_") && k != "append_legacy")
-        .map(_.stripPrefix("append_")).toSeq.sorted
-      // dirs logically folded earlier: physically drained here (rows
-      // were already absorbed at their logical commit — move only)
-      val priorFolded = meta.keysIterator
-        .filter(_.startsWith("folded_"))
-        .map(_.stripPrefix("folded_")).toSeq.sorted
-      if (copyCommit)
-        copyCommitFold(spark, path, meta, appRoot, recorded, priorFolded)
-      else if (recorded.isEmpty && (logical || priorFolded.isEmpty)) 0
+      def ids(prefix: String) = meta.keysIterator
+        .filter(k => k.startsWith(prefix) && k != "append_legacy")
+        .map(_.stripPrefix(prefix)).toSeq.sorted
+      val (recorded, priorFolded, tombstoned) =
+        (ids("append_"), ids("folded_"), ids("compacted_").toSet)
+      val srcIds = (recorded ++ priorFolded).sorted
+      val rootP = new Path(appendRoot(path, kind))
+      val fs = graft.FsText.fs(spark, rootP)
+      // GC (step 1); `onDisk` re-lists, so the fold-id pick below sees
+      // only what survived it
+      def onDisk = if (!fs.exists(rootP)) Seq.empty[String]
+        else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
+          .filter(_.startsWith("append_id=")).map(_.stripPrefix("append_id="))
+      onDisk.foreach { id =>
+        if (!srcIds.contains(id) &&
+            (id.startsWith("fold") || tombstoned.contains(id)))
+          fs.delete(new Path(rootP, s"append_id=$id"), true)
+      }
+      if (recorded.isEmpty && priorFolded.size <= 1) 0
       else {
-        val rootP = new Path(appRoot)
-        val fs = graft.FsText.fs(spark, rootP)
-        if (!logical) (recorded ++ priorFolded).foreach { id =>
+        val usedFold = (priorFolded ++ tombstoned ++ onDisk)
+          .filter(_.startsWith("fold"))
+          .flatMap(id => scala.util.Try(id.stripPrefix("fold").toLong).toOption)
+        val foldId = s"fold${if (usedFold.isEmpty) 0L else usedFold.max + 1L}"
+        val dest = new Path(rootP, s"append_id=$foldId")
+        val conf = spark.sparkContext.hadoopConfiguration
+        srcIds.foreach { id =>
           val dir = new Path(rootP, s"append_id=$id")
           if (fs.exists(dir)) {
             val it = fs.listFiles(dir, true)
-            val moves = scala.collection.mutable.ArrayBuffer
-              .empty[(Path, Path)]
             while (it.hasNext) {
               val f = it.next().getPath
               if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
                 // ivf nests one cell= level; pq is flat — carry the
-                // immediate partition dir through, nothing deeper exists
+                // immediate partition dir through; overwrite=true makes a
+                // retried copy re-runnable
                 val parent = f.getParent.getName
                 val destDir =
-                  if (parent.startsWith("cell="))
-                    new Path(baseRoot, parent)
-                  else new Path(baseRoot)
-                moves += ((f, new Path(destDir,
-                  s"append-$id-${f.getName}")))
+                  if (parent.startsWith("cell=")) new Path(dest, parent)
+                  else dest
+                fs.mkdirs(destDir)
+                org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
+                  new Path(destDir, s"append-$id-${f.getName}"),
+                  false, true, conf)
               }
             }
-            moves.foreach { case (src, dst) =>
-              fs.mkdirs(dst.getParent)
-              require(fs.rename(src, dst),
-                s"compactAppends at $path: rename $src -> $dst failed")
-            }
-            fs.delete(dir, true)
           }
         }
-        // the commit: absorb rows + weighted error into the base figures
-        // (live appends only — logically-folded ids absorbed at THEIR
-        // commit), tombstone/mark the folded ids, keep rebuildAdvised
-        // sticky
-        val foldedRows = recorded
-          .map(id => meta(s"append_$id").toLong).sum
+        // the merged dir must pass committedAppendDirs' marker gate — the
+        // copies bypass the committer, so the marker is written by hand
+        fs.create(new Path(dest, "_SUCCESS"), true).close()
+        // THE commit (step 3): one atomic meta write
+        val foldedRows = recorded.map(id => meta(s"append_$id").toLong).sum
         val baseRows = meta("baseRows").toLong
-        val baseErr = meta.get("baseQuantErr").map(_.toLong)
         val foldedErrWeighted = recorded.flatMap { id =>
           meta.get(s"appendErr_$id")
             .map(e => BigInt(meta(s"append_$id").toLong) * BigInt(e.toLong))
         }.sum
-        val newBaseErr = baseErr.map { be =>
+        val newBaseErr = meta.get("baseQuantErr").map(_.toLong).map { be =>
           val totalRows = baseRows + foldedRows
           if (totalRows == 0L) 0L
           else ((BigInt(baseRows) * BigInt(be) + foldedErrWeighted) /
             BigInt(totalRows)).toLong
         }
-        val markRow: String => (String, String) =
-          if (logical) id => s"folded_$id" -> meta(s"append_$id")
-          else id => s"compacted_$id" -> meta(s"append_$id")
-        val drainedPrior: Seq[(String, String)] =
-          if (logical) Seq.empty
-          else priorFolded.map(id =>
-            s"compacted_$id" -> meta(s"folded_$id"))
+        val dirRows = foldedRows +
+          priorFolded.map(id => meta(s"folded_$id").toLong).sum
         val next = (meta --
           recorded.flatMap(id => Seq(s"append_$id", s"appendErr_$id")) --
-          (if (logical) Seq.empty else priorFolded.map(id => s"folded_$id"))) ++
-          recorded.map(markRow) ++ drainedPrior ++
-          Map("baseRows" -> (baseRows + foldedRows).toString,
+          priorFolded.map(id => s"folded_$id")) ++
+          recorded.map(id => s"compacted_$id" -> meta(s"append_$id")) ++
+          priorFolded.map(id => s"compacted_$id" -> meta(s"folded_$id")) ++
+          Map(s"folded_$foldId" -> dirRows.toString,
+            "baseRows" -> (baseRows + foldedRows).toString,
             "appendedRows" -> "0", "appendQuantErr" -> "0") ++
           newBaseErr.map(e => "baseQuantErr" -> e.toString)
         writeMeta(spark, path, next.toSeq.sortBy(_._1))
-        recorded.size + (if (logical) 0 else priorFolded.size)
+        // strictly post-commit: a crash here leaves tombstoned dirs the
+        // next call's GC removes
+        srcIds.foreach { id =>
+          scala.util.Try(fs.delete(new Path(rootP, s"append_id=$id"), true))
+        }
+        srcIds.size
       }
     }
-
-  /** [[compactAppends]]' copy-then-commit body (see the `copyCommit`
-    * contract there) — pure copies + one atomic meta write + deferred
-    * deletes; never calls rename on a data path. Runs inside the
-    * caller's lease. */
-  private def copyCommitFold(spark: SparkSession, path: String,
-                             meta: Map[String, String], appRoot: String,
-                             recorded: Seq[String],
-                             priorFolded: Seq[String]): Int = {
-    val rootP = new Path(appRoot)
-    val fs = graft.FsText.fs(spark, rootP)
-    val tombstoned = meta.keysIterator.filter(_.startsWith("compacted_"))
-      .map(_.stripPrefix("compacted_")).toSet
-    // GC phase: crashed half-copies (fold-named dirs no commit ever
-    // recorded) and drained sources whose post-commit delete crashed
-    // (tombstoned ids). Plain unrecorded append dirs are NOT touched —
-    // they may be a crashed append an in-flight batch will replay.
-    if (fs.exists(rootP))
-      fs.listStatus(rootP).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("append_id="))
-        .foreach { d =>
-          val id = d.getName.stripPrefix("append_id=")
-          val live = recorded.contains(id) || priorFolded.contains(id)
-          if (!live && (id.startsWith("fold") || tombstoned.contains(id)))
-            fs.delete(d, true)
-        }
-    val srcIds = (recorded ++ priorFolded).sorted
-    // one already-merged dir and nothing else: re-copying it into a
-    // fresh merged dir shrinks nothing — pure churn
-    if (srcIds.isEmpty || (recorded.isEmpty && priorFolded.size <= 1))
-      return 0
-    val usedFold = (meta.keysIterator.collect {
-        case k if k.startsWith("folded_fold") => k.stripPrefix("folded_fold")
-        case k if k.startsWith("compacted_fold") =>
-          k.stripPrefix("compacted_fold")
-      } ++ (if (!fs.exists(rootP)) Iterator.empty
-        else fs.listStatus(rootP).iterator.map(_.getPath.getName).collect {
-          case n if n.startsWith("append_id=fold") =>
-            n.stripPrefix("append_id=fold")
-        }))
-      .flatMap(s => scala.util.Try(s.toLong).toOption).toSeq
-    val foldId = s"fold${if (usedFold.isEmpty) 0L else usedFold.max + 1L}"
-    val dest = new Path(rootP, s"append_id=$foldId")
-    val conf = spark.sparkContext.hadoopConfiguration
-    srcIds.foreach { id =>
-      val dir = new Path(rootP, s"append_id=$id")
-      if (fs.exists(dir)) {
-        val it = fs.listFiles(dir, true)
-        while (it.hasNext) {
-          val f = it.next().getPath
-          if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
-            // ivf nests one cell= level; pq is flat — carry the
-            // immediate partition dir through (same rule as the rename
-            // fold); overwrite=true makes a retried copy re-runnable
-            val parent = f.getParent.getName
-            val destDir =
-              if (parent.startsWith("cell=")) new Path(dest, parent)
-              else dest
-            fs.mkdirs(destDir)
-            org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
-              new Path(destDir, s"append-$id-${f.getName}"),
-              false, true, conf)
-          }
-        }
-      }
-    }
-    // the merged dir must pass committedAppendDirs' marker gate — the
-    // copies bypass the committer, so the marker is written by hand
-    fs.create(new Path(dest, "_SUCCESS"), true).close()
-    // THE commit: absorb live appends' rows + weighted error into the
-    // base figures (prior folded_ ids absorbed at THEIR commit),
-    // tombstone every source, record the merged dir as folded —
-    // serving flips from k dirs to one in this single atomic write
-    val foldedRows = recorded.map(id => meta(s"append_$id").toLong).sum
-    val baseRows = meta("baseRows").toLong
-    val baseErr = meta.get("baseQuantErr").map(_.toLong)
-    val foldedErrWeighted = recorded.flatMap { id =>
-      meta.get(s"appendErr_$id")
-        .map(e => BigInt(meta(s"append_$id").toLong) * BigInt(e.toLong))
-    }.sum
-    val newBaseErr = baseErr.map { be =>
-      val totalRows = baseRows + foldedRows
-      if (totalRows == 0L) 0L
-      else ((BigInt(baseRows) * BigInt(be) + foldedErrWeighted) /
-        BigInt(totalRows)).toLong
-    }
-    val dirRows = foldedRows +
-      priorFolded.map(id => meta(s"folded_$id").toLong).sum
-    val next = (meta --
-      recorded.flatMap(id => Seq(s"append_$id", s"appendErr_$id")) --
-      priorFolded.map(id => s"folded_$id")) ++
-      recorded.map(id => s"compacted_$id" -> meta(s"append_$id")) ++
-      priorFolded.map(id => s"compacted_$id" -> meta(s"folded_$id")) ++
-      Map(s"folded_$foldId" -> dirRows.toString,
-        "baseRows" -> (baseRows + foldedRows).toString,
-        "appendedRows" -> "0", "appendQuantErr" -> "0") ++
-      newBaseErr.map(e => "baseQuantErr" -> e.toString)
-    writeMeta(spark, path, next.toSeq.sortBy(_._1))
-    // retirement: best-effort, strictly post-commit — a crash here
-    // leaves tombstoned dirs the next call's GC removes
-    srcIds.foreach { id =>
-      scala.util.Try(fs.delete(new Path(rootP, s"append_id=$id"), true))
-    }
-    srcIds.size
-  }
 
   /** IVF top-k served from a persisted index — bit-identical to
     * [[Similarity.ivfTopK]] over the corpus the index was built on
@@ -729,12 +591,12 @@ object VectorIndex {
     // committed appends ride the same static cell pruning — their layout
     // nests cell= under append_id=, so the isin filter prunes their
     // partitions too (basePath keeps the partition columns)
-    val appendDirs = committedAppendDirs(spark, s"$path/appends", meta)
+    val root = appendRoot(path, "ivf")
+    val appendDirs = committedAppendDirs(spark, root, meta)
     val cells =
       if (appendDirs.isEmpty) base
       else base.unionByName(probedCells(
-        spark.read.option("basePath", s"$path/appends")
-          .parquet(appendDirs: _*)))
+        spark.read.option("basePath", root).parquet(appendDirs: _*)))
     Similarity.ivfScoreCells(cells, queries, k, nProbe, nearestCells,
       idCol, vecCol)
   }
@@ -780,36 +642,15 @@ object VectorIndex {
     * `append_codes/append_id=<appendId>/` — same frozen-codebook drift
     * contract, accounting, and REPLAY-IDEMPOTENT append-id keying as
     * [[appendToIvf]] (a retry overwrites its own directory and meta
-    * row). */
-  def appendToPq(newVecs: DataFrame, path: String, appendId: Long): Unit = {
-    val spark = newVecs.sparkSession
-    withLease(spark, path) {
-      val meta = readMeta(spark, path)
-      assertMeta(meta, path, "kind" -> "pq")
-      require(meta.contains("baseRows"),
-        s"vector index at $path predates append support (no baseRows in " +
-          "meta) — rebuild it once with buildPq to enable appends")
-      if (meta.contains(s"compacted_$appendId") ||
-          meta.contains(s"folded_$appendId"))
-        System.err.println(s"[vector-index] append $appendId at $path " +
-          "was already folded into the base by compactAppends — replay " +
-          "is a no-op")
-      else {
-        assertVecType(meta, path, newVecs, meta("vecCol"))
-        val cents = loadPqCentroids(spark, path, meta)
-        // source evaluates once (the write); rows + drift stats read
-        // back the written codes, whose distortion column is exact
-        val dir = s"$path/append_codes/append_id=$appendId"
-        Similarity.pqEncodeWith(newVecs, cents, meta("m").toInt,
-            meta("idCol"), meta("vecCol"))
-          .write.mode("overwrite").parquet(dir)
-        val (appended, errAvg) =
-          if (!hasDataFiles(spark, dir)) (0L, 0L)
-          else rowsAndMeanErr(spark.read.parquet(dir), col("distortion"))
-        recordAppend(spark, path, meta, appendId, appended, errAvg)
-      }
+    * row). The codes' distortion column is the exact drift error. */
+  def appendToPq(newVecs: DataFrame, path: String, appendId: Long): Unit =
+    appendBatch(newVecs, path, appendId, "pq") { (meta, dir) =>
+      val cents = loadPqCentroids(newVecs.sparkSession, path, meta)
+      Similarity.pqEncodeWith(newVecs, cents, meta("m").toInt,
+          meta("idCol"), meta("vecCol"))
+        .write.mode("overwrite").parquet(dir)
+      col("distortion")
     }
-  }
 
   /** Load + integrity-check a persisted PQ codebook (count asserted
     * against the meta contract). */
@@ -854,13 +695,12 @@ object VectorIndex {
       out.toSeq
     }
     val codesBase = spark.read.parquet(s"$path/codes")
-    val appendDirs =
-      committedAppendDirs(spark, s"$path/append_codes", meta)
+    val root = appendRoot(path, "pq")
+    val appendDirs = committedAppendDirs(spark, root, meta)
     val allCodes =
       if (appendDirs.isEmpty) codesBase
       else codesBase.unionByName(
-        spark.read.option("basePath", s"$path/append_codes")
-          .parquet(appendDirs: _*)
+        spark.read.option("basePath", root).parquet(appendDirs: _*)
           .select(codesBase.columns.map(col): _*))
     val scored = allCodes
       .select(col("vec_id").as("neighbor_id"),

@@ -38,24 +38,16 @@ object StreamingVectorIngest {
 
   /** One micro-batch: idempotent append + drift log, then — every
     * `compactEvery` batches — [[graft.ops.VectorIndex.compactAppends]]
-    * folds the accumulated `append_id=` trees into the base table (r13
-    * verdict item 3: without a fold the lane leaves one directory tree
-    * per batch forever). Folding is replay-safe even for the id just
-    * appended: the fold tombstones it, and a retried batch of a
+    * merges the accumulated `append_id=` trees into one by
+    * copy-then-commit (without a fold the lane leaves one directory tree
+    * per batch forever; the copy needs no atomic rename, so the same
+    * cadence runs on object stores). Folding is replay-safe even for the
+    * id just appended: the fold tombstones it, and a retried batch of a
     * tombstoned id is a no-op by [[graft.ops.VectorIndex.appendToIvf]]'s
     * contract. Public so specs and backfill jobs can drive it with
-    * explicit batch ids.
-    *
-    * `compactMode` picks the fold for the deployment's storage (r16):
-    * "rename" (default — atomic-rename stores, file moves),
-    * "logical" (meta-only; bounds accounting but not dir count), or
-    * "copy" (copy-then-commit — bounds dir count with no rename in the
-    * data plane; the object-store cadence). */
+    * explicit batch ids. */
   def processBatch(batch: DataFrame, batchId: Long,
-                   indexPath: String, compactEvery: Int = 0,
-                   compactMode: String = "rename"): Unit = {
-    require(Set("rename", "logical", "copy").contains(compactMode),
-      s"compactMode must be rename|logical|copy, got $compactMode")
+                   indexPath: String, compactEvery: Int = 0): Unit = {
     val spark = batch.sparkSession
     val kind = graft.ops.VectorIndex.indexStats(spark, indexPath)
       .getOrElse("kind", "?")
@@ -77,12 +69,10 @@ object StreamingVectorIngest {
       s"baseRows=${stats.getOrElse("baseRows", "?")}, " +
       s"rebuildAdvised=${stats.getOrElse("rebuildAdvised", "?")}")
     if (compactEvery > 0 && batchId > 0L && batchId % compactEvery == 0L) {
-      val folded = graft.ops.VectorIndex.compactAppends(spark, indexPath,
-        logical = compactMode == "logical",
-        copyCommit = compactMode == "copy")
+      val folded = graft.ops.VectorIndex.compactAppends(spark, indexPath)
       if (folded > 0)
         println(s"[vec-ingest] compacted $folded append dirs " +
-          s"($compactMode) at $indexPath (cadence $compactEvery)")
+          s"at $indexPath (cadence $compactEvery)")
     }
   }
 
@@ -94,10 +84,9 @@ object StreamingVectorIngest {
     * decision, not a streaming one). */
   def ingestStream(vecs: DataFrame, indexPath: String,
                    checkpointDir: String,
-                   compactEvery: Int = 0,
-                   compactMode: String = "rename"): StreamingQuery = {
+                   compactEvery: Int = 0): StreamingQuery = {
     val fn: (Dataset[Row], Long) => Unit =
-      (b, id) => processBatch(b, id, indexPath, compactEvery, compactMode)
+      (b, id) => processBatch(b, id, indexPath, compactEvery)
     vecs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(fn)

@@ -155,25 +155,6 @@ class IncrementalDedupSpec extends SparkSpec {
     }
   }
 
-  test("bloom-slimmed probe (bloomKeys > 0) == default path, row-exact — " +
-    "hand corpus and real split") {
-    val baseOcc = Dedup.shingleOccurrenceTable(base, "text", n = 5)
-    assert(spanRows(Dedup.incrementalRepeatedSpans(batch, "doc_id", "text",
-        baseOcc, n = 5, bloomKeys = 1000)) ===
-      spanRows(Dedup.incrementalRepeatedSpans(batch, "doc_id", "text",
-        baseOcc, n = 5)))
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val occ = Dedup.shingleOccurrenceTable(
-      docs.filter(col("doc_id") % 2 === 0), "text", n = 10)
-    val bloomed = spanRows(Dedup.incrementalRepeatedSpans(
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", occ,
-      n = 10, bloomKeys = 500000))
-    val default = spanRows(Dedup.incrementalRepeatedSpans(
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", occ, n = 10))
-    assert(bloomed === default)
-    assert(bloomed.nonEmpty)
-  }
-
   test("micro-batch broadcast gate: spans identical to the shuffle path; " +
     "in-gate plan broadcasts the batch keys into the state slim") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -122,7 +122,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("compactAppends: serve set identical through the fold; append " +
-    "dirs drain; replay of a folded id is a tombstoned no-op; " +
+    "dirs merge into one; replay of a folded id is a tombstoned no-op; " +
     "post-compaction appends keep working; lease guards the writers") {
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivf_compact_").toString
@@ -137,18 +137,19 @@ class VectorIndexSpec extends SparkSpec {
       k = 5, nProbe = 2))
     val statsBefore = VectorIndex.indexStats(spark, path)
     assert(VectorIndex.compactAppends(spark, path) === 1)
-    // serve set unchanged — the fold moved files, re-encoded nothing
+    // serve set unchanged — the fold copied files, re-encoded nothing
     assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
       k = 5, nProbe = 2)) === before)
-    // bounded dirs: the appends tree is gone
-    assert(!new java.io.File(s"$path/appends").exists() ||
-      new java.io.File(s"$path/appends").listFiles().isEmpty)
+    // bounded dirs: the append dir merged into one committed fold dir
+    assert(new java.io.File(s"$path/appends").listFiles().map(_.getName)
+      .filter(_.startsWith("append_id=")).toSeq === Seq("append_id=fold0"))
     // accounting absorbed + tombstoned
     val stats = VectorIndex.indexStats(spark, path)
     assert(stats("baseRows").toLong ===
       statsBefore("baseRows").toLong + statsBefore("appendedRows").toLong)
     assert(stats("appendedRows") === "0")
-    assert(stats.contains("compacted_0") && !stats.contains("append_0"))
+    assert(stats.contains("compacted_0") && !stats.contains("append_0") &&
+      stats.contains("folded_fold0"))
     // replay of the FOLDED id: a no-op, not a duplicate
     VectorIndex.appendToIvf(a1, path, appendId = 0L)
     assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
@@ -207,55 +208,6 @@ class VectorIndexSpec extends SparkSpec {
       "the count rule must NOT be what flips the flag here")
     assert(after("rebuildAdvised") === "true",
       s"drift must flip rebuildAdvised: $after")
-  }
-
-  test("LOGICAL (rename-free) compactAppends (r14 verdict item 3): zero " +
-    "file moves — the append tree is byte-identical before and after — " +
-    "serve set unchanged, replay of the folded id no-ops, accounting " +
-    "absorbed; a later PHYSICAL compact drains the folded dir without " +
-    "re-absorbing its rows") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivf_logical_").toString
-    VectorIndex.buildIvf(baseVecs, path, centroidStride = 50)
-    VectorIndex.appendToIvf(appendBatch, path, appendId = 0L)
-    val servedBefore = rows(VectorIndex.ivfTopKIndexed(spark, path,
-      queries, k = 5, nProbe = 2))
-    def tree(p: String): Map[String, Long] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(p)).map(f => f.getPath -> f.length()).toMap
-    }
-    val tree0 = tree(s"$path/appends")
-    val st0 = VectorIndex.indexStats(spark, path)
-    // the no-rename property, asserted directly: every file under the
-    // append tree is still there, same path, same length
-    assert(VectorIndex.compactAppends(spark, path, logical = true) === 1)
-    assert(tree(s"$path/appends") === tree0,
-      "a logical fold must not move, rename, or delete a single file")
-    val st1 = VectorIndex.indexStats(spark, path)
-    assert(st1.contains("folded_0") && !st1.contains("append_0"))
-    assert(st1("appendedRows") === "0")
-    assert(st1("baseRows").toLong ===
-      st0("baseRows").toLong + st0("append_0").toLong,
-      "the folded rows must be absorbed into the base accounting")
-    assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
-      k = 5, nProbe = 2)) === servedBefore,
-      "the folded dir must keep serving in place")
-    // replay of the logically folded id: tombstoned no-op
-    VectorIndex.appendToIvf(appendBatch, path, appendId = 0L)
-    assert(VectorIndex.indexStats(spark, path)("appendedRows") === "0")
-    assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
-      k = 5, nProbe = 2)) === servedBefore)
-    // a later PHYSICAL compact drains the folded dir (moves files, no
-    // row re-absorption) and the serve set still hash-matches
-    assert(VectorIndex.compactAppends(spark, path) === 1)
-    val st2 = VectorIndex.indexStats(spark, path)
-    assert(st2.contains("compacted_0") && !st2.contains("folded_0"))
-    assert(st2("baseRows") === st1("baseRows"),
-      "the physical drain of a logically-folded id must not double-count")
-    assert(!new java.io.File(s"$path/appends/append_id=0").exists())
-    assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
-      k = 5, nProbe = 2)) === servedBefore)
   }
 
   test("rebuildAdvised is STICKY across compactAppends (r14 ADVICE " +
@@ -353,7 +305,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(e2.getMessage.contains("no vector index"))
   }
 
-  test("COPY-THEN-COMMIT compactAppends (r15 verdict item 2): on a " +
+  test("COPY-THEN-COMMIT compactAppends: on a " +
     "rename-refusing store, k append dirs merge into ONE committed dir " +
     "by pure copies + one atomic meta write — dir count SHRINKS, serve " +
     "set and replay contract unchanged; crashed half-copies and crashed " +
@@ -367,9 +319,8 @@ class VectorIndexSpec extends SparkSpec {
       appendId = 0L)
     VectorIndex.appendToIvf(emb.filter(col("vec_id") % 50 === 2), path,
       appendId = 1L)
-    // a logical fold first (the object-store cadence shape): two dirs
-    // keep serving in place as folded_ rows
-    assert(VectorIndex.compactAppends(spark, path, logical = true) === 2)
+    // a first fold: the two dirs merge into fold0
+    assert(VectorIndex.compactAppends(spark, path) === 2)
     VectorIndex.appendToIvf(emb.filter(col("vec_id") % 50 === 3), path,
       appendId = 2L)
     val before = rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
@@ -379,23 +330,19 @@ class VectorIndexSpec extends SparkSpec {
       .map(_.toSeq.map(_.getName).filter(_.startsWith("append_id="))
         .sorted)
       .getOrElse(Seq.empty)
-    assert(appendDirs().size === 3)
+    assert(appendDirs() === Seq("append_id=2", "append_id=fold0"))
     // every call below goes through the rename-refusing simulation
     spark.sparkContext.hadoopConfiguration.set("fs.norename.impl",
       classOf[NoRenameFs].getName)
     val nr = s"norename:$path"
-    // contrast pin: the physical (rename) fold cannot run on this store
-    val exPhys = intercept[UnsupportedOperationException] {
-      VectorIndex.compactAppends(spark, nr)
-    }
-    assert(exPhys.getMessage.contains("rename disabled"))
-    // the copy-commit fold CAN: 3 source dirs (1 live + 2 folded) → 1
-    assert(VectorIndex.compactAppends(spark, nr, copyCommit = true) === 3)
-    assert(appendDirs() === Seq("append_id=fold0"),
+    // 2 source dirs (1 live + the merged fold0) → 1, no rename anywhere
+    assert(VectorIndex.compactAppends(spark, nr) === 2)
+    assert(appendDirs() === Seq("append_id=fold1"),
       "the directory count must actually shrink")
     val st = VectorIndex.indexStats(spark, path)
-    assert(st.contains("folded_fold0") && st.contains("compacted_0") &&
-      st.contains("compacted_1") && st.contains("compacted_2"))
+    assert(st.contains("folded_fold1") && st.contains("compacted_fold0") &&
+      st.contains("compacted_0") && st.contains("compacted_1") &&
+      st.contains("compacted_2"))
     assert(st("appendedRows") === "0")
     assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
       k = 5, nProbe = 2)) === before,
@@ -419,15 +366,18 @@ class VectorIndexSpec extends SparkSpec {
     // next cadence: an empty live append + refold of the merged dir
     VectorIndex.appendToIvf(emb.filter(col("vec_id") < -1), path,
       appendId = 3L)
-    assert(VectorIndex.compactAppends(spark, nr, copyCommit = true) === 2)
-    assert(appendDirs() === Seq("append_id=fold1"),
+    assert(VectorIndex.compactAppends(spark, nr) === 2)
+    assert(appendDirs() === Seq("append_id=fold2"),
       "GC must remove the crashed half-copy and the zombie source; the " +
         "refold must leave exactly one merged dir")
+    // the merged dir's rows were absorbed at its own commit: refolding
+    // it (with an empty live append) must not re-absorb them
+    assert(VectorIndex.indexStats(spark, path)("baseRows") === st("baseRows"))
     assert(rows(VectorIndex.ivfTopKIndexed(spark, path, queries,
       k = 5, nProbe = 2)) === before)
     // a lone merged dir with no live appends: refolding it is churn — no-op
-    assert(VectorIndex.compactAppends(spark, nr, copyCommit = true) === 0)
-    assert(appendDirs() === Seq("append_id=fold1"))
+    assert(VectorIndex.compactAppends(spark, nr) === 0)
+    assert(appendDirs() === Seq("append_id=fold2"))
   }
 }
 

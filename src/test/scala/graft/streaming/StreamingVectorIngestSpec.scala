@@ -99,51 +99,18 @@ class StreamingVectorIngestSpec extends SparkSpec {
       emb.filter(col("vec_id") % 50 === 1).select("vec_id", "embedding"),
       oneShot, appendId = 0L)
     assert(serveRows(streamed) === serveRows(oneShot))
-    // bounded: the fold drained every append_id= tree
-    val appDirs = Option(new java.io.File(s"$streamed/appends").listFiles())
-      .map(_.count(_.getName.startsWith("append_id="))).getOrElse(0)
-    assert(appDirs === 0, s"fold must drain append dirs, found $appDirs")
-    val stats = VectorIndex.indexStats(spark, streamed)
-    assert(stats.contains("compacted_0") && stats.contains("compacted_1"))
-    // replay of FOLDED batch 1 through the driver: tombstoned no-op
-    StreamingVectorIngest.processBatch(b1.toDF("vec_id", "embedding"),
-      1L, streamed, compactEvery = 2)
-    assert(serveRows(streamed) === serveRows(oneShot))
-    assert(VectorIndex.indexStats(spark, streamed)("appendedRows") === "0")
-  }
-
-  test("compactMode = copy (r16): the ingest cadence folds by " +
-    "copy-then-commit — ONE merged dir, no renames in the data plane, " +
-    "serve identical to the one-shot append, folded replay no-ops") {
-    val streamed = java.nio.file.Files
-      .createTempDirectory("graft_vec_ingest_cc_").toString
-    val oneShot = java.nio.file.Files
-      .createTempDirectory("graft_vec_oneshot_cc_").toString
-    VectorIndex.buildIvf(baseVecs, streamed, centroidStride = 50)
-    VectorIndex.buildIvf(baseVecs, oneShot, centroidStride = 50)
-    val (b0, b1) = (streamRows(1L), streamRows(51L))
-    StreamingVectorIngest.processBatch(b0.toDF("vec_id", "embedding"),
-      0L, streamed, compactEvery = 2, compactMode = "copy")
-    StreamingVectorIngest.processBatch(b1.toDF("vec_id", "embedding"),
-      1L, streamed, compactEvery = 2, compactMode = "copy")
-    StreamingVectorIngest.processBatch(b0.toDF("vec_id", "embedding")
-      .limit(0), 2L, streamed, compactEvery = 2, compactMode = "copy")
-    VectorIndex.appendToIvf(
-      emb.filter(col("vec_id") % 50 === 1).select("vec_id", "embedding"),
-      oneShot, appendId = 0L)
-    assert(serveRows(streamed) === serveRows(oneShot))
     // bounded: the sources merged into exactly one committed fold dir
     val appDirs = Option(new java.io.File(s"$streamed/appends").listFiles())
       .map(_.toSeq.map(_.getName).filter(_.startsWith("append_id="))
         .sorted).getOrElse(Seq.empty)
     assert(appDirs === Seq("append_id=fold0"),
-      s"copy fold must merge into one dir, found $appDirs")
+      s"fold must merge the append dirs into one, found $appDirs")
     val stats = VectorIndex.indexStats(spark, streamed)
     assert(stats.contains("compacted_0") && stats.contains("compacted_1") &&
       stats.contains("folded_fold0"))
-    // replay of a copy-committed batch through the driver: no-op
+    // replay of FOLDED batch 1 through the driver: tombstoned no-op
     StreamingVectorIngest.processBatch(b1.toDF("vec_id", "embedding"),
-      1L, streamed, compactEvery = 2, compactMode = "copy")
+      1L, streamed, compactEvery = 2)
     assert(serveRows(streamed) === serveRows(oneShot))
     assert(VectorIndex.indexStats(spark, streamed)("appendedRows") === "0")
   }
