@@ -2,17 +2,16 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Deterministic replacement for the reference's Faker usage (SURVEY.md §2.3
-  * V16): names, emails, sentences, times, lorem filler. Every draw is keyed on
+  * V16): names, emails, lorem words, times, filler. Every draw is keyed on
   * `(docId, slot)` through [[DetHash]] — stable across partitions/retries, no
   * task-local RNG state (Faker seeding at `modules/content_generator.py:259-262`
   * is global-stream and unreproducible in parallel).
   *
-  * Wordlists are small embedded arrays; Column draws use `element_at` over
-  * array literals so everything stays inside whole-stage codegen.
+  * Wordlists are small embedded arrays; the DLP render draws from them in
+  * its native kernel ([[graft.pipeline.RenderKernel]]).
   */
 object TextGen {
 
@@ -60,17 +59,14 @@ object TextGen {
     val d = Domains(DetHash.nextInt(key, slot + 2000, Domains.size))
     s"$f.$l@$d"
   }
-  def hhmm(key: Long, slot: Long): String =
-    f"${DetHash.nextInt(key, slot, 24)}%02d:${DetHash.nextInt(key, slot + 1, 60)}%02d"
+  /** `HH:MM`, hour and minute each zero-padded to two digits. */
+  def hhmm(key: Long, slot: Long): String = {
+    val (h, m) = (DetHash.nextInt(key, slot, 24), DetHash.nextInt(key, slot + 1, 60))
+    new String(Array((h / 10 + '0').toChar, (h % 10 + '0').toChar, ':',
+      (m / 10 + '0').toChar, (m % 10 + '0').toChar))
+  }
   def loremWord(key: Long, slot: Long): String =
     Lorem(DetHash.nextInt(key, slot, Lorem.size))
-  /** A ~nWords sentence of lorem, capitalized, period-terminated. */
-  def sentence(key: Long, slot: Long, nWords: Int): String = {
-    val ws = (0 until nWords).map(i => loremWord(key, slot + i))
-    ws.head.capitalize + (if (ws.tail.nonEmpty) " " + ws.tail.mkString(" ") else "") + "."
-  }
-
-  // ---- Column mirrors ----
 
   /** `xs` as one `array<string>` literal with non-null elements: the type
     * of `array(xs.map(lit): _*)`, which the optimizer folds to this same
@@ -80,75 +76,14 @@ object TextGen {
     org.apache.spark.sql.GraftColumnBridge.column(
       Literal.create(xs, ArrayType(StringType, containsNull = false)))
 
-  private def pick(arr: IndexedSeq[String], key: Column, slot: Column): Column =
-    element_at(constArray(arr), DetHash.nextIntCol(key, slot, arr.size) + 1)
-
-  def firstNameCol(key: Column, slot: Column): Column = pick(FirstNames, key, slot)
-  def lastNameCol(key: Column, slot: Column): Column = pick(LastNames, key, slot)
-  def fullNameCol(key: Column, slot: Column): Column =
-    concat(firstNameCol(key, slot), lit(" "), lastNameCol(key, slot + lit(1000L)))
-  def emailCol(key: Column, slot: Column): Column =
-    concat(lower(firstNameCol(key, slot)), lit("."),
-      lower(lastNameCol(key, slot + lit(1000L))), lit("@"),
-      pick(Domains, key, slot + lit(2000L)))
-  def hhmmCol(key: Column, slot: Column): Column =
-    concat(lpad(DetHash.nextIntCol(key, slot, 24).cast("string"), 2, "0"), lit(":"),
-      lpad(DetHash.nextIntCol(key, slot + lit(1L), 60).cast("string"), 2, "0"))
-  def loremWordCol(key: Column, slot: Column): Column = pick(Lorem, key, slot)
-
-  /** `n`-word lorem filler in one expression (closed-form replacement for the
-    * reference's grow-until-target loop, `modules/content_generator.py:236-242`;
-    * SURVEY.md §2.4 T6). `n` may be a computed Column; n<=0 → empty string. */
-  def loremWordsCol(key: Column, n: Column, slotBase: Column): Column =
-    when(n <= 0, lit("")).otherwise(
-      array_join(
-        transform(sequence(lit(1L), greatest(n.cast("long"), lit(1L))),
-          i => loremWordCol(key, slotBase + i)),
-        " "))
-
-  /** [[loremWordsCol]] via the NATIVE codegen expression
-    * ([[LoremWordsExpr]]): one compiled loop renders every word, no
-    * per-word interpreted lambda and no materialized sequence array.
-    * Bit-identical to the HOF form (KernelPropertySpec pins it); the
-    * scale-run render path uses this one. */
-  def loremWordsNativeCol(key: Column, n: Column, slotBase: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    column(LoremWordsExpr(
-      expression(key.cast("long")),
-      expression(n.cast("long")),
-      expression(slotBase.cast("long"))))
-  }
-
-  /** Line-structured variant: same word stream, but ~every 12th separator
-    * is a newline (deterministic draw). `replace('\n', ' ')` recovers
-    * [[loremWordsNativeCol]] exactly. Organic corpora have line structure;
-    * one multi-KB line is the worst case for per-boundary regex scans
-    * (see [[LoremWordsKernel.render]]). */
-  def loremProseNativeCol(key: Column, n: Column, slotBase: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    column(LoremWordsExpr(
-      expression(key.cast("long")),
-      expression(n.cast("long")),
-      expression(slotBase.cast("long")), prose = true))
-  }
+  /** The default filler is `n` words of [[LoremCycle]] from a per-doc
+    * rotation offset in [0, LoremRotations)
+    * ([[graft.pipeline.RenderKernel.text]]): maximally boilerplate-heavy,
+    * as the reference's filler is. */
+  val LoremRotations = 61
 
   /** Precomputed deterministic lorem cycle — sized for the max word target
     * (4000, `config.json:8`) plus the rotation window. */
-  private val MaxFill = 4000
-  private val Rotations = 61
   val LoremCycle: IndexedSeq[String] =
-    (0 until (MaxFill + Rotations)).map(i => Lorem((i * 7 + i / Lorem.size) % Lorem.size))
-
-  /** Fast filler: `n` lorem words starting at a per-key rotation offset.
-    * Semantically the same role as [[loremWordsCol]] but evaluated as
-    * `slice` + `array_join` over a plan-constant array — stays inside
-    * whole-stage codegen instead of running one interpreted lambda per word
-    * (which dominated render time: ~40 ms/doc at a 4000-word target). */
-  def loremFillCol(key: Column, slot: Column, n: Column): Column = {
-    val cycle = constArray(LoremCycle)
-    val off = DetHash.nextIntCol(key, slot, Rotations)
-    when(n <= 0, lit(""))
-      .otherwise(array_join(
-        slice(cycle, off + 1, greatest(n.cast("int"), lit(1))), " "))
-  }
+    (0 until (4000 + LoremRotations)).map(i => Lorem((i * 7 + i / Lorem.size) % Lorem.size))
 }

@@ -155,7 +155,7 @@ object TokenKernel {
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   /** Whitespace word count — `split("\\s+").count(_.nonEmpty)`. */
-  def wordCount(text: String): Long = {
+  def wordCount(text: CharSequence): Long = {
     if (text == null) return 0L
     var n = 0L
     var inTok = false

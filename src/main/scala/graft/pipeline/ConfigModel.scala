@@ -24,8 +24,6 @@ case class PipelineConfig(
     instanceCountDistribution: Seq[(String, Double)],
     sits: Seq[SitDef]) {
 
-  def sitById: Map[String, SitDef] = sits.map(s => s.id -> s).toMap
-
   /** Broadcastable 50-row dimension Dataset (SURVEY.md §1.1). */
   def sitDim(spark: SparkSession): Dataset[SitDef] = {
     import spark.implicits._

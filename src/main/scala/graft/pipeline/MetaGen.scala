@@ -16,46 +16,18 @@ import graft.expr.TextGen.constArray
   * (SURVEY.md §4.2): doc `i` draws all attributes from `(i, slot)` hashes and
   * covers `n_sits(i)` consecutive SITs starting at a rotating offset
   * `(i*17) mod 50` — deterministic, shuffle-free, embarrassingly parallel.
-  * A driver-side top-up loop extends the range if any SIT is short (cheap
-  * aggregate per iteration; ≥1 iteration only for tiny corpora).
+  * The driver finds the smallest doc range that covers every SIT with the
+  * same Scala draws ([[docsNeeded]]), so sizing the plan runs no job.
+  *
+  * The plan is one projection of `range`: format and word target are small
+  * Column expressions, and the nested `sits` array is one native
+  * expression per doc ([[SitsExpr]], calling [[RenderKernel.sits]]) rather
+  * than a `transform` tree that every frame built on the docs would carry
+  * and analyze again.
   */
 object MetaGen {
 
-  /** Expected SITs/doc under a sit-count pmf (reference observes 3.40). */
-  def expectedSitsPerDoc(cfg: PipelineConfig): Double =
-    cfg.sitCountDistribution.map {
-      case ("1", p)   => 1.0 * p
-      case ("2-3", p) => 2.5 * p
-      case ("4-6", p) => 5.0 * p
-      case (">6", p)  => 8.5 * p
-      case (_, p)     => 1.0 * p
-    }.sum
-
-  // ---- per-doc attribute expressions (G2..G9), all codegen'd ----
-
-  /** G2+G3: sit-count bucket via inverse-CDF over a [0,100) hash draw, then
-    * uniform within bucket (`modules/meta_generator.py:9-29`). */
-  def nSitsCol(id: Column): Column = {
-    val p = pctCol(id, lit(2L))
-    when(p < 30, lit(1))
-      .when(p < 60, lit(2) + nextIntCol(id, lit(3L), 2))
-      .when(p < 90, lit(4) + nextIntCol(id, lit(3L), 3))
-      .otherwise(lit(7) + nextIntCol(id, lit(3L), 4))
-  }
-
-  /** G3: instance-count bucket (`modules/meta_generator.py:31-40`). */
-  def instancesCol(id: Column, k: Column): Column = {
-    val p = pctCol(id, lit(200L) + k)
-    when(p < 35, lit(1))
-      .when(p < 70, lit(3) + nextIntCol(id, lit(300L) + k, 3))
-      .when(p < 90, lit(6) + nextIntCol(id, lit(300L) + k, 5))
-      .otherwise(lit(11) + nextIntCol(id, lit(300L) + k, 10))
-  }
-
-  /** G4: Bernoulli TP/FP label (`modules/meta_generator.py:116`). */
-  def labelCol(id: Column, k: Column, tpRatio: Double): Column =
-    when(pctCol(id, lit(100L) + k) < (tpRatio * 100).round.toInt, lit("TP"))
-      .otherwise(lit("FP"))
+  // ---- per-doc attribute expressions (G2..G9) ----
 
   /** G5: rule-based confidence (`modules/meta_generator.py:42-53`). */
   def confidenceCol(label: Column, instances: Column): Column =
@@ -80,26 +52,12 @@ object MetaGen {
 
   /** Nested `sits` array for doc `id` — G8 rewritten: `n` consecutive SITs
     * from rotating offset `(id*17) mod 50` (17 coprime with |sits| keeps
-    * coverage uniform; n ≤ 10 < 50 keeps SITs distinct within a doc). */
+    * coverage uniform; n ≤ 10 < 50 keeps SITs distinct within a doc), each
+    * with its G3 instance count, G4 label and G5 confidence. One native
+    * expression ([[SitsExpr]] over [[RenderKernel.sits]]) draws them all. */
   def sitsCol(id: Column, cfg: PipelineConfig): Column = {
-    val sits = cfg.sits.toIndexedSeq
-    val names = constArray(sits.map(_.name))
-    val ids = constArray(sits.map(_.id))
-    // nested `array`s: with every tc list empty they type as array<void>
-    val tcs = array(sits.map(s => array(s.tc.map(lit): _*)): _*)
-    val base = pmod(id * 17, lit(sits.size.toLong))
-    transform(sequence(lit(0L), nSitsCol(id).cast("long") - 1), k => {
-      val idx = (pmod(base + k, lit(sits.size.toLong))).cast("int")
-      val inst = instancesCol(id, k)
-      val label = labelCol(id, k, cfg.tpRatio)
-      struct(
-        element_at(ids, idx + 1).as("sit_id"),
-        element_at(names, idx + 1).as("sit_name"),
-        label.as("label"),
-        inst.cast("long").as("instances"),
-        confidenceCol(label, inst).as("confidence"),
-        element_at(tcs, idx + 1).as("tcs"))
-    })
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(SitsExpr(expression(id), SitTable(cfg)))
   }
 
   /** One generation batch: doc_ids in (startId, startId+n]. */
@@ -124,8 +82,10 @@ object MetaGen {
     docs.select(explode(col("sits.sit_id")).as("sit_id"))
       .groupBy("sit_id").count()
 
-  /** Scala mirror of [[nSitsCol]] — bit-identical (same xxhash64 draws), so
-    * coverage is computable on the driver without running a job. */
+  /** G2+G3: sit-count bucket via inverse-CDF over a [0,100) hash draw, then
+    * uniform within bucket (`modules/meta_generator.py:9-29`). The driver
+    * sizes the plan with it ([[docsNeeded]]) and [[RenderKernel.sits]] draws
+    * each doc's SITs with it, so coverage needs no job. */
   def nSitsScala(id: Long): Int = {
     val p = graft.expr.DetHash.pct(id, 2)
     if (p < 30) 1

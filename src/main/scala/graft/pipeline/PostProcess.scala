@@ -13,24 +13,25 @@ import graft.sink.{DocSink, Eml, MiniFormats}
   * BASELINE.md). Here the per-format encoders run as one distributed
   * projection producing binary columns, and files — when a file-per-doc
   * export is actually wanted — go through one `foreachPartition` pass of
-  * the sink. Header extraction (P9) and path derivation stay
-  * declarative. The mapping's new columns
+  * the sink. Header extraction (P9) is one native line scan per header,
+  * path derivation stays declarative. The mapping's new columns
   * depend only on each row's filename and format, so [[updateMapping]] is a
   * projection of the mapping, not a join with the derived frame.
   */
 object PostProcess {
 
   /** P9 — "last matching header line wins" extraction
-    * (`modules/postprocessor.py:174-183`). `element_at(..., -1)` picks the
-    * last match; guarded by `size() > 0` so ANSI mode never sees an
-    * out-of-bounds index. */
+    * (`modules/postprocessor.py:174-183`): the `' '`-trimmed rest of the last
+    * line of `text` that starts with `header:` in any case, else `default`
+    * (also for a null `text`). One native line scan
+    * ([[LastHeaderExpr]], calling [[RenderKernel.lastHeader]]) equal to the
+    * `filter(split(text, "\n"), lower(_).startsWith(...))` form it
+    * replaced, which lower-cased every line of the doc once per header.
+    * `header` is ASCII letters. */
   def lastHeaderCol(text: Column, header: String, default: Column): Column = {
-    val matching = filter(split(text, "\n"),
-      l => lower(l).startsWith(header.toLowerCase + ":"))
-    val lastLine = element_at(matching, -1)
-    when(size(matching) > 0,
-      trim(lastLine.substr(instr(lastLine, ":") + 1, length(lastLine))))
-      .otherwise(default)
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(LastHeaderExpr(expression(text), expression(default),
+      header.toLowerCase(java.util.Locale.ROOT)))
   }
 
   private val docxUdf = udf((text: String) =>

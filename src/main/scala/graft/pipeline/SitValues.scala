@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 import graft.expr.{Checksums, DetHash}
 
 /** Stage-2 scalar value generators — SURVEY.md §2.3 V1–V15.
@@ -147,24 +145,4 @@ object SitValues {
       case _                => tpValue(sitId, sitName, key, slot)
     }
     else fpValue(sitId, sitName)
-
-  /** Per-instance values for a doc's SIT list, index-aligned with `sits`:
-    * element k holds `instances(k)` values (distinct draws for TP; the fixed
-    * placeholder literal for FP). The reference renders each SIT value only
-    * once regardless of `instances` (`content_generator.py:208-234`), which
-    * makes its own TP check (`validator.py:301-309`, needs ≥ instances real
-    * matches) structurally unsatisfiable — a defect we do not inherit
-    * (SURVEY.md §5): we emit every expected instance. */
-  private val instanceValuesUdf = udf { (docId: Long, sits: Seq[org.apache.spark.sql.Row]) =>
-    sits.zipWithIndex.map { case (r, k) =>
-      val n = math.max(1L, r.getAs[Long]("instances")).toInt
-      (0 until n).map { j =>
-        value(r.getAs[String]("sit_id"), r.getAs[String]("sit_name"),
-          r.getAs[String]("label"), docId, k.toLong * 1024 + j)
-      }
-    }
-  }
-
-  def instanceValuesCol(docId: Column, sits: Column): Column =
-    instanceValuesUdf(docId, sits)
 }

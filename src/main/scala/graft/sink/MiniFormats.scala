@@ -85,9 +85,24 @@ object MiniFormats {
       |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="word/document.xml"/>
       |</Relationships>""".stripMargin
 
+  /** `text.split("\n\n", -1)` without the regex engine: `String.split`
+    * takes its fast path only for a one-character pattern. */
+  private[sink] def paragraphs(text: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var start = 0
+    var i = text.indexOf("\n\n")
+    while (i >= 0) {
+      out += text.substring(start, i)
+      start = i + 2
+      i = text.indexOf("\n\n", start)
+    }
+    out += text.substring(start)
+    out.result()
+  }
+
   /** One paragraph per `\n\n` block, like `write_docx`. */
   def docxBytes(text: String): Array[Byte] = {
-    val paras = text.split("\n\n", -1).map { p =>
+    val paras = paragraphs(text).map { p =>
       s"<w:p><w:r><w:t xml:space=\"preserve\">${xmlEscape(p.replace("\n", " "))}</w:t></w:r></w:p>"
     }.mkString
     val doc =
@@ -226,18 +241,32 @@ object MiniFormats {
     * (`modules/postprocessor.py:55-68`). */
   def wrapLines(text: String, width: Int = 100): Seq[String] = {
     val out = Seq.newBuilder[String]
-    text.split("\n\n", -1).foreach { paragraph =>
-      val words = paragraph.split("\\s+").filter(_.nonEmpty)
-      var line = ""
-      words.foreach { w =>
-        if (line.length + 1 + w.length > width) { out += line; line = w }
-        else line = if (line.isEmpty) w else line + " " + w
+    val line = new java.lang.StringBuilder(width)
+    paragraphs(text).foreach { p =>
+      line.setLength(0)
+      // the words of `p.split("\\s+")`, scanned without the regex engine
+      var i = 0
+      while (i < p.length) {
+        while (i < p.length && isSpace(p.charAt(i))) i += 1
+        val start = i
+        while (i < p.length && !isSpace(p.charAt(i))) i += 1
+        if (i > start) {
+          if (line.length + 1 + (i - start) > width) {
+            out += line.toString
+            line.setLength(0)
+          } else if (line.length > 0) line.append(' ')
+          line.append(p, start, i)
+        }
       }
-      if (line.nonEmpty) out += line
+      if (line.length > 0) out += line.toString
       out += ""
     }
     out.result()
   }
+
+  /** Java regex `\s`: `[ \t\n\x0B\f\r]`. */
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   private def pdfEscape(s: String): String =
     s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")

@@ -62,18 +62,31 @@ object StreamingVectorIngest {
         s"vector index at $indexPath has kind=$other — the ingest lane " +
           "appends to ivf or pq indexes")
     }
-    val stats = graft.ops.VectorIndex.indexStats(spark, indexPath)
-    println(s"[vec-ingest] batch $batchId -> $indexPath: " +
-      s"+${stats.getOrElse(s"append_$batchId", "?")} rows, " +
-      s"appendedRows=${stats.getOrElse("appendedRows", "?")} of " +
-      s"baseRows=${stats.getOrElse("baseRows", "?")}, " +
-      s"rebuildAdvised=${stats.getOrElse("rebuildAdvised", "?")}")
+    println(batchLine(batchId, indexPath,
+      graft.ops.VectorIndex.indexStats(spark, indexPath)))
     if (compactEvery > 0 && batchId > 0L && batchId % compactEvery == 0L) {
       val folded = graft.ops.VectorIndex.compactAppends(spark, indexPath)
       if (folded > 0)
         println(s"[vec-ingest] compacted $folded append dirs " +
           s"at $indexPath (cadence $compactEvery)")
     }
+  }
+
+  /** The drift log line of batch `batchId`, from the index meta after its
+    * append. A replay of a batch that a fold already tombstoned finds
+    * `compacted_<batchId>` instead of `append_<batchId>`: its append was a
+    * no-op, and the line says so. */
+  private[streaming] def batchLine(batchId: Long, indexPath: String,
+                                   stats: Map[String, String]): String = {
+    val rows = (stats.get(s"append_$batchId"), stats.get(s"compacted_$batchId")) match {
+      case (Some(n), _) => s"+$n rows"
+      case (None, Some(n)) => s"+0 rows (no-op: already folded with $n rows)"
+      case _ => "+? rows"
+    }
+    s"[vec-ingest] batch $batchId -> $indexPath: $rows, " +
+      s"appendedRows=${stats.getOrElse("appendedRows", "?")} of " +
+      s"baseRows=${stats.getOrElse("baseRows", "?")}, " +
+      s"rebuildAdvised=${stats.getOrElse("rebuildAdvised", "?")}"
   }
 
   /** Start the ingest stream: `vecs` is a streaming DataFrame carrying

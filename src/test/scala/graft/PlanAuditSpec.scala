@@ -289,6 +289,27 @@ class PlanAuditSpec extends SparkSpec {
       s"sit dim not broadcast in:\n$plan")
   }
 
+  test("DLP plans stay small: one native expression per document and " +
+    "stage, a corpus scan ships under 100 KB") {
+    import graft.pipeline._
+    // expression nodes over every node of the analyzed plan; the
+    // Column-DSL render held 848 (docs), 1,620 (corpus) and 1,951
+    // (derived), and a corpus scan serialized to 289 KB
+    def nodes(df: DataFrame): Int = df.queryExecution.analyzed.collect {
+      case p => p.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
+    val cfg = PipelineConfig.scaled(perSit = 10)
+    val docs = MetaGen.docs(spark, cfg)
+    val corpus = ContentGen.corpus(docs)
+    val derived = PostProcess.derive(corpus)
+    assert(nodes(docs) <= 120, s"docs: ${nodes(docs)} expression nodes")
+    assert(nodes(corpus) <= 200, s"corpus: ${nodes(corpus)} expression nodes")
+    assert(nodes(derived) <= 350, s"derived: ${nodes(derived)} expression nodes")
+    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      .serialize(corpus.queryExecution.toRdd).limit()
+    assert(bytes <= 100 * 1024, s"corpus scan RDD serializes to $bytes bytes")
+  }
+
   test("final DLP mapping: one narrow projection of the corpus, no join, " +
     "no exchange") {
     import graft.pipeline._

@@ -58,9 +58,9 @@ class ExprSpec extends SparkSpec {
     import spark.implicits._
     val df = (1L to 100L).toDF("id").repartition(7)
       .select(col("id"),
-        TextGen.emailCol(col("id"), lit(9001L)).as("email"),
-        TextGen.fullNameCol(col("id"), lit(5L)).as("name"),
-        TextGen.hhmmCol(col("id"), lit(6L)).as("hhmm"))
+        TextGenColumns.emailCol(col("id"), lit(9001L)).as("email"),
+        TextGenColumns.fullNameCol(col("id"), lit(5L)).as("name"),
+        TextGenColumns.hhmmCol(col("id"), lit(6L)).as("hhmm"))
     df.collect().foreach { r =>
       val id = r.getLong(0)
       assert(r.getString(1) == TextGen.email(id, 9001L))
@@ -74,7 +74,7 @@ class ExprSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((1L, 17), (2L, 1), (3L, 0)).toDF("id", "n")
       .select(col("n"),
-        TextGen.loremWordsCol(col("id"), col("n"), lit(100L)).as("w"))
+        TextGenColumns.loremWordsCol(col("id"), col("n"), lit(100L)).as("w"))
     df.collect().foreach { r =>
       val n = r.getInt(0)
       val words = r.getString(1).split(" ").filter(_.nonEmpty)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.expr.TextGenColumns.loremWords
 import graft.sink.TarShards
 import org.apache.spark.sql.functions._
 
@@ -40,38 +41,35 @@ class KernelPropertySpec extends SparkSpec {
   }
 
   test("lorem_words native expression == HOF twin, incl. degenerate n") {
-    // the scale-run render path switched to the one-compiled-loop form;
-    // this pins it bit-identical to the transform(sequence(...)) twin on
-    // random keys and word counts, including n <= 0 (empty string)
+    // the render's one-compiled-loop kernel, pinned bit-identical to the
+    // transform(sequence(...)) form on random keys and word counts,
+    // including n <= 0 (empty string)
     val cases = (0 until 200).map(_ =>
       (rnd.nextLong(), rnd.nextInt(300).toLong - 5L)) :+ ((42L, 0L)) :+ ((7L, -3L))
-    val df = cases.toDF("key", "n").select(
-      graft.expr.TextGen.loremWordsNativeCol(col("key"), col("n"),
-        lit(20000L)).as("native"),
-      graft.expr.TextGen.loremWordsCol(col("key"), col("n"),
-        lit(20000L)).as("hof"))
-    assert(df.filter(col("native") =!= col("hof")).count() == 0)
-    // and the word count really is max(n, 0)
-    val lens = df.collect().zip(cases)
-    lens.foreach { case (r, (_, n)) =>
-      val words = r.getString(0).split(" ").count(_.nonEmpty)
-      assert(words == math.max(n, 0L), s"n=$n got $words words")
+    val hof = cases.toDF("key", "n").select(
+      graft.expr.TextGenColumns.loremWordsCol(col("key"), col("n"),
+        lit(20000L))).collect().map(_.getString(0))
+    cases.zip(hof).foreach { case ((key, n), want) =>
+      val got = loremWords(key, n, 20000L)
+      assert(got == want, s"key=$key n=$n")
+      // and the word count really is max(n, 0)
+      assert(got.split(" ").count(_.nonEmpty) == math.max(n, 0L),
+        s"n=$n got ${got.split(" ").count(_.nonEmpty)} words")
     }
   }
 
   test("lorem prose form: newline→space recovers the flat form exactly") {
     val cases = (0 until 50).map(_ => (rnd.nextLong(), rnd.nextInt(3000).toLong))
-    val rows = cases.toDF("key", "n").select(
-      graft.expr.TextGen.loremProseNativeCol(col("key"), col("n"),
-        lit(20000L)).as("prose"),
-      graft.expr.TextGen.loremWordsNativeCol(col("key"), col("n"),
-        lit(20000L)).as("flat")).collect()
-    rows.foreach { r =>
-      assert(r.getString(0).replace('\n', ' ') == r.getString(1))
+    val rows = cases.map { case (key, n) =>
+      (loremWords(key, n, 20000L, prose = true),
+        loremWords(key, n, 20000L))
+    }
+    rows.foreach { case (prose, flat) =>
+      assert(prose.replace('\n', ' ') == flat)
     }
     // line structure is real: a 3000-word draw must produce many lines,
     // none absurdly long (the quadratic-regex hazard is line length)
-    val long = rows.map(_.getString(0)).maxBy(_.length)
+    val long = rows.map(_._1).maxBy(_.length)
     val lines = long.split("\n")
     assert(lines.length > 50, s"expected prose lines, got ${lines.length}")
     assert(lines.map(_.length).max < 2000,

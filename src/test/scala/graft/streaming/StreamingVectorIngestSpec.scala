@@ -112,7 +112,26 @@ class StreamingVectorIngestSpec extends SparkSpec {
     StreamingVectorIngest.processBatch(b1.toDF("vec_id", "embedding"),
       1L, streamed, compactEvery = 2)
     assert(serveRows(streamed) === serveRows(oneShot))
-    assert(VectorIndex.indexStats(spark, streamed)("appendedRows") === "0")
+    val after = VectorIndex.indexStats(spark, streamed)
+    assert(after("appendedRows") === "0")
+    assert(StreamingVectorIngest.batchLine(1L, streamed, after).contains(
+      s": +0 rows (no-op: already folded with ${after("compacted_1")} rows),"))
+  }
+
+  test("batch log line: an append reports its rows, a replay of a folded " +
+    "batch says its append was a no-op") {
+    val common = Map("appendedRows" -> "50", "baseRows" -> "450",
+      "rebuildAdvised" -> "false")
+    assert(StreamingVectorIngest.batchLine(3L, "/idx",
+      common + ("append_3" -> "50")) ===
+      "[vec-ingest] batch 3 -> /idx: +50 rows, appendedRows=50 of " +
+        "baseRows=450, rebuildAdvised=false")
+    assert(StreamingVectorIngest.batchLine(2L, "/idx",
+      common + ("compacted_2" -> "50")) ===
+      "[vec-ingest] batch 2 -> /idx: +0 rows (no-op: already folded with " +
+        "50 rows), appendedRows=50 of baseRows=450, rebuildAdvised=false")
+    assert(StreamingVectorIngest.batchLine(4L, "/idx", Map.empty)
+      .startsWith("[vec-ingest] batch 4 -> /idx: +? rows, appendedRows=?"))
   }
 
   test("PQ ingest: streamed batches == one-shot append; replay of a PQ " +
