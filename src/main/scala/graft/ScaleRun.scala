@@ -663,63 +663,6 @@ object ScaleRun {
       (legs ++ Seq("|| driver-local:") ++ legsLocal).mkString("; ")
     } }
 
-    // ---- 5d. tier-4 vs vectorized whole-file crossover (r15 verdict
-    // item 3): the bulk probe's whole-file pass was argued, never
-    // measured. Both read modes FORCED at each density on the serving
-    // store: the sharp side reads admitted sub-files with per-file key
-    // predicates (files past the 512-key predicate cap degrade to whole
-    // reads — part of the honest measurement), the vectorized side reads
-    // the same admitted files whole. Rows differ by design (sharp drops
-    // non-matching rows — the subset every consumer re-filters anyway);
-    // the crossover table locates where the ProbeRowFilterMaxKeys gate
-    // (262144 keys) should sit. ----
-    phase("probe-crossover") { withDocParts {
-      val serve = graft.streaming.OccStateStore.open(spark, serveStateDir)
-      import spark.implicits._
-      val legs = Seq(25, 50, 100, 200, 400).map { nDocs =>
-        val batch = corpus.filter(col("doc_id") % 10 === 0)
-          .orderBy("doc_id").limit(nDocs)
-          .select("doc_id", "text").persist()
-        batch.count()
-        val (shEx, counts) = graft.ops.Dedup.prepareIncrementalBatch(
-          batch, "doc_id", "text", n = 10)
-        val nKeys = counts.count()
-        def side(rowFilter: Boolean): (Double, Long, Long, Int) = {
-          val t0 = System.nanoTime()
-          val pr = serve.probeReadTier(1L, counts, nKeys, rowFilter)
-          val pf = pr.frame.persist()
-          val rows = pf.count()
-          val secs = (System.nanoTime() - t0) / 1e9
-          // sharp bytes from the probe accumulators (snapshot right
-          // after the one materializing action); whole bytes as the
-          // recursive content size of every admitted dir (the scan
-          // reads the files whole, so dir bytes ARE the read)
-          val bytes =
-            if (rowFilter)
-              pr.bytesRead.map(_.value.toLong).getOrElse(0L) +
-                pr.metaBytesRead.map(_.value.toLong).getOrElse(0L)
-            else pr.wholePaths.map { d =>
-              val p = new org.apache.hadoop.fs.Path(d)
-              p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .getContentSummary(p).getLength
-            }.sum
-          val nFiles =
-            if (rowFilter) pr.rowFiltered.size else pr.wholePaths.size
-          pf.unpersist()
-          (secs, bytes, rows, nFiles)
-        }
-        val (sharpS, sharpB, sharpRows, sharpFiles) = side(rowFilter = true)
-        val (wholeS, wholeB, wholeRows, wholeFiles) = side(rowFilter = false)
-        shEx.unpersist(); counts.unpersist(); batch.unpersist()
-        f"$nDocs%d docs/$nKeys%d keys: sharp $sharpS%.1f s " +
-          f"${sharpB >> 20}%d MB ($sharpFiles%d files, $sharpRows%d rows) " +
-          f"vs whole $wholeS%.1f s ${wholeB >> 20}%d MB " +
-          f"($wholeFiles%d files, $wholeRows%d rows)"
-      }
-      spark.catalog.clearCache()
-      legs.mkString("; ")
-    } }
-
     // ---- synthetic event stream shared by phases 6-8 (deterministic:
     // integer arithmetic on the id, no rand) ----
     lazy val events = {

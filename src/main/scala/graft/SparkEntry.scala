@@ -62,24 +62,14 @@ object SparkEntry {
   /** A9/W6 — grouped top-K. Served by the typed bounded-state Aggregator:
     * measured at sf0.1 it beats the rank-window form (1.1s vs 1.4s here;
     * at scale it partial-aggregates to ≤k rows per group map-side instead
-    * of sorting every group's full row set after the shuffle). The window
-    * form remains first-class as [[windowTopK]] (and rank windows still
-    * gate q24/q25/q33); q36 keeps the Aggregator's own oracle row. */
+    * of sorting every group's full row set after the shuffle). Rank
+    * windows still gate q24/q25/q33; q36 keeps the Aggregator's own
+    * oracle row. */
   private def q02(s: SparkSession, dir: String): DataFrame =
     graft.ops.TopK.grouped(t(s, dir, "orders"), "o_custkey", "o_orderkey",
       "o_totalprice", k = 3)
       .select("o_custkey", "o_orderkey", "o_totalprice", "rank")
       .orderBy("o_custkey", "rank")
-
-  /** The rank-window top-K variant (previous q02 implementation) — kept as
-    * the composable form for callers that need arbitrary carried columns. */
-  def windowTopK(df: DataFrame, groupCol: String, orderCol: String,
-                 tieCol: String, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol)
-      .orderBy(col(orderCol).desc, col(tieCol).asc)
-    df.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
 
   /** A7 — value_counts histogram. */
   private def q03(s: SparkSession, dir: String): DataFrame =

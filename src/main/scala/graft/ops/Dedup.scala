@@ -258,15 +258,6 @@ object Dedup {
   private def hex32(h: Column, start: Int): Column =
     conv(substring(h, start, 8), 16, 10).cast("long")
 
-  /** MinHash signature for permutation `perm` (per-row array form; the
-    * distributed path below uses the equivalent explode +
-    * partial-aggregated `min`, which whole-stage-codegens). */
-  def minhashSigCol(shingles: Column, perm: Int): Column =
-    array_min(transform(shingles, { s =>
-      val h = md5(s)
-      kmPerm(hex32(h, 1), hex32(h, 9).bitwiseOR(lit(1L)), perm)
-    }))
-
   /** Fused per-doc band-key kernel: tokenize → shingle → md5 → running
     * min per permutation → band keys, all in ONE compiled pass — the
     * whole signature never exists as rows. Arithmetic is bit-for-bit the
@@ -858,7 +849,6 @@ object Dedup {
     else (0 to toks.length - n).map(i => toks.slice(i, i + n).mkString(" "))
   }
 
-  private val posShinglesUdf = udf((text: String, n: Int) => posShingles(text, n))
   private val shingleToksUdf =
     udf((text: String) => graft.expr.TokenKernel.shingleTokens(text).toSeq)
 

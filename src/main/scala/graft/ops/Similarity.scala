@@ -26,8 +26,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (s, v) => s + v)
 
-  def normCol(a: Column): Column = sqrt(dotCol(a, a))
-
   /** Pairwise-cosine kernel as a compiled UDF — kept as the PROOF TWIN of
     * the native expression below (same role RegexMatches plays for
     * RegexMatchesExpr): higher-order Catalyst folds are interpreted

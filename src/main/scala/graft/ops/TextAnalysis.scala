@@ -12,21 +12,13 @@ object TextAnalysis {
 
   /** Lowercased word tokens — native regex-free scan ([[graft.expr
     * .TokenKernel]]; JDK regex is serial under multithreading on this
-    * JVM — see Tokenize.scala). Regex twin: [[tokensColRegex]]. */
+    * JVM — see Tokenize.scala). */
   def tokensCol(text: Column): Column =
     graft.expr.Tokenize.tokensNative(text)
-
-  /** Definitional regex twin of [[tokensCol]] (TokenizeSpec equality). */
-  private[ops] def tokensColRegex(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9']+"), t => t =!= "")
 
   /** T7 — whitespace word count (Python `len(s.split())`); native scan. */
   def wordCountCol(text: Column): Column =
     graft.expr.Tokenize.wordCountNative(text)
-
-  /** Definitional regex twin of [[wordCountCol]]. */
-  private[ops] def wordCountColRegex(text: Column): Column =
-    size(filter(split(text, "\\s+"), w => w =!= "")).cast("long")
 
   /** Counting kernels: the Column forms materialize every match/token
     * into an array only to take its size — these count in one compiled
@@ -333,11 +325,6 @@ object TextAnalysis {
     * (OpsSpec pins equality). */
   private[ops] def fingerprintColExpr(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "[^a-z0-9']+", " ")))
-
-  /** Winnowing-style sketch: the `k` smallest md5s of word 4-grams —
-    * a compact rolling-hash fingerprint for containment checks. */
-  def winnowSketchCol(text: Column, k: Int = 8, n: Int = 4): Column =
-    slice(array_sort(transform(Dedup.shinglesCol(text, n), s => md5(s))), 1, k)
 
   /** TF-IDF top-`k` terms per document, in ONE pass over the corpus:
     * token explode → (doc,term) counts → document frequency as a window

@@ -8,15 +8,14 @@ import org.apache.spark.util.LongAccumulator
 
 /** Versioned, shingle-BUCKETED, delta+compaction store for the
   * incremental span-dedup lane's occurrence table — the state backend of
-  * [[StreamingSpanDedup]] (r10 verdict: the first cut advanced state by
-  * union + full repartition + a complete rewritten copy per micro-batch,
-  * O(|state|) work and one full state copy of disk growth per batch; at
-  * 100 TB that is trillions of re-shuffled keys per increment).
+  * [[StreamingSpanDedup]]. Advancing state by union + full repartition +
+  * a rewritten copy per micro-batch would be O(|state|) work and one full
+  * state copy of disk growth per batch; this store makes both O(batch).
   *
   * Layout (all paths through Hadoop FileSystem — local/HDFS/S3A alike):
   * {{{
   *   stateDir/_graft_occ_meta              numBuckets (write-once)
-  *   stateDir/segments/seg-<v>-delta/b=<k>/   batch v's counts, touched buckets only
+  *   stateDir/segments/seg-<v>-delta/b=<k>/[sb=<s>/]    batch v's counts, touched buckets only
   *   stateDir/segments/seg-<v>-compact/b=<k>/[sb=<s>/]  buckets compacted at batch v
   *   stateDir/manifests/v=<v>              bucket -> ordered segment list
   * }}}
@@ -33,7 +32,12 @@ import org.apache.spark.util.LongAccumulator
   * manifest, and the sub routing is again a pure function of the key,
   * so any reader can recompute it.
   *
-  * Cost model (r10 weak-mark fix, refined through r13):
+  * Cost model:
+  *  - '''one write shape''': every segment repartitions by its routing
+  *    columns and sorts by (routing columns, shingle) within each task,
+  *    so a task streams through one open parquet file at a time and
+  *    every file is sorted by shingle. The sort is per-task and
+  *    in-memory (the write width targets ~80 MB of rows per task).
   *  - '''advance is O(batch) strictly per batch''': the only mandatory
   *    write is the batch's own count table, partitioned into the buckets
   *    it touches — a batch touching b buckets writes exactly b bucket
@@ -43,37 +47,36 @@ import org.apache.spark.util.LongAccumulator
   *    bucket collapses to one segment only after `compactAt` deltas stack
   *    on it, so the O(|bucket|) rewrite amortizes to |bucket|/compactAt
   *    per batch and runs as ONE job over exactly the due buckets.
-  *  - '''probe reads prune in three tiers''' ([[readPruned]]):
+  *  - '''probe reads prune in tiers''' ([[readPruned]]):
   *    (1) bucket SET — `pmod(shingle, numBuckets)` is exact, a state row
   *    in an untouched bucket can never match; (2) per-segment ZONE
   *    sidecars skip stacked DELTA files a batch's keys provably miss;
   *    (3) SUB-BUCKET files skip, WITHIN a touched corpus-mass bucket,
   *    the `pmod(xxhash64(shingle), subSplit)` sub-files the batch's keys
-  *    don't route to — also exact. Tier 3 is the r12-verdict fix for the
-  *    mid-size-batch regime: bucket-set pruning saturates as batches
-  *    grow (a 5-doc batch already touched 74% of a 4096-bucket state)
-  *    and zones only cover small deltas, so compacted corpus-mass
-  *    buckets were all-or-nothing; sub-files keep the read proportional
-  *    to the batch's KEY count (~keys × bucketBytes/subSplit) well past
-  *    bucket saturation. Sub-files are written SORTED by shingle (a
-  *    per-task in-memory sort after the width rule — priced in SCALE.md).
+  *    don't route to — also exact. Bucket-set pruning saturates as
+  *    batches grow (a 5-doc batch already touched 74% of a 4096-bucket
+  *    state) and zones only cover small deltas, so without tier 3
+  *    compacted corpus-mass buckets would be all-or-nothing; sub-files
+  *    keep the read proportional to the batch's KEY count
+  *    (~keys × bucketBytes/subSplit) well past bucket saturation.
   *  - '''retention bounds disk''': manifests older than the newest
   *    `retainVersions` are deleted and segments no retained manifest
   *    references are GC'd — disk holds one compacted state + recent
-  *    deltas, not a full copy per batch (the r10 layout kept every copy).
+  *    deltas, not a full copy per batch.
   *  - '''reads need no pre-merge''': [[read]] returns base + uncompacted
   *    deltas as-is (several rows per shingle, per-shingle SUM contract) —
   *    [[graft.ops.Dedup.incrementalRepeatedSpans]] sums AFTER its
   *    batch-keyed semi-join slim, so probing the state never aggregates
   *    more than batch-sized data.
-  *  - '''per-batch driver fixed cost is memoized''' (r12 verdict item 4):
-  *    manifests and zone sidecars are immutable once written (rewrites
-  *    happen only through this JVM's single writer, which writes through
-  *    the cache), so the probe's manifest read and sidecar collect jobs
-  *    run once per ARTIFACT, not once per micro-batch — see
-  *    [[OccStateStore.Memo]]. The remaining per-batch planning work is
-  *    ONE batch-sized job ([[probePlan]]) computing touched buckets,
-  *    touched sub-pairs, and zone hits together (r12 ran three).
+  *  - '''per-batch driver fixed cost is memoized''': manifests and zone
+  *    sidecars are immutable once written (rewrites happen only through
+  *    this JVM's single writer, which writes through the cache), so the
+  *    probe's manifest read and sidecar collect jobs run once per
+  *    ARTIFACT, not once per micro-batch — see [[OccStateStore.Memo]].
+  *    What remains per batch is routing the batch's keys: driver
+  *    arithmetic for micro batches, otherwise ONE batch-sized job
+  *    ([[planJob]]) computing touched buckets, touched sub-pairs, and
+  *    zone hits together.
   *
   * Replay protocol (Structured Streaming `foreachBatch` retries): every
   * write is keyed by the monotone `batchId` and every input is read from
@@ -133,8 +136,8 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
       .mapValues(_.map(_.name)).toMap
 
   /** bucket -> ordered [[OccStateStore.SegStat]] stack (segment name,
-    * row count, sub-split factor). Rows are the zone metadata written
-    * since r12 (−1 on pre-stats manifest lines): they price a bucket's
+    * row count, sub-split factor). Rows are the zone metadata (−1 on
+    * pre-stats manifest lines): they price a bucket's
     * scan before opening it and size the compaction's sub-split;
     * `subSplit` (4th field, 1 on older lines) tells readers which
     * segments carry `sb=` sub-bucket files. Memoized per (store,
@@ -237,7 +240,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * [[OccStateStore.ProbeRowFilterMaxKeys]] gate — PAGE-level reads
     * INSIDE each admitted sub-file through [[SubFileProbe]] (per-file key
     * predicates against the sorted shingle column's row-group stats and
-    * column index; tier 4, r14). No false negatives anywhere (zones are
+    * column index; tier 4). No false negatives anywhere (zones are
     * one-sided; tiers 1/3 are routing functions; tier 4 keeps every row
     * EQUAL to a probe key by construction) — tier 4 additionally drops
     * non-matching rows, which every consumer's contract already allows
@@ -247,8 +250,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * probe's checkpointed counts. Per-batch cost: ONE batch-sized
     * planning job ([[probePlan]]) + bounded collects; manifests and
     * sidecars come from the [[OccStateStore.Memo]] cache (a sidecar is
-    * read once per segment per JVM, not once per micro-batch — r12
-    * verdict item 4). */
+    * read once per segment per JVM, not once per micro-batch). */
   def readPruned(batchId: Long, keys: DataFrame,
                  keyCountHint: Long = -1L): DataFrame =
     probeRead(batchId, keys, keyCountHint).frame
@@ -267,7 +269,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
                 keyCountHint: Long = -1L): OccStateStore.ProbeRead =
     probeReadImpl(batchId, Left(keys), keyCountHint)
 
-  /** [[probeRead]] from keys ALREADY on the driver (r15): a serving
+  /** [[probeRead]] from keys ALREADY on the driver: a serving
     * caller that collects its micro-batch's key set anyway (the count
     * and the keys come out of one narrow job —
     * [[StreamingSpanDedup.processBatch]]'s micro regime) plans with ZERO
@@ -277,26 +279,10 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
                 keysOnDriver: Array[Long]): OccStateStore.ProbeRead =
     probeReadImpl(batchId, Right(keysOnDriver), keysOnDriver.length.toLong)
 
-  /** Harness-only (ScaleRun's probe-crossover phase): [[probeRead]] with
-    * the tier-4 gate FORCED to `rowFilter` — true reads admitted
-    * sub-files with per-file key predicates regardless of
-    * [[OccStateStore.ProbeRowFilterMaxKeys]] (files past
-    * [[SubFileProbe.MaxFilterKeysPerFile]] still degrade to whole
-    * reads), false reads them whole through the vectorized scan. Rows
-    * differ by design (the sharp read drops non-matching rows — a
-    * subset every consumer's contract allows); the measurement, not the
-    * serve path, is the caller. */
-  private[graft] def probeReadTier(batchId: Long, keys: DataFrame,
-                                   keyCountHint: Long,
-                                   rowFilter: Boolean): OccStateStore.ProbeRead =
-    probeReadImpl(batchId, Left(keys), keyCountHint, Some(rowFilter))
-
   private def probeReadImpl(batchId: Long,
                             keysIn: Either[DataFrame, Array[Long]],
-                            keyCountHint: Long,
-                            collectKeysOverride: Option[Boolean] = None)
-      : OccStateStore.ProbeRead =
-    probeSpecs(batchId, keysIn, keyCountHint, collectKeysOverride) match {
+                            keyCountHint: Long): OccStateStore.ProbeRead =
+    probeSpecs(batchId, keysIn, keyCountHint) match {
       case None =>
         OccStateStore.ProbeRead(emptyOcc, Seq.empty, Seq.empty, None, None,
           None, driverPlanned = false)
@@ -320,10 +306,10 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
         }
     }
 
-  /** [[probeRead]] answered entirely ON THE DRIVER (r15 verdict item 1's
-    * probe half): same four pruning tiers, same per-file plans — but the
-    * admitted whole paths and sharp file specs are read as a plain loop
-    * in the driver JVM ([[SubFileProbe.readLocal]]), so a warm micro
+  /** [[probeRead]] answered entirely ON THE DRIVER: same four pruning
+    * tiers, same per-file plans — but the admitted whole paths and sharp
+    * file specs are read as a plain loop in the driver JVM
+    * ([[SubFileProbe.readLocal]]), so a warm micro
     * serve pays ZERO Spark jobs between the key array and the base occ
     * ROWS. Row-multiset-identical to `probeRead(batchId, keys).frame`
     * (whole paths ride the same reader with an empty key set = unfiltered
@@ -358,8 +344,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * never diverge on WHAT to read. */
   private def probeSpecs(batchId: Long,
                          keysIn: Either[DataFrame, Array[Long]],
-                         keyCountHint: Long,
-                         collectKeysOverride: Option[Boolean] = None)
+                         keyCountHint: Long)
       : Option[(Seq[String], Seq[SubFileProbe.FileKeys], Boolean)] = {
     latestVersionBefore(batchId) match {
       case None => None
@@ -411,9 +396,8 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
                   .min(BigInt(Long.MaxValue)).toLong)
           }
         val collectKeys = subSplits.nonEmpty &&
-          collectKeysOverride.getOrElse(
-            estKeys <= OccStateStore.ProbeRowFilterMaxKeys)
-        // micro batches plan on the DRIVER (r14 verdict item 2): the
+          estKeys <= OccStateStore.ProbeRowFilterMaxKeys
+        // micro batches plan on the DRIVER: the
         // routing is pure arithmetic over the keys + already-memoized
         // sidecars, so the only distributed work left is ONE narrow
         // 1-task collect of the keys — the planJob's shuffle stage and
@@ -434,8 +418,6 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
         // below visits every (touched bucket × stacked segment) pair, and
         // scanning the full route map per pair was O(buckets × routes) —
         // 115M tuple matches ≈ 3.8 s of the 50-doc serve's plan wall
-        // (r15; the loop predates the driver plan and cost planJob
-        // callers the same)
         val routesBySplitBucket: Map[(Int, Int), Seq[(Int, Array[Long])]] =
           plan.routes.toSeq
             .map { case ((split, b, sb), ks) => ((split, b), (sb, ks)) }
@@ -481,53 +463,16 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     }
   }
 
-  /** ONE batch-sized job computing everything the pruned read needs from
-    * the keys: the touched bucket set (≤ numBuckets ints), the touched
-    * (bucket, sub) pair set per distinct sub-split factor (≤ batch
-    * distinct keys), and the zone-hit (segment, bucket) pairs against
-    * the broadcast sidecar maps (the shared
-    * [[graft.ops.ZoneIndex.ZoneProbe]] matcher — blooms deserialize once
-    * per (segment, bucket) per task). All three collects are batch- or
-    * metadata-bounded. The sub columns are built with the SAME Spark SQL
-    * expressions as the segment writes, so routing agrees bit-for-bit.
-    *
-    * Broadcast bound (r13 review): the single-job path re-broadcasts
-    * the full cached zone maps every micro-batch — fine in the design
-    * regime (micro-batch delta sidecars are ~bloom-bits × batch keys),
-    * wrong when the stacked sidecar mass is large. Past
-    * [[OccStateStore.ProbeZoneBroadcastMaxBytes]] the plan splits in
-    * two jobs, r12-style: buckets+subs first, then
-    * [[graft.ops.ZoneIndex.hitPairs]] with the maps SLIMMED to the
-    * touched buckets — per-batch broadcast scales with touched-bucket
-    * mass again, at the price of one extra batch-sized job. */
-  /** See [[probeRead]]'s cost note. With `collectKeys` (the tier-4 gate)
-    * the job ALSO ships each key's (split, bucket, sub) routing to the
-    * driver — bounded by the gate at ≤ ProbeRowFilterMaxKeys rows per
-    * split factor — so sub-split segments can be read with per-file key
-    * predicates; the routing columns are the SAME Spark SQL expressions
-    * as the segment writes, so write and probe agree bit-for-bit.
-    *
-    * Zone shipping (r14, verdict item 2 — the r13 cut re-broadcast the
-    * full cached zone maps EVERY micro-batch under a 4 MB bound and fell
-    * back to a second job past it): each segment's zone map broadcasts
-    * ONCE per JVM through [[OccStateStore.Memo.zonesBc]] (segments are
-    * immutable; the broadcast is destroyed with the segment's GC), so a
-    * micro-batch ships only the segments it has never shipped — in
-    * steady state, just its own predecessor's delta sidecar. Executor
-    * tasks route bloom deserialization through the JVM-wide
-    * [[graft.ops.ZoneIndex.BloomCache]] keyed by this store's root, so
-    * a bloom also DESERIALIZES once per executor, not once per task per
-    * batch. */
-  /** Driver-side twin of [[planJob]] for MICRO batches (r14 verdict
-    * item 2): under [[OccStateStore.DriverPlanMaxKeys]] the plan's inputs
-    * fit on the driver trivially, and everything it derives — bucket
+  /** Driver-side twin of [[planJob]] for MICRO batches: under
+    * [[OccStateStore.DriverPlanMaxKeys]] the plan's inputs fit on the
+    * driver trivially, and everything it derives — bucket
     * routing (`pmod`), sub routing (`pmod(xxhash64(...))`), zone-bloom
     * hits — is pure arithmetic over the keys plus sidecar maps the
     * [[OccStateStore.Memo]] ALREADY holds driver-side. So the whole plan
     * costs ONE narrow 1-task collect of the keys (the cached counts
     * frame), no shuffle, no second job — the planJob's exchange and its
-    * scheduler round-trip were ~1–2 s of the r14 warm 1-doc serve's
-    * 2.0–2.9 s wall (SURVEY §19 ledger).
+    * scheduler round-trip were ~1–2 s of a warm 1-doc serve's 2.0–2.9 s
+    * wall (SURVEY §19 ledger).
     *
     * Bit-exactness with the segment writes (the correctness hinge —
     * mis-routing a key would silently drop its state rows): bucket =
@@ -592,6 +537,27 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
       routes.view.mapValues(_.toArray.sorted).toMap)
   }
 
+  /** ONE batch-sized job computing everything the pruned read needs from
+    * the keys: the touched bucket set (≤ numBuckets ints), the touched
+    * (bucket, sub) pair set per distinct sub-split factor (≤ batch
+    * distinct keys), and the zone-hit (segment, bucket) pairs against
+    * the segments' zone maps (the shared [[graft.ops.ZoneIndex.ZoneProbe]]
+    * matcher). With `collectKeys` (the tier-4 gate) the job also ships
+    * each key's (split, bucket, sub) routing to the driver — bounded by
+    * the gate at ≤ ProbeRowFilterMaxKeys rows per split factor — so
+    * sub-split segments can be read with per-file key predicates. All
+    * collects are batch- or metadata-bounded. The routing columns are the
+    * SAME Spark SQL expressions as the segment writes, so write and probe
+    * agree bit-for-bit.
+    *
+    * Zone shipping: each segment's zone map broadcasts ONCE per JVM
+    * through [[OccStateStore.Memo.zonesBc]] (segments are immutable; the
+    * broadcast is destroyed with the segment's GC), so a micro-batch
+    * ships only the segments it has never shipped — in steady state,
+    * just its own predecessor's delta sidecar. Executor tasks route bloom
+    * deserialization through the JVM-wide
+    * [[graft.ops.ZoneIndex.BloomCache]] keyed by this store's root, so a
+    * bloom deserializes once per executor, not once per task per batch. */
   private def planJob(keys: DataFrame, subSplits: Seq[Int],
                       groups: Map[String, Map[Int, graft.ops.ZoneIndex.Zone]],
                       collectKeys: Boolean,
@@ -603,7 +569,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
       subSplits.map(s => subCol(s).as(s"sub_$s"))
     // size the planning job to the BATCH, not the session width: a 1-doc
     // serving probe otherwise launches ~32 near-empty tasks whose launch
-    // overhead IS the planning job's wall (r13 stretch item 7); ~64k
+    // overhead IS the planning job's wall; ~64k
     // keys per task keeps the fold in-memory trivial. Bulk/unknown
     // batches keep their natural partitioning.
     val slimKeys =
@@ -711,113 +677,61 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
 
   // ---- advance -------------------------------------------------------
 
-  /** Shuffle width for a bucket-partitioned segment write: a task seeing
-    * more distinct buckets than [[ConcurrentWriters]] makes
-    * FileFormatWriter fall back to SORTING its rows by partition value —
-    * an in-memory noop at batch size, but the one-time 64→4096 re-bucket
-    * layout job at 504k docs paid 18 GB of external spill re-sorting rows
-    * the exchange had already routed (SCALE.md). Corpus-mass frames
-    * (plan-stats past the delta-zone bound) widen so the MEAN buckets per
-    * task is cap/2 — hash routing is ~Poisson, so a mean AT the cap would
-    * still push ~40% of tasks over it and back into the sort; halving the
-    * mean puts the overflow probability at ~2%. Batch-sized frames keep
-    * the session default (the fallback sort is tiny there, and hundreds
-    * of near-empty tasks per micro-batch are not free). */
-  private def bucketedWriteParts(df: DataFrame, nBuckets: Int): Int = {
+  /** Shuffle width for a segment write. Each task sorts its rows and
+    * streams them through one open file at a time, so per-task SORT
+    * memory binds: a task sorts ~[[OccStateStore.SortedWriteRowsPerTask]]
+    * rows (~80 MB of 20-byte rows, in-memory on any sane executor), from
+    * the exact row count when the caller has one (compaction does, from
+    * the manifest stats) or the plan-stats estimate otherwise. Capped at
+    * `targets`, the (bucket, sub) files the write can fill: an
+    * unmaterialized batch estimates huge, and tasks past the targets
+    * would launch empty. */
+  private def sortedWriteParts(estRows: Long, targets: Long): Int = {
     val sessionParts = spark.sessionState.conf.numShufflePartitions
-    val bulk = df.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(OccStateStore.DeltaZoneMaxBytes)
-    val meanPerTask = math.max(1, ConcurrentWriters / 2)
-    if (bulk) math.max(sessionParts,
-      (nBuckets + meanPerTask - 1) / meanPerTask)
-    else sessionParts
-  }
-
-  /** Shuffle width for a SUB-SPLIT (sorted) segment write: the sorted
-    * path opens one file at a time, so the writer cap is irrelevant —
-    * the binding constraint is per-task SORT memory. Sized so a task
-    * sorts ~[[OccStateStore.SortedWriteRowsPerTask]] rows (~80 MB of
-    * 20-byte rows — in-memory on any sane executor), from the exact row
-    * count when the caller has one (compaction does, from the manifest
-    * stats) or the plan-stats estimate otherwise. */
-  private def sortedWriteParts(estRows: Long): Int = {
-    val sessionParts = spark.sessionState.conf.numShufflePartitions
-    math.max(sessionParts, math.min(8192L,
+    val byRows = math.max(sessionParts.toLong, math.min(8192L,
       (estRows + OccStateStore.SortedWriteRowsPerTask - 1) /
-        OccStateStore.SortedWriteRowsPerTask).toInt)
-  }
-
-  /** Concurrent parquet output writers per task during segment writes —
-    * the no-sort path's cap (see [[bucketedWriteParts]]). */
-  private val ConcurrentWriters = 8
-
-  /** Scope [[ConcurrentWriters]] concurrent output file writers around a
-    * bucket-partitioned write (the caller's value is restored after):
-    * with concurrent writers, FileFormatWriter
-    * skips the dynamic-partition SORT for tasks within the cap — at the
-    * 623M-key base build that sort externally spilled 20.5 GB for rows
-    * the repartition had already bucket-routed. [[bucketedWriteParts]]
-    * sizes the exchange so tasks stay within the cap. */
-  private def withConcurrentWriters[T](body: => T): T = {
-    val key = "spark.sql.maxConcurrentOutputFileWriters"
-    // getAll holds only the keys set on the session; getOption would
-    // report the default of an unset key
-    val before = spark.conf.getAll.get(key)
-    spark.conf.set(key, ConcurrentWriters.toString)
-    try body
-    finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+        OccStateStore.SortedWriteRowsPerTask))
+    math.min(byRows, targets).toInt
   }
 
   /** Write `df` (shingle, occ) as segment `segName`, hash-routed into
-    * bucket dirs; `subSplit > 1` adds the sub-bucket tier: rows route to
-    * `b=<k>/sb=<s>` files and each file is SORTED by shingle (the sort
-    * is per-task and in-memory after [[sortedWriteParts]]; sorted
-    * sub-files compress tighter and leave parquet row-group min/max
-    * stats meaningful for any future range consumer). The sorted write
-    * needs no concurrent-writer scope — partition-ordered rows stream
-    * through one open file at a time — and runs on the DEFAULT (v1)
-    * output committer: r13 scoped v2 here believing a 780 → 692 s A/B,
-    * but the conf key never reached the write job (r13 ADVICE — the
-    * "spark.hadoop."-prefixed key set at runtime is a no-op), and the
-    * r14 re-measure with the EFFECTIVE unprefixed key inverted the
-    * result: at the 32,768-file serve layout v1 wrote in 196.3 s vs
-    * v2's 248.7 s same-window — the single-threaded job-commit rename
-    * (~0.5 ms/file locally) is NOT the wall, and v2's per-task commits
-    * cost more than they save. v1 is also the safer committer, so the
-    * scope is gone. Deployments on object stores should measure their
-    * own committer; the store's manifest commit point tolerates either
-    * (a segment is invisible until referenced, a retry overwrites the
-    * dir wholesale, retire() GCs orphans). */
+    * `b=<k>` bucket dirs; `subSplit > 1` adds the sub-bucket tier's
+    * `sb=<s>` level. One shape for every segment: rows repartition by
+    * the routing columns and sort by (routing columns, shingle) within
+    * each task, so the writer streams partition-ordered rows through one
+    * open file at a time (no concurrent-writer memory, no session conf)
+    * and every file comes out sorted by shingle — tight row-group min/max
+    * stats, and the page index [[SubFileProbe]] reads. The sort is
+    * in-memory after [[sortedWriteParts]], but it is not free: a
+    * two-key sort cannot radix-sort, and its prefix (the bucket id) ties
+    * on almost every comparison, so it compares whole rows — ~4 s of
+    * ScaleRun's 6.6M-row inc-build base write at perSit 340 on 4 vCPUs
+    * (SCALE.md). The write runs on the default
+    * (v1) output committer: same-window at the 32,768-file serve layout,
+    * v1 wrote in 196.3 s against v2's 248.7 s (SCALE.md). Deployments on
+    * object stores should measure their own committer; the manifest
+    * commit point tolerates either (a segment is invisible until
+    * referenced, a retry overwrites the dir wholesale, retire() GCs
+    * orphans). */
   private def writeSegment(df: DataFrame, segName: String, subSplit: Int,
                            nBuckets: Int, estRows: Long): Unit = {
-    if (subSplit <= 1) {
-      withConcurrentWriters {
-        df.select(col("shingle"), col("occ"),
-            pmod(col("shingle"), lit(numBuckets.toLong)).cast("int").as("b"))
-          .repartition(bucketedWriteParts(df, nBuckets), col("b"))
-          .write.mode("overwrite").partitionBy("b")
-          .parquet(segDir(segName).toString)
-      }
-    } else {
-      df.select(col("shingle"), col("occ"),
-          pmod(col("shingle"), lit(numBuckets.toLong)).cast("int").as("b"),
-          subCol(subSplit).as("sb"))
-        .repartition(sortedWriteParts(estRows), col("b"), col("sb"))
-        .sortWithinPartitions("b", "sb", "shingle")
-        .write.mode("overwrite").partitionBy("b", "sb")
-        // page-ROW bound (default 20k): with the rows sorted by
-        // shingle, parquet's per-page column-index min/max becomes the
-        // probe's tier-4 granularity ([[SubFileProbe]]) — ~1k-row pages
-        // let a probe key read ~8 KB of an arbitrarily large sub-file,
-        // which is what lets [[OccStateStore.SubSplitTargetRows]] be
-        // COARSE (fewer, larger files) without growing probe bytes
-        .option("parquet.page.row.count.limit",
-          OccStateStore.SortedPageRows.toString)
-        .parquet(segDir(segName).toString)
-    }
+    val routing =
+      ("b" -> pmod(col("shingle"), lit(numBuckets.toLong)).cast("int")) +:
+        (if (subSplit > 1) Seq("sb" -> subCol(subSplit)) else Seq.empty)
+    val keys = routing.map(_._1)
+    df.select(col("shingle") +: col("occ") +:
+        routing.map { case (name, c) => c.as(name) }: _*)
+      .repartition(sortedWriteParts(estRows, nBuckets.toLong * subSplit),
+        keys.map(col): _*)
+      .sortWithinPartitions((keys :+ "shingle").map(col): _*)
+      .write.mode("overwrite").partitionBy(keys: _*)
+      // page-ROW bound (parquet's default is 20k): with the rows sorted
+      // by shingle, the per-page column-index min/max is the probe's
+      // tier-4 granularity ([[SubFileProbe]]), so a probe key reads
+      // ~8 KB of an arbitrarily large file
+      .option("parquet.page.row.count.limit",
+        OccStateStore.SortedPageRows.toString)
+      .parquet(segDir(segName).toString)
   }
 
   /** A written segment dir read back with its schema stated EXPLICITLY
@@ -895,15 +809,14 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * batch-sized delta into the buckets it touches, compact any bucket
     * whose stack reached `compactAt`, publish the manifest, then retire
     * versions past `retainVersions` and GC unreferenced segments.
-    * `subSplit` — 0 (the default) keeps the delta FLAT: a delta write
-    * must stay O(batch) cheap (partition-routed files, no sort — the
-    * r10 weak-mark economics), and the sub-split's read win only exists
-    * for segments later probes prune WITHIN, which deltas earn when the
+    * `subSplit` — 0 (the default) keeps the delta FLAT: one sorted file
+    * per touched bucket. The sub-split's read win only exists for
+    * segments later probes prune WITHIN, which deltas earn when the
     * COMPACTION cadence folds them (compaction derives its split from
-    * exact rows and is already rewriting the bucket — the first r13 cut
-    * auto-split bulk deltas from plan stats and the 69M-key increment's
-    * advance went 5.6 → 68 s paying a 623M-row sort for files nothing
-    * would ever sub-prune). Pass an explicit factor for the two
+    * exact rows and is already rewriting the bucket); auto-splitting
+    * bulk deltas from plan stats measured the 69M-key increment's
+    * advance at 5.6 → 68 s for files nothing would ever sub-prune. Pass
+    * an explicit factor for the two
     * DELIBERATE corpus-mass layout writes that ARE the serving store:
     * seeding a base corpus into a fresh store, or re-bucketing a state
     * for the micro-batch serving lane (derive the factor with
@@ -920,8 +833,8 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     // 1. the batch's delta — its counts hash-routed into bucket dirs; a
     //    batch touching b buckets writes exactly b directories. Flat by
     //    default (see the scaladoc's subSplit policy); an explicit
-    //    subSplit sorts into sb= sub-files for the deliberate layout
-    //    writes. Rows for the sorted write's width are estimated from
+    //    subSplit adds sb= sub-files for the deliberate layout writes.
+    //    Rows for the write's width are estimated from
     //    plan stats at ~8 B/row (zstd parquet of (shingle, occ):
     //    random-hash shingles don't compress, the occ column vanishes;
     //    measured at the 692M-row 504k-doc state) — the estimate only
@@ -972,11 +885,10 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     * recomputed from the key (pmod is the routing function), written as
     * one segment holding all compacted buckets — SUB-SPLIT by
     * [[OccStateStore.deriveSubSplit]] of the exact per-bucket rows the
-    * manifest records (the r12-verdict tier-3 rewrite: compaction
-    * already rewrites the bucket, so re-routing it into sorted sub-files
-    * is marginal cost, and it is exactly what makes corpus-mass buckets
-    * prunable within). Returns the due buckets' new single-segment
-    * stacks. */
+    * manifest records (tier 3: compaction already rewrites the bucket,
+    * so re-routing it into sorted sub-files is marginal cost, and it is
+    * exactly what makes corpus-mass buckets prunable within). Returns
+    * the due buckets' new single-segment stacks. */
   private def compactBuckets(stacked: Map[Int, Seq[SegStat]],
                              due: Seq[Int],
                              compactSeg: String): Map[Int, Seq[SegStat]] = {
@@ -1000,7 +912,7 @@ final class OccStateStore private (spark: SparkSession, stateDir: String,
     }.toMap
   }
 
-  /** Out-of-band compaction (r11 verdict item 3): collapse every bucket
+  /** Out-of-band compaction: collapse every bucket
     * stacking at least `minStack` segments at the LATEST version into one
     * compact segment, atomically rewriting the latest manifest in place
     * with CONTENT-EQUIVALENT stacks (per-shingle sums unchanged —
@@ -1091,7 +1003,7 @@ object OccStateStore {
       * "negative": at subSplit = 64 a bucket populating sb=63 makes the
       * mask negative via bit 63, and a `< 0` sentinel test would treat
       * it as all-present — re-introducing the missing-directory crash
-      * for that bucket's unwritten subs (r13 review). −1 as a REAL mask
+      * for that bucket's unwritten subs. −1 as a REAL mask
       * means all 64 subs present, so the sentinel reading coincides
       * with the truth there. Unsigned shift for the same reason. */
     def hasSub(sb: Int): Boolean =
@@ -1166,8 +1078,8 @@ object OccStateStore {
     * sizes sub-split granularity — correctness never depends on it. */
   final val EstBytesPerOccRow: Long = 8L
 
-  /** Sub-bucket size target for [[deriveSubSplit]] (tier 3). r14 (verdict
-    * item 1): 8192 → 32768 — the FILE is no longer the probe's read
+  /** Sub-bucket size target for [[deriveSubSplit]] (tier 3). The FILE is
+    * no longer the probe's read
     * granularity (tier 4 reads ~one PAGE per key inside a sorted
     * sub-file), so the file-size target serves only the file-count
     * economics: 4× fewer sub-files at the 504k-doc serve layout
@@ -1179,18 +1091,18 @@ object OccStateStore {
     * honor on any recorded segment. */
   final val MaxSubSplit: Int = 64
 
-  /** Cap on the DERIVED sub-split factor — r14: 64 → 16, the file-count
-    * side of verdict item 1 (a 2²⁰-bucket 100 TB state's compactions
-    * write ~17M files of ~10 MB instead of ~67M of ~2.5 MB; tier 4's
-    * page reads keep a probe key at ~one page regardless of file size).
+  /** Cap on the DERIVED sub-split factor, set by file count (a
+    * 2²⁰-bucket 100 TB state's compactions write ~17M files of ~10 MB
+    * instead of ~67M of ~2.5 MB at a cap of 64; tier 4's page reads
+    * keep a probe key at ~one page regardless of file size).
     * An explicit knob up to [[MaxSubSplit]] remains available to a
     * deployment that measures otherwise. */
   final val DeriveMaxSubSplit: Int = 16
 
-  /** Rows per parquet page in sorted sub-split writes — the tier-4 read
+  /** Rows per parquet page in segment writes — the tier-4 read
     * granularity (see the writeSegment note): 1024 rows ≈ 8 KB raw of
-    * (shingle, occ), so a key's page read is ~the size of r13's whole
-    * TINY sub-file while the files themselves grow 4×+ coarser. */
+    * (shingle, occ), so a key's page read stays ~8 KB however coarse
+    * the files grow. */
   final val SortedPageRows: Int = 1024
 
   /** Probe-key bound for the tier-4 ROW-FILTERED read path: under it the
@@ -1202,9 +1114,9 @@ object OccStateStore {
     * and a corpus-mass key collect would not be driver-safe). Serving
     * micro-batches (1–50 docs ≈ 10²–10⁴ keys) sit far under it.
     *
-    * Set FROM the measured crossover (r16, ScaleRun `probe-crossover`
-    * over the 504k-doc serve store, both sides FORCED at each density —
-    * SCALE.md round-16 table): the sharp read wins every measured
+    * Set FROM the measured crossover over the 504k-doc serve store, both
+    * sides FORCED at each density (SCALE.md, "Tier-4 vs vectorized
+    * whole-file: the measured crossover"): the sharp read wins every measured
     * density up to ~533k keys (277k keys: 7.2 s / 1.8 GB sharp vs
     * 88.0 s / 5.4 GB whole — the old 262144 gate sent exactly that
     * regime to the whole path, a measured 12× loss), and the walls
@@ -1213,18 +1125,17 @@ object OccStateStore {
     * 2¹⁹, the last power of two before the measured convergence. */
   final val ProbeRowFilterMaxKeys: Long = 524288L
 
-  /** Probe-key bound for the DRIVER-side plan (r14 verdict item 2 —
-    * [[OccStateStore.probeRead]]'s `driverPlan`): under it the plan costs
+  /** Probe-key bound for the DRIVER-side plan
+    * ([[OccStateStore.probeRead]]'s `driverPlan`): under it the plan costs
     * one narrow 1-task collect instead of the planJob's shuffle+collect.
     * 64k keys = 512 KB of longs on the driver and sub-millisecond
     * arithmetic — comfortably covers the serving lane's 1–50-doc batches
     * (10²–10⁴ keys) while bulk batches keep the distributed plan. */
   final val DriverPlanMaxKeys: Long = 65536L
 
-  /** Per-task row target for the sorted sub-split write (~80 MB of
-    * 20-byte rows — an in-memory sort; the width rule that kept the
-    * writer's dynamic-partition sort from spilling 18 GB, restated for
-    * the sorted path where sort memory, not writer count, binds). */
+  /** Per-task row target for segment writes (~80 MB of 20-byte rows —
+    * an in-memory sort: each task sorts its rows and streams them through
+    * one open file, so sort memory, not writer count, binds). */
   final val SortedWriteRowsPerTask: Long = 4L << 20
 
   /** Sub-split factor for a segment averaging `rowsPerBucket` rows per
@@ -1243,7 +1154,7 @@ object OccStateStore {
 
   /** numBuckets for a FRESH store, derived from the expected state size —
     * the write-once choice that decides how fine the probe-side bucket
-    * pruning can ever get (r11 verdict item 1: a micro-batch touching K
+    * pruning can ever get (a micro-batch touching K
     * distinct shingles reads ~min(K, numBuckets) buckets, so the pruned
     * scan is ~min(K · state/numBuckets, state) bytes — numBuckets must
     * GROW with the state for the read to scale with the batch). Next
@@ -1265,8 +1176,8 @@ object OccStateStore {
     math.min(1L << 20, math.max(64L, pow2)).toInt
   }
 
-  /** Same-JVM memo for the store's immutable read artifacts (r12 verdict
-    * item 4 — the serving lane's per-batch driver fixed cost): manifests
+  /** Same-JVM memo for the store's immutable read artifacts (the
+    * serving lane's per-batch driver fixed cost): manifests
     * (per store+version) and zone sidecars (per store+segment, the FULL
     * map so later probes filter in memory). Sound because both artifact
     * kinds are write-once EXCEPT through this JVM's single writer
@@ -1311,7 +1222,7 @@ object OccStateStore {
     /** Invalidate EVERYTHING cached for a store root — called when
       * [[OccStateStore.open]] creates fresh write-once meta at a path
       * (the one observable moment of a same-path delete+recreate done
-      * outside the API, e.g. a test/ScaleRun rmDir+open; r13 ADVICE: the
+      * outside the API, e.g. a test/ScaleRun rmDir+open: the
       * path-keyed memo would otherwise serve the DELETED store's
       * manifests/zones whenever the recreated store's version or segment
       * names diverge from the old ones). */
@@ -1331,9 +1242,9 @@ object OccStateStore {
           bIt.remove()
         }
       }
-      // executor-side deserialized blooms keyed by this root (r14 ADVICE
-      // item 1): in local mode this frees the old generation immediately;
-      // on a cluster the cache's own content-verify-on-hit is the guard
+      // executor-side deserialized blooms keyed by this root: in local
+      // mode this frees the old generation immediately; on a cluster the
+      // cache's own content-verify-on-hit is the guard
       graft.ops.ZoneIndex.BloomCache.dropNamespace(dir)
       // ditto the probe's footer/index cache (keys under the root's
       // segment paths; the mtime in its key is the cross-JVM guard)
@@ -1347,7 +1258,7 @@ object OccStateStore {
         dropBc(dir, seg)
       }
 
-    // ---- per-segment zone-map broadcasts (r14, verdict item 2) -------
+    // ---- per-segment zone-map broadcasts ------------------------------
     // One broadcast per immutable segment per JVM, reused across every
     // micro-batch's planning job; destroyed when the segment GCs (or a
     // same-path store recreation invalidates the root). Same soundness
@@ -1414,8 +1325,8 @@ object OccStateStore {
   }
 
   /** Open the store at `stateDir`, creating the write-once meta on first
-    * use. `numBuckets` semantics (r11 review — readers must not have to
-    * plumb the writer's choice through): 0 (the default) ADOPTS the
+    * use. `numBuckets` semantics (readers must not have to plumb the
+    * writer's choice through): 0 (the default) ADOPTS the
     * persisted bucket count on an existing store and creates with 64 on
     * a fresh one (size a big fresh store with [[deriveNumBuckets]]); an
     * EXPLICIT positive value must match an existing
@@ -1446,10 +1357,10 @@ object OccStateStore {
         fs.mkdirs(root)
         // a FRESH meta at this path means any memoized artifacts belong
         // to a previous (externally deleted) store — drop them before the
-        // first read can hit a stale entry (r13 ADVICE item 4)
+        // first read can hit a stale entry
         Memo.dropAll(root.toString)
         // atomic publish: a crash mid-create must not leave a torn meta
-        // that every later open trips over (r11 advice)
+        // that every later open trips over
         graft.FsText.writeAtomic(spark, metaPath, create.toString)
         create
       }

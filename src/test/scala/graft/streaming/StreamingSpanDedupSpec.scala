@@ -200,6 +200,179 @@ class StreamingSpanDedupSpec extends SparkSpec {
     assert(!spark.conf.getAll.contains(key))
   }
 
+  test("one segment-write shape: every write kind leaves the session " +
+    "conf as it was, writes one shingle-sorted file per bucket, runs at " +
+    "most nBuckets x max(subSplit, 1) write tasks and plans one Sort") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_occ_shape_").toString
+    val B = 8
+    val store = OccStateStore.open(spark, root, numBuckets = B,
+      retainVersions = 8, compactAt = 4)
+    // ids map to shingles out of order (7919 is a unit mod the prime
+    // 100003), so no file comes out sorted unless the write sorts it;
+    // every batch covers all B buckets; occ 1..3
+    def rows(lo: Long, hi: Long) =
+      (lo until hi).map(k => (k * 7919L % 100003L, 1L + k % 3))
+    def frame(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select((col("id") * 7919L % 100003L).as("shingle"),
+        (lit(1L) + col("id") % 3).as("occ"))
+
+    def isSegmentWrite(plan: String) =
+      plan.contains("InsertIntoHadoopFsRelationCommand") &&
+        plan.contains("/segments/seg-") && !plan.contains("_zones")
+    // write executions (by the plan text at their start), the jobs each
+    // ran, the tasks each stage ran, and the planned write commands
+    val writeExecs = new java.util.concurrent.ConcurrentHashMap[Long, Unit]
+    val jobsByExec = new java.util.concurrent.ConcurrentHashMap[Long,
+      java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[Int])]]
+    val tasksByStage = new java.util.concurrent.ConcurrentHashMap[Int,
+      java.util.concurrent.atomic.AtomicInteger]
+    val writePlans =
+      new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if isSegmentWrite(s.physicalPlanDescription) =>
+          writeExecs.put(s.executionId, ())
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobsByExec.computeIfAbsent(id.toLong,
+            _ => new java.util.concurrent.ConcurrentLinkedQueue)
+            .add((e.jobId, e.stageIds)))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        tasksByStage.computeIfAbsent(e.stageId,
+          _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (isSegmentWrite(qe.executedPlan.toString))
+          writePlans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    def sorts(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => sorts(a.executedPlan)
+      case q: QueryStageExec => sorts(q.plan)
+      case s: SortExec => 1 + s.children.map(sorts).sum
+      case other => other.children.map(sorts).sum
+    }
+    def segNames(): Set[String] =
+      Option(new java.io.File(s"$root/segments").listFiles())
+        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
+    // data files only: the `_zones` sidecar is not segment data
+    def dataFiles(dir: java.io.File): Seq[java.io.File] =
+      dir.listFiles().toSeq.filterNot(_.getName.startsWith("_")).flatMap(f =>
+        if (f.isDirectory) dataFiles(f)
+        else if (f.getName.endsWith(".parquet")) Seq(f) else Seq.empty)
+
+    val expected = scala.collection.mutable.Map.empty[Long, Long]
+      .withDefaultValue(0L)
+    def step(kind: String, fed: Seq[(Long, Long)], writes: Int = 1)(
+        body: => Unit): Unit = {
+      val confBefore = spark.conf.getAll
+      val segsBefore = segNames()
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      writeExecs.clear(); jobsByExec.clear(); tasksByStage.clear()
+      writePlans.clear()
+      spark.sparkContext.addSparkListener(listener)
+      spark.listenerManager.register(qeListener)
+      try {
+        body
+        org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        spark.listenerManager.unregister(qeListener)
+      }
+      assert(spark.conf.getAll === confBefore, kind)
+      fed.foreach { case (k, v) => expected(k) += v }
+      val v = store.versions().last
+      assert(occMap(store.readAggregated(v)) === expected.toMap, kind)
+
+      val written = (segNames() -- segsBefore).toSeq.sorted
+      assert(written.nonEmpty, kind)
+      val stats = store.readManifestStats(v).values.flatten
+      val maxSplit = written.map(s =>
+        stats.find(_.name == s).map(_.subSplit).getOrElse(1)).max
+      // one shingle-sorted file per (bucket, sub) dir
+      written.foreach { seg =>
+        val files = dataFiles(new java.io.File(s"$root/segments/$seg"))
+        assert(files.nonEmpty, s"$kind: $seg")
+        assert(files.groupBy(_.getParentFile).values.forall(_.size == 1),
+          s"$kind: $seg holds a dir with more than one file")
+        files.foreach { f =>
+          val shingles = SubFileProbe.readLocal(
+            spark.sparkContext.hadoopConfiguration,
+            Seq(SubFileProbe.FileKeys(f.getPath, Array.emptyLongArray)),
+            new org.apache.spark.util.LongAccumulator,
+            new org.apache.spark.util.LongAccumulator,
+            new org.apache.spark.util.LongAccumulator,
+            parallelism = 1).map(_._1)
+          assert(shingles.nonEmpty &&
+            shingles.sliding(2).forall(p => p.length < 2 || p(0) <= p(1)),
+            s"$kind: $f is not sorted by shingle")
+        }
+      }
+      // each segment write: its last job is the write stage; its task
+      // count is bounded by the (bucket, sub) files it can fill
+      val execs = writeExecs.keySet().asScala.toSeq
+      assert(execs.size === writes, kind)
+      execs.foreach { id =>
+        val (_, stages) = jobsByExec.get(id).asScala.maxBy(_._1)
+        val tasks = stages.map(s =>
+          Option(tasksByStage.get(s)).map(_.get).getOrElse(0)).sum
+        assert(tasks >= 1 && tasks <= B * math.max(maxSplit, 1),
+          s"$kind: write job ran $tasks tasks")
+      }
+      // the planned write holds exactly one Sort: the writer adds no
+      // dynamic-partition sort of its own
+      assert(writePlans.size === writes, kind)
+      writePlans.asScala.foreach(p =>
+        assert(sorts(p) === 1, s"$kind: plan\n$p"))
+    }
+
+    // flat delta: batch-sized, known stats -> zone sidecar
+    step("flat delta", rows(0, 2000)) {
+      store.advance(frame(0, 2000).localCheckpoint(), 0L)
+    }
+    assert(new java.io.File(s"$root/segments/seg-0-delta/_zones").exists)
+    // bulk flat delta: an RDD-backed frame's stats are unknown (huge)
+    step("bulk flat delta", rows(1000, 3000)) {
+      store.advance(spark.sparkContext.parallelize(rows(1000, 3000), 4)
+        .toDF("shingle", "occ"), 1L)
+    }
+    assert(!new java.io.File(s"$root/segments/seg-1-delta/_zones").exists)
+    // explicit sub-split delta
+    step("subSplit delta", rows(2000, 4000)) {
+      store.advance(frame(2000, 4000), 2L, subSplit = 4)
+    }
+    assert(store.readManifestStats(2L).values.flatten
+      .exists(s => s.name == "seg-2-delta" && s.subSplit == 4))
+    // the fourth stacked delta triggers the inline compactAt compaction
+    // (its delta is written, then folded and GC'd: two writes, one left)
+    step("inline compaction", rows(0, 1000), writes = 2) {
+      store.advance(frame(0, 1000), 3L)
+    }
+    assert(store.bucketSegments(3L).values.forall(_ == Seq("seg-3-compact")))
+    store.advance(frame(500, 1500).localCheckpoint(), 4L)
+    rows(500, 1500).foreach { case (k, v) => expected(k) += v }
+    step("compactNow", Seq.empty) {
+      assert(store.compactNow() === B)
+    }
+  }
+
   test("bucket-pruned probe (r11 weak mark): the state read opens " +
     "EXACTLY the batch's bucket dirs (inputFiles, not just rows); spans " +
     "row-identical; one shingle-kernel evaluation per micro-batch") {
