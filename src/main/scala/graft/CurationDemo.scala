@@ -18,14 +18,7 @@ object CurationDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-curation")
-      .getOrCreate()
+    val spark = Session.builder("graft-curation", Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(run(spark, spark.read.parquet(s"$sfDir/documents.parquet"), outDir))
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline._
 
 /** Run the four-stage DLP pipeline end-to-end at a configurable scale and
@@ -15,13 +14,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val perSit = args.headOption.map(_.toInt).getOrElse(10)
     val outDir = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-pipeline-demo")
+    val spark = Session.builder("graft-pipeline-demo", Session.cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -56,13 +49,18 @@ object PipelineDemo {
       // driver memory stays flat no matter how large the mapping grows
       // (same single-object caveat as the reference's meta.json envelope,
       // see MetaJson; the JSONL/CSV sinks are the true distributed paths).
-      // The write goes through the Hadoop FileSystem API so the path
+      // The writes go through the Hadoop FileSystem API so the path
       // resolves on the CLUSTER filesystem (hdfs://, s3a://, file://) —
       // a java.nio write would land on whichever executor ran the task.
+      // Qualified on the driver, so a relative dir means the same place
+      // in every task.
+      val root = {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        graft.FsText.fs(spark, p).makeQualified(p)
+      }
       val header = finalMapping.columns.toSeq
-      val xlsxPath = if (dir.contains("://")) s"$dir/mapping_final.xlsx"
-        else java.nio.file.Paths.get(dir, "mapping_final.xlsx")
-          .toAbsolutePath.toString
+      val xlsxPath = new org.apache.hadoop.fs.Path(root, "mapping_final.xlsx")
+        .toString
       // ship the DRIVER's hadoop conf into the task — a bare
       // `new Configuration()` loads only classpath XML and would drop
       // spark.hadoop.* session settings (s3a credentials, endpoints,
@@ -79,8 +77,8 @@ object PipelineDemo {
           try out.write(graft.sink.MiniFormats.xlsxBytes(rows))
           finally out.close()
       }
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "validation_report.txt"), reportText)
+      graft.FsText.write(spark,
+        new org.apache.hadoop.fs.Path(root, "validation_report.txt"), reportText)
     }
 
     val secs = (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round aid: writes `.explain("formatted")` for every
@@ -10,8 +9,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Usage: `sbt "runMain graft.PlanDump plans/r16 before [q84,q19]"`
   * (third arg = optional prefix filter, same semantics as
-  * SPARK_GRAFT_ONLY in [[Bench]]). Reads SPARK_GRAFT_SF_DIR /
-  * SPARK_GRAFT_CPUS exactly like the bench so plans match what it times.
+  * SPARK_GRAFT_ONLY in [[Bench]]). Reads SPARK_GRAFT_SF_DIR and
+  * builds its session like the bench, so plans match what it times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,13 +20,7 @@ object PlanDump {
       Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("graft-plandump", Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val selected = SparkEntry.queries.filter { case (name, _) =>

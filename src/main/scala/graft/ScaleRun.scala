@@ -4,7 +4,7 @@ import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.{ContentGen, MetaGen, PipelineConfig, Validator}
 import scala.jdk.CollectionConverters._
@@ -181,11 +181,8 @@ object ScaleRun {
     // plan-stats bytes instead (r11 verdict item 6 — see docPhaseParts).
     val partsEnv = sys.env.get("SPARK_GRAFT_SCALE_PARTITIONS").map(_.toInt)
     val scaleParts = partsEnv.getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", scaleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder("graft-scale", 32)
+      .config("spark.sql.shuffle.partitions", scaleParts.toLong)
       .config("spark.driver.maxResultSize", "2g")
       // local mode shares one JVM: a multi-10s full GC must not read as a
       // dead executor (heartbeats are in-process here, nothing to detect)
@@ -208,7 +205,6 @@ object ScaleRun {
       // pages sit under the humongous threshold; sorters just chain more
       // of them
       .config("spark.buffer.pageSize", "8m")
-      .appName("graft-scale")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new Metrics
@@ -279,12 +275,11 @@ object ScaleRun {
         s"(SPARK_GRAFT_SCALE_PARTITIONS unset)")
       p
     }
-    def withDocParts[T](body: => T): T = {
-      val key = "spark.sql.shuffle.partitions"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, docPhaseParts.toString)
-      try body finally spark.conf.set(key, old)
-    }
+    // the doc-heavy phases run on a child session that holds this width;
+    // the shared session's conf is never changed
+    lazy val docSpark = Session.child(spark,
+      "spark.sql.shuffle.partitions" -> docPhaseParts.toString)
+    lazy val docCorpus = docSpark.read.parquet(docsPath)
     def rmDir(path: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -355,22 +350,22 @@ object ScaleRun {
     }
 
     // ---- 5. substring-level exact dedup over the full corpus ----
-    phase("substring") { withDocParts {
+    phase("substring") {
       // detect ONCE (checkpoint the small span frame), strip reuses it —
       // recomputing spans inside strip would pay the corpus-wide shingle
       // exchange twice (r7 measured the double-exchange shape at 788 s /
       // 57 GB spill; see SCALE.md finding 10)
-      val spans = graft.ops.Dedup.repeatedSpans(corpus, "doc_id", "text",
+      val spans = graft.ops.Dedup.repeatedSpans(docCorpus, "doc_id", "text",
         n = 10).localCheckpoint()
       val nSpans = spans.count()
-      val agg = graft.ops.Dedup.stripRepeatedSpans(corpus, "doc_id", "text",
+      val agg = graft.ops.Dedup.stripRepeatedSpans(docCorpus, "doc_id", "text",
           n = 10, precomputedSpans = Some(spans))
         .agg(sum("n_tokens"), sum("n_kept"),
           sum(when(col("n_kept") === 0, 1L).otherwise(0L))).collect()(0)
       spark.catalog.clearCache()
       s"$nSpans repeated spans; ${agg.getLong(0)} tokens -> " +
         s"${agg.getLong(1)} kept (${agg.getLong(2)} docs fully templated)"
-    } }
+    }
 
     // ---- 5b. incremental substring dedup, split per-stage (r11 verdict
     // item 3 — the r10 single row conflated the ONE-TIME base build with
@@ -404,10 +399,9 @@ object ScaleRun {
     val incPosPath = s"$outRoot/occ_positions.parquet"
     // shared across inc-probe (producer) and inc-advance (consumer) — the
     // serving lane's whole point is that the batch shingles once
-    var incPrepared: Option[(org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)] = None
-    phase("inc-build") { withDocParts {
-      val base = corpus.filter(col("doc_id") % 10 =!= 0)
+    var incPrepared: Option[(DataFrame, DataFrame)] = None
+    phase("inc-build") {
+      val base = docCorpus.filter(col("doc_id") % 10 =!= 0)
       rmDir(incStateDir)
       // deployment-true state: the base's counts land THROUGH the
       // bucketed store (batch 0) — shingle-bucketed zstd parquet
@@ -427,7 +421,7 @@ object ScaleRun {
       // inc-serve pruning rows below depend on
       val derived = graft.streaming.OccStateStore.deriveNumBuckets(
         2L * base.queryExecution.optimizedPlan.stats.sizeInBytes.toLong)
-      val store = graft.streaming.OccStateStore.open(spark, incStateDir,
+      val store = graft.streaming.OccStateStore.open(docSpark, incStateDir,
         numBuckets = derived)
       store.advance(
         graft.ops.Dedup.shingleOccurrenceTable(base, "text", n = 10), 0L)
@@ -437,10 +431,10 @@ object ScaleRun {
       spark.catalog.clearCache()
       s"$nKeys distinct shingles -> bucketed state v0 " +
         s"(${store.numBuckets} buckets, derived) + positions index, one-time"
-    } }
-    phase("inc-probe") { withDocParts {
-      val batch = corpus.filter(col("doc_id") % 10 === 0)
-      val store = graft.streaming.OccStateStore.open(spark, incStateDir)
+    }
+    phase("inc-probe") {
+      val batch = docCorpus.filter(col("doc_id") % 10 === 0)
+      val store = graft.streaming.OccStateStore.open(docSpark, incStateDir)
       // deployment-true serving shape (r11 verdict item 2): ONE shingle
       // pass into checkpoints, probe = the join tail only; the advance
       // phase below consumes the same counts. Bucket pruning is a no-op
@@ -455,12 +449,12 @@ object ScaleRun {
         store.readLatestBefore(1L), n = 10, broadcastSlim = false).count()
       s"$nSpans spans emitted for the 10% increment " +
         "(one shingle pass, checkpointed; base never re-shingles)"
-    } }
-    phase("inc-advance") { withDocParts {
+    }
+    phase("inc-advance") {
       val (_, counts) = incPrepared.getOrElse(throw new IllegalStateException(
         "inc-advance needs inc-probe's prepared counts — run both phases"))
       val nNew = counts.count()
-      val store = graft.streaming.OccStateStore.open(spark, incStateDir)
+      val store = graft.streaming.OccStateStore.open(docSpark, incStateDir)
       val t1 = System.nanoTime()
       // the probe's checkpointed counts advance the state — ZERO shingle
       // work in this phase (r11 re-ran shingleOccurrenceTable here: one
@@ -472,7 +466,7 @@ object ScaleRun {
       // by it; matching wall/delta bytes pin the independence claim
       val emptyDir = s"$outRoot/occ_state_empty"
       rmDir(emptyDir)
-      val empty = graft.streaming.OccStateStore.open(spark, emptyDir)
+      val empty = graft.streaming.OccStateStore.open(docSpark, emptyDir)
       val t2 = System.nanoTime()
       empty.advance(counts, 1L)
       val emptyS = (System.nanoTime() - t2) / 1e9
@@ -485,23 +479,23 @@ object ScaleRun {
         f"$fullS%.1f s vs onto an EMPTY store $emptyS%.1f s " +
         "(same delta written -> advance is O(batch), not O(|state|)); " +
         "counts reused from the probe's checkpoint, zero shingle work"
-    } }
-    phase("inc-sweep") { withDocParts {
-      val store = graft.streaming.OccStateStore.open(spark, incStateDir)
+    }
+    phase("inc-sweep") {
+      val store = graft.streaming.OccStateStore.open(docSpark, incStateDir)
       // delta form: prev state + the pure per-batch deltas since — the
       // crossed keys come from the slim-first shape (crossed ⊆ delta
       // keys, so prev slims to the delta's key set; r14), instead of
       // aggregating two full state snapshots (the pair form's first cut
       // measured 170.0 s / 21.5 GB shuffle here)
       val sweep = graft.ops.Dedup.retroactiveSpanSweepDelta(
-        spark.read.parquet(incPosPath), store.read(0L),
+        docSpark.read.parquet(incPosPath), store.read(0L),
         store.readDeltasBetween(0L, 1L), n = 10)
       val byDoc = sweep.agg(countDistinct("id"), count(lit(1))).collect()(0)
       spark.catalog.clearCache()
       s"${byDoc.getLong(1)} spans recomputed for ${byDoc.getLong(0)} " +
         "base docs the increment pushed over the threshold " +
         "(positions index probed; zero base re-shingling)"
-    } }
+    }
     // ---- 5c. streaming-cadence serving evidence (r11 weak mark): the
     // probe's state READ must scale with the batch, not the corpus. The
     // 10% inc-probe batch saturates every bucket (69M keys ≫ buckets), so
@@ -510,16 +504,16 @@ object ScaleRun {
     // OWN file set (deterministic — the SCALE.md noise protocol's
     // preferred columns), pruned vs full, with span identity asserted. ----
     val serveStateDir = s"$outRoot/occ_state_serve"
-    phase("inc-serve-layout") { withDocParts {
+    phase("inc-serve-layout") {
       // one-time layout migration, priced separately from serving: the
       // full state re-buckets into a store whose bucket count emulates
       // the AT-SCALE state:bucket ratio (deriveNumBuckets at 100 TB caps
       // at 2^20 — state/buckets ≈ 160 MB; here 4096 buckets put the
       // ~6 GB state at the same order, ~1.5 MB/bucket). ONE state-sized
       // exchange + write, never repeated per batch.
-      val store = graft.streaming.OccStateStore.open(spark, incStateDir)
+      val store = graft.streaming.OccStateStore.open(docSpark, incStateDir)
       rmDir(serveStateDir)
-      val serve = graft.streaming.OccStateStore.open(spark, serveStateDir,
+      val serve = graft.streaming.OccStateStore.open(docSpark, serveStateDir,
         numBuckets = 4096)
       // r13: this deliberate layout write OPTS IN to tier 3's sub-split
       // (plain deltas stay flat — an auto-split bulk advance paid a
@@ -533,15 +527,30 @@ object ScaleRun {
       serve.advance(full, 0L, subSplit = sub)
       s"state re-bucketed ${store.numBuckets} -> 4096 x sub$sub for the " +
         "micro-batch serving lane (one-time layout job, sorted sub-files)"
-    } }
-    phase("inc-serve") { withDocParts {
-      val serve = graft.streaming.OccStateStore.open(spark, serveStateDir)
+    }
+    phase("inc-serve") {
+      val serve = graft.streaming.OccStateStore.open(docSpark, serveStateDir)
       val hconf = spark.sparkContext.hadoopConfiguration
-      def bytesOf(files: Array[String]): Long = files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(hconf).getFileStatus(p).getLen
+      // what a scan of `dirs` reads: the length of every file under them,
+      // less hidden (`_`/`.`-prefixed) sidecars and checksums
+      def bytesUnder(dirs: Seq[String]): Long = dirs.map { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        val fs = p.getFileSystem(hconf)
+        val root = fs.makeQualified(p).toString
+        val it = fs.listFiles(p, true)
+        var n = 0L
+        while (it.hasNext) {
+          val f = it.next()
+          if (!f.getPath.toString.stripPrefix(root).split('/')
+              .exists(c => c.startsWith("_") || c.startsWith(".")))
+            n += f.getLen
+        }
+        n
       }.sum
-      import spark.implicits._
+      // the full read's bytes: every segment the served version stacks
+      val fullB = bytesUnder(serve.latestVersionBefore(1L).toSeq.flatMap(v =>
+        serve.readManifestStats(v).values.flatten.map(_.name).toSeq.distinct
+          .map(seg => s"$serveStateDir/segments/$seg")))
       // distributed-lane spans per leg size, captured for the
       // driver-local legs' identity check below
       val distSpans =
@@ -555,7 +564,7 @@ object ScaleRun {
       val legs = Seq(1, 5, 50, 1).map { nDocs =>
         // deterministic micro-batch: the first nDocs of the increment's
         // id order — the per-second/per-doc cadence shape
-        val batch = corpus.filter(col("doc_id") % 10 === 0)
+        val batch = docCorpus.filter(col("doc_id") % 10 === 0)
           .orderBy("doc_id").limit(nDocs)
           .select("doc_id", "text").persist()
         batch.count()
@@ -593,12 +602,11 @@ object ScaleRun {
         // bytes: whole-scanned paths by file size; the tier-4 side by
         // the snapshot above
         val sharpAdmitted = pr.rowFiltered.size
-        val prunedB = bytesOf(pr.frame.inputFiles) + sharpB + metaB
+        val prunedB = bytesUnder(pr.wholePaths) + sharpB + metaB
         val touched = pr.rowFiltered.map(fk =>
           "b=(\\d+)".r.findFirstMatchIn(fk.path).map(_.group(1).toInt))
           .flatten.toSet ++ pr.wholePaths.flatMap(
           "b=(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toInt)).toSet
-        val fullB = bytesOf(serve.readLatestBefore(1L).inputFiles)
         // identity: the pruned probe's spans == the full-scan probe's,
         // row-exact (micro-batch span sets are tiny — safe to collect)
         val fullSpans = graft.ops.Dedup.incrementalSpansPrepared(
@@ -625,7 +633,7 @@ object ScaleRun {
       // exception). Spans are checked row-identical to the distributed
       // legs above.
       val legsLocal = Seq(1, 5, 50, 1).map { nDocs =>
-        val batch = corpus.filter(col("doc_id") % 10 === 0)
+        val batch = docCorpus.filter(col("doc_id") % 10 === 0)
           .orderBy("doc_id").limit(nDocs)
           .select("doc_id", "text").persist()
         batch.count()
@@ -661,7 +669,7 @@ object ScaleRun {
       }
       spark.catalog.clearCache()
       (legs ++ Seq("|| driver-local:") ++ legsLocal).mkString("; ")
-    } }
+    }
 
     // ---- synthetic event stream shared by phases 6-8 (deterministic:
     // integer arithmetic on the id, no rand) ----

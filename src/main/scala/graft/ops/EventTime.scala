@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, Times
   * This reader accepts all shapes and always yields the long.
   *
   * Conversion rules (all exact, all session-timezone-independent):
-  *  - LONG (TIMESTAMP(NANOS) read under `nanosAsLong=true`): already nanos.
+  *  - LONG (TIMESTAMP(NANOS), inferred under `nanosAsLong=true`): already
+  *    nanos.
   *  - TIMESTAMP_NTZ (MICROS, `isAdjustedToUTC=0` — the current testdata):
   *    `timestampdiff(MICROSECOND, ntz-epoch, ts) * 1000`. NTZ−NTZ
   *    subtraction is pure wall-clock arithmetic, so no timezone enters;
@@ -48,21 +49,15 @@ object EventTime {
     }
 
   /** Read `$dir/events.parquet` with `ts` as epoch-nanos long, whatever the
-    * file's physical encoding. `nanosAsLong` is flipped only around the read
-    * (it is a no-op for MICROS files but required for NANOS ones); the
-    * caller's value, or its absence, is restored after. */
+    * file's physical encoding. `nanosAsLong` (a no-op for MICROS files,
+    * required for NANOS ones) matters only at schema inference: the schema
+    * is inferred in a child session that holds the flag, and the frame is
+    * read with that schema on the caller's own session, whose conf is
+    * never written. */
   def readNanos(spark: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    // getAll holds only the keys set on the session; getOption would
-    // report the default of an unset key
-    val before = spark.conf.getAll.get(key)
-    spark.conf.set(key, "true")
-    val raw =
-      try spark.read.parquet(s"$dir/events.parquet")
-      finally before match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    tsToNanos(raw)
+    val path = s"$dir/events.parquet"
+    val schema = graft.Session.child(spark,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true").read.parquet(path).schema
+    tsToNanos(spark.read.schema(schema).parquet(path))
   }
 }

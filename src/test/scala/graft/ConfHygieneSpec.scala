@@ -4,22 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Guards against new session-conf flips in main sources. A runtime
+/** Guards the session rules in main sources. A runtime
   * `conf.set`/`conf.unset` is a session-wide change that concurrent
   * queries in the same session see, so operators take their settings as
-  * arguments instead. The allowlist names the flips still standing, with
-  * their site counts; it must equal what the scan finds, so a new flip
-  * fails here and a removed one shrinks the list. */
+  * arguments, or run in a fresh child session. [[Session]] holds the one
+  * remaining write (`Session.child`, onto the session it has just made)
+  * and the one `SparkSession.builder`; both scans fail on any other site,
+  * so every main builds from the same defaults. */
 class ConfHygieneSpec extends AnyFunSuite {
 
+  /** The one file allowed to build sessions and write their conf. */
+  private val sessionFile = "graft/Session.scala"
+
   /** File (relative to `src/main/scala`) -> number of flip sites. */
-  private val allowed = Map(
-    // restores the caller's nanosAsLong around a read
-    "graft/ops/EventTime.scala" -> 3,
-    // the scale harness's doc-phase shuffle width
-    "graft/ScaleRun.scala" -> 2,
-    // the job-floor probe main's third session
-    "graft/BenchFloorProbe.scala" -> 1)
+  private val allowed = Map(sessionFile -> 1)
 
   /** `src` with comments blanked; string and char literals are kept, so
     * a `//` inside a string is not taken for a comment. */
@@ -63,7 +61,9 @@ class ConfHygieneSpec extends AnyFunSuite {
       Seq("a ", " b", "val u = \"hdfs://h/p\" ", "c.conf.set(\"k\", 'x')"))
   }
 
-  test("no session-conf flip in src/main outside the allowlist") {
+  /** Main source file (relative to `src/main/scala`) -> number of
+    * comment-stripped matches of `pattern`, for files with any. */
+  private def sitesOf(pattern: scala.util.matching.Regex): Map[String, Int] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"run from the repository root (no $root)")
@@ -72,15 +72,24 @@ class ConfHygieneSpec extends AnyFunSuite {
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
-    val sites = files.flatMap { f =>
+    files.flatMap { f =>
       val code = stripComments(new String(
         java.nio.file.Files.readAllBytes(f), "UTF-8"))
-      val n = "conf\\.(set|unset)\\(".r.findAllMatchIn(code).size
+      val n = pattern.findAllMatchIn(code).size
       if (n > 0) Some(root.relativize(f).toString.replace('\\', '/') -> n)
       else None
     }.toMap
-    assert(sites === allowed,
+  }
+
+  test("no session-conf flip in src/main outside the allowlist") {
+    assert(sitesOf("conf\\.(set|unset)\\(".r) === allowed,
       "session-conf flips differ from the allowlist: pass the setting to " +
-        "the operator instead, or shrink the allowlist when a flip goes")
+        "the operator, or run the query in a Session.child")
+  }
+
+  test("no SparkSession.builder in src/main outside Session") {
+    assert(sitesOf("SparkSession\\s*\\.\\s*builder\\b".r).keySet ===
+      Set(sessionFile),
+      "build sessions through Session.builder, which holds the defaults")
   }
 }

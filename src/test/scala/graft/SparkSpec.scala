@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup dominates test wall-time otherwise). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
+    val s = Session.builder("graft-test", 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -134,6 +134,49 @@ class EventTimeSpec extends SparkSpec {
     assert(!spark.conf.getAll.contains(key))
   }
 
+  test("a real TIMESTAMP(NANOS) file reads exact nanos, caller conf untouched") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // sub-microsecond digits, which a MICROS read would drop
+    val nanosA = 1704067201500000123L
+    val nanosB = 1704070000123456789L
+    val dir = Files.createTempDirectory("evnanos").toFile
+    dir.deleteOnExit()
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(
+        s"$dir/events.parquet/part-00000.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try {
+      val rows = new SimpleGroupFactory(schema)
+      writer.write(rows.newGroup().append("event_id", 0L).append("ts", nanosA))
+      writer.write(rows.newGroup().append("event_id", 1L).append("ts", nanosB))
+    } finally writer.close()
+
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val tags = spark.range(2).select(col("id").as("event_id"),
+      concat(lit("tag"), col("id").cast("string")).as("tag"))
+    for (callerValue <- Seq(None, Some("false"), Some("true"))) {
+      callerValue.foreach(spark.conf.set(key, _))
+      try {
+        val before = spark.conf.getAll
+        val ev = EventTime.readNanos(spark, dir.toString)
+        assert(ev.sparkSession eq spark, s"caller $callerValue")
+        assert(ev.schema("ts").dataType == LongType, s"caller $callerValue")
+        assert(nanosOf(ev) == Seq(nanosA, nanosB), s"caller $callerValue")
+        val joined = ev.join(tags, "event_id").orderBy("event_id")
+          .select("event_id", "ts", "tag").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+        assert(joined == Seq((0L, nanosA, "tag0"), (1L, nanosB, "tag1")),
+          s"caller $callerValue")
+        assert(spark.conf.getAll == before, s"caller $callerValue")
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("real testdata events read as longs in nanos range") {
     val ev = EventTime.readNanos(spark, "/root/testdata/sf0.001")
     assert(ev.schema("ts").dataType == LongType)
